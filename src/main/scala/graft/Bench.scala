@@ -139,15 +139,29 @@ object Bench {
     // durable per-round record and the tail-re-measure baseline with
     // 8-core times (round-13 verdict item 2) — now each core count has
     // its own baseline and its own durable file.
+    // Every artifact also stamps its "cpus" (the session's effective
+    // parallelism, so a non-numeric SPARK_GRAFT_CPUS still stamps a
+    // number); an explicit SPARK_GRAFT_BENCH_PREV naming an artifact
+    // from another core count (or one too old to carry the stamp) is
+    // not a baseline for this run.
     val cpuSuffix = if (cpus == "32") "" else s"_c$cpus"
+    val cores = spark.sparkContext.defaultParallelism
     val prevTimes: Map[String, Double] = {
-      val p = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
-        s"bench/BENCH_DRIVER_LAST$cpuSuffix.json")
+      val explicit = sys.env.get("SPARK_GRAFT_BENCH_PREV")
+      val p = explicit.getOrElse(s"bench/BENCH_DRIVER_LAST$cpuSuffix.json")
       try {
         val s = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(p)), "UTF-8")
-        val re = """"(q[^"]+)":(-?\d+(?:\.\d+)?(?:[eE]-?\d+)?)""".r
-        re.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toDouble).toMap
+        val prevCpus = """"cpus":(\d+)""".r.findFirstMatchIn(s).map(_.group(1))
+        if (explicit.isDefined && !prevCpus.contains(cores.toString)) {
+          System.err.println(s"[bench] WARNING: $p was measured at " +
+            s"cpus=${prevCpus.getOrElse("unknown")}, this run at cpus=$cores - " +
+            "no tail re-measure baseline")
+          Map.empty
+        } else {
+          val re = """"(q[^"]+)":(-?\d+(?:\.\d+)?(?:[eE]-?\d+)?)""".r
+          re.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toDouble).toMap
+        }
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
     }
     def tailSuspect(n: String, t: Double): Boolean =
@@ -239,7 +253,7 @@ object Bench {
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$effTotal,"unit":"sec","solo_total":$total,"queries":$qs,"sf":"$sfDir"""" +
       s""","shared":$sharedJson""" +
-      s""","bench_runs":$benchRuns,"cached_kb":$cachedKb""" +
+      s""","bench_runs":$benchRuns,"cpus":$cores,"cached_kb":$cachedKb""" +
       s""","remeasured":$remeasuredJson""" +
       f""","preflight_load":$preLoad%.2f,"lock_wait_sec":$lockWaitSec%.1f,"contaminated":$contaminated}"""
     println(line)

@@ -4,20 +4,24 @@ import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /**
- * Per-job breakdown of one query (or shared-pair group): runs it through
+ * Per-job breakdown of queries (or shared-pair groups): runs each through
  * the noop sink like [[Bench]], with a listener that records every Spark
- * job's wall time, stage/task counts and call site. The "where do the
- * seconds go" companion to [[Time]] — a 13 s query that is 14 jobs of
- * 0.9 s is an iteration-overhead problem, not a data-volume problem, and
- * the call sites say which operator line each job belongs to.
+ * job's wall time, stage/task counts and call site, and prints each
+ * rep's total. The "where do the seconds go" tool — a 13 s query that is
+ * 14 jobs of 0.9 s is an iteration-overhead problem, not a data-volume
+ * problem, and the call sites say which operator line each job belongs
+ * to. A connected-components query also prints its loop telemetry
+ * (rounds, initial edges, contracted and frozen sizes per round).
  *
- * Usage: runMain graft.Profile <query|group> [reps]   (reps default 2 —
- * read the LAST rep; the first pays page-cache and JIT warm-up)
+ * Usage: runMain graft.Profile <query|group>[,<query|group>...] [reps]
+ * (reps default 2 — read the LAST rep; the first pays page-cache and JIT
+ * warm-up)
  */
 object Profile {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: runMain graft.Profile <query|group> [reps]")
-    val name = args(0)
+    require(args.nonEmpty,
+      "usage: runMain graft.Profile <query|group>[,<query|group>...] [reps]")
+    val names = args(0).split(",").toSeq.filter(_.nonEmpty)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), Some(sfDir))
@@ -56,18 +60,19 @@ object Profile {
       }
     })
 
-    def run(): Unit =
+    def run(name: String): Unit =
       if (SparkEntry.queries.contains(name))
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
       else SparkEntry.sharedPairs(name)(spark, sfDir)
         .foreach(_.write.format("noop").mode("overwrite").save())
 
-    (1 to reps).foreach { i =>
+    for (name <- names; i <- 1 to reps) {
       jobs.synchronized(jobs.clear())
       stages.synchronized(stages.clear())
+      operators.Dedup.lastCcRounds = -1
       val t0 = System.nanoTime()
-      run()
+      run(name)
       val sec = (System.nanoTime() - t0) / 1e9
       Caches.releaseAll(spark)
       Thread.sleep(500) // drain the listener bus before reading
@@ -75,6 +80,12 @@ object Profile {
       val jobSum = js.map(j => (j.end - j.start) / 1000.0).sum
       println(f"[profile] $name rep $i: total $sec%.3f s, " +
         f"jobs=${js.size} (sum $jobSum%.3f s, driver gap ${sec - jobSum}%.3f s)")
+      if (operators.Dedup.lastCcRounds >= 0)
+        println(s"[profile] $name cc rounds=${operators.Dedup.lastCcRounds} " +
+          s"edges0=${operators.Dedup.lastCcInitialEdges} " +
+          s"contracted=${operators.Dedup.lastCcEdgeCounts.mkString(",")} " +
+          s"frozen=${operators.Dedup.lastCcFrozenCounts.mkString(",")} " +
+          s"resolveRounds=${operators.Dedup.lastCcResolveRounds}")
       js.foreach { j =>
         println(f"[profile]   job ${j.id}%3d ${(j.end - j.start) / 1000.0}%8.3f s " +
           f"stages=${j.stages}%2d tasks=${j.tasks}%5d  ${j.desc.take(100)}")

@@ -1,12 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.Gates
 
 /**
  * Shared local-session builder for the driver-contract mains
- * (Verify / Bench / Time / Explain): one place for the master, shuffle
+ * (Verify / Bench / Profile / Explain): one place for the master, shuffle
  * parallelism, AQE, UTC, UI, and catalog-required confs — so a
- * single-query timing (Time) always measures exactly the session Bench
+ * single-query profile (Profile) always measures exactly the session Bench
  * benchmarks, and a new required conf lands everywhere at once.
  */
 object Sessions {
@@ -27,16 +28,13 @@ object Sessions {
    * Pair-generating stages (shingle/band explodes) amplify input ~10x,
    * so 8 MB on disk ~ 64 MB post-expansion — Spark's advisory partition
    * size. Bounded below by `cpus` (never fewer initial partitions than
-   * cores) and above by 16x cores (a single box cannot usefully run
-   * wider; a real cluster would scale the bound by executor count).
+   * cores) and above by [[Gates.width]]'s 16x-cores cap.
    * At sf0.1 (~15 MB) this is exactly `cpus` — the pre-widening plan —
    * and at sf10 (~1.5 GB) it is ~192, inside the envelope that fixed
-   * the aborts. `SPARK_GRAFT_INIT_PARTITIONS` overrides for A/B work.
+   * the aborts.
    */
-  def initialPartitions(cpus: Int, inputBytes: Long): Int = {
-    val byData = (inputBytes / (8L << 20)).toInt
-    math.min(math.max(cpus, byData), cpus * 16)
-  }
+  def initialPartitions(cpus: Int, inputBytes: Long): Int =
+    Gates.width(cpus, inputBytes, 8L << 20, cpus)
 
   /** Total on-disk bytes under a data directory (0 for none/missing). */
   def dirBytes(dir: String): Long = {
@@ -46,6 +44,13 @@ object Sessions {
     val f = new java.io.File(dir)
     if (f.exists()) walk(f) else 0L
   }
+
+  /** Static shuffle width for a NARROW loop (see below): one partition
+   *  per ~250k narrow loop rows, floored at 4 (a tiny loop frame needs
+   *  no more; the session default would pay ~cores tasks per exchange
+   *  per round). */
+  def loopShufflePartitions(spark: SparkSession, rows: Long): Int =
+    Gates.width(spark.sparkContext.defaultParallelism, rows, 250000L, 4)
 
   /**
    * Scoped AQE initial-partition override for ITERATIVE operators.
@@ -59,29 +64,12 @@ object Sessions {
    * 4-round loop when the ceiling is dropped to cores. This helper
    * sizes the ceiling by the LOOP frame instead: one initial partition
    * per ~1M loop rows (loop rows are narrow — two longs — so 1M rows
-   * ≈ 16-30 MB, Spark's advisory size), bounded [cores, 16× cores]
-   * like the input rule. The conf is restored on exit; everything the
-   * loop materializes (localCheckpoints) runs under the override, and
+   * ≈ 16-30 MB, Spark's advisory size), floored at cores like the input
+   * rule. The conf is restored on exit; everything the loop
+   * materializes (localCheckpoints) runs under the override, and
    * the returned frame is a checkpoint scan that plans no shuffles, so
    * the restore cannot race the result.
    *
-   * Session-conf scoping caveat: Spark has no per-plan conf, so a
-   * CONCURRENT planner in the same session would see the override for
-   * the duration of `body` — the driver mains (Verify/Bench/TimeOne)
-   * are serial by construction.
-   */
-  def withLoopPartitions[T](spark: SparkSession, rows: Long)(body: => T): T =
-    withLoopPartitions(spark, rows, narrow = false)(body)
-
-  /** Static shuffle width for a NARROW loop (see below): one partition
-   *  per ~250k narrow loop rows, floored at 4 (a tiny loop frame needs
-   *  no more; the session default would pay ~cores tasks per exchange
-   *  per round), capped at 16× cores like every width rule here. */
-  def loopShufflePartitions(spark: SparkSession, rows: Long): Int =
-    math.min(math.max(4L, rows / 250000L),
-      spark.sparkContext.defaultParallelism * 16L).toInt
-
-  /**
    * `narrow = true` additionally pins the loop's execution regime for
    * SMALL iteration frames (the caller gates on its measured loop row
    * count): adaptive execution OFF and a static shuffle width from
@@ -94,24 +82,25 @@ object Sessions {
    * machinery earns its planning cost. Callers must pair this with
    * explicit join-strategy hints: checkpoint-scan stats are unknown to
    * the static planner, which would otherwise pick sort-merge for
-   * every loop join. `SPARK_GRAFT_LOOP_NARROW_OFF` disables just the
-   * narrow regime for A/B runs.
+   * every loop join. Callers take the AQE regime instead when their
+   * `*.loopAqeOffEdges` gate is set to 0.
+   *
+   * Session-conf scoping caveat: Spark has no per-plan conf, so a
+   * CONCURRENT planner in the same session would see the override for
+   * the duration of `body` — the driver mains (Verify/Bench/Profile)
+   * are serial by construction.
    */
   def withLoopPartitions[T](spark: SparkSession, rows: Long, narrow: Boolean)(body: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     val cores = spark.sparkContext.defaultParallelism
-    val want = math.min(math.max(cores.toLong, rows / 1000000L), cores * 16L)
-    // A/B escape hatch (like SPARK_GRAFT_INIT_PARTITIONS for the input
-    // rule): run the loop under the caller's unmodified ceiling
-    if (sys.env.contains("SPARK_GRAFT_LOOP_PARTS_OFF")) return body
-    val doNarrow = narrow && !sys.env.contains("SPARK_GRAFT_LOOP_NARROW_OFF")
+    val want = Gates.width(cores, rows, 1000000L, cores)
     val aqeKey = "spark.sql.adaptive.enabled"
     val spKey = "spark.sql.shuffle.partitions"
     val prev = spark.conf.getOption(key)
     val prevAqe = spark.conf.getOption(aqeKey)
     val prevSp = spark.conf.getOption(spKey)
     spark.conf.set(key, want.toString)
-    if (doNarrow) {
+    if (narrow) {
       spark.conf.set(aqeKey, "false")
       spark.conf.set(spKey, loopShufflePartitions(spark, rows).toString)
     }
@@ -122,14 +111,13 @@ object Sessions {
     try body
     finally {
       restore(key, prev)
-      if (doNarrow) { restore(aqeKey, prevAqe); restore(spKey, prevSp) }
+      if (narrow) { restore(aqeKey, prevAqe); restore(spKey, prevSp) }
     }
   }
 
   def local(cpus: String, dataDir: Option[String] = None): SparkSession = {
     val n = cpus.toIntOption.getOrElse(32)
-    val init = sys.env.get("SPARK_GRAFT_INIT_PARTITIONS").flatMap(_.toIntOption)
-      .getOrElse(initialPartitions(n, dataDir.map(dirBytes).getOrElse(0L)))
+    val init = initialPartitions(n, dataDir.map(dirBytes).getOrElse(0L))
     graft.sources.Tables.configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

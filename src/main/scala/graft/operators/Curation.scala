@@ -1052,10 +1052,11 @@ object Curation {
    *
    * Scale: two scoring paths, gated on the measured grid size
    * \|vocab\| × \|classes\| (one bounded agg-to-literal probe over the
-   * cached doc-token frame; `graft.nb.gridCells` overrides the 1M-cell
-   * default). While the grid fits — every natural-language corpus
-   * whose tokenizer has a bounded vocabulary — the dense (class,
-   * token) term grid (seen-or-fallback, precomputed) is BROADCAST and
+   * cached doc-token frame; `graft.nb.gridCells` or
+   * `SPARK_GRAFT_NB_GRID_CELLS` overrides the 1M-cell default). While
+   * the grid fits — every natural-language corpus whose tokenizer has
+   * a bounded vocabulary — the dense (class, token) term grid
+   * (seen-or-fallback, precomputed) is BROADCAST and
    * the doc-token frame, pre-partitioned by DOC id, fans out its
    * \|classes\| rows per token INSIDE the broadcast join: the
    * per-(doc, class) aggregation and the argmax window both reuse the
@@ -1134,11 +1135,8 @@ object Curation {
     // subtree of stage orchestration). One task per ~250k probed cells,
     // clamped [1, 16× cores] — scale-adaptive, trivial at bench scale,
     // full-width once the vocabulary actually grows.
-    val countsW = {
-      val cores = docs.sparkSession.sparkContext.defaultParallelism
-      counts.coalesce(
-        math.min(math.max(1L, gridCells / 250000L), cores * 16L).toInt)
-    }
+    val countsW = counts.coalesce(Gates.width(
+      docs.sparkSession.sparkContext.defaultParallelism, gridCells, 250000L, 1))
     val classTotals = countsW.groupBy(col("__gcls")).agg(sum(col("__gc")).as("__gT"))
     val docsPerClass = docs.groupBy(col(classCol).as("__gcls"))
       .agg(count(lit(1)).as("__gnc"))
@@ -1161,9 +1159,7 @@ object Curation {
     val fallback = classes.select(col("__gcls"),
       absorb(log(lit(1L).cast("double") /
         (col("__gT") + col("__gV")).cast("double"))).as("__gmiss"))
-    val gridBar = docs.sparkSession.conf.getOption("graft.nb.gridCells")
-      .flatMap(_.toLongOption).getOrElse(1000000L)
-    val scored = (if (gridCells <= gridBar) {
+    val scored = (if (gridCells <= Gates.read(Gates.NbGridCells, docs.sparkSession)) {
       // dense path: the full (class, token) term grid — seen where
       // trained, the class fallback elsewhere — broadcast against the
       // id-partitioned doc-token frame. The per-(doc, token) coalesce

@@ -337,12 +337,9 @@ object Dedup {
    * SPARK_GRAFT_SSJOIN_HASH_ROWS overrides). One definition so a
    * future bar change cannot silently diverge the two verify stages.
    */
-  private def ssjoinHashGate(df: DataFrame): Boolean = {
-    val bar = df.sparkSession.conf.getOption("graft.ssjoin.hashRows")
-      .orElse(sys.env.get("SPARK_GRAFT_SSJOIN_HASH_ROWS"))
-      .flatMap(_.toLongOption).getOrElse(400000L)
-    RangeRank.estLeafRows(df) >= BigInt(bar)
-  }
+  private def ssjoinHashGate(df: DataFrame): Boolean =
+    RangeRank.estLeafRows(df) >=
+      BigInt(Gates.read(Gates.SsjoinHashRows, df.sparkSession))
 
   def setSimilarityJoin(
       df: DataFrame, idCol: String, tokensCol: Column,
@@ -350,10 +347,14 @@ object Dedup {
     require(num > 0 && den > 0 && num <= den,
       "threshold num/den must sit in (0, 1]")
     // the shingle/tokenize expression is the per-row hot cost: explode
-    // ONCE; the vocabulary aggregate and the id join back both shuffle
-    // the exploded frame by token, so AQE plans the second as a
-    // ReusedExchange — the tokenizer still runs once, unpersisted
-    // (a persist of the tokenized frame was tried and reverted: it
+    // ONCE; on the small-corpus ranked path the vocabulary aggregate
+    // and the id join back both shuffle the exploded frame by token in
+    // one action, so AQE plans the second as a ReusedExchange — the
+    // tokenizer runs once, unpersisted. The bigCorpus path below pays a
+    // second tokenizer pass: orderIsoId materializes the vocabulary in
+    // its own action, and exchange reuse does not span actions (an
+    // accepted trade against the one-task rank stage it removes at
+    // sf10). (A persist of the tokenized frame was tried and reverted: it
     // halved this query but poisoned every LATER query in the same
     // session with order-dependent 2-5x slowdowns — plan-fragment
     // caches are session state).
@@ -381,9 +382,10 @@ object Dedup {
       .select(col("__gt"), col("__gtid"))
     // shuffle_hash (not broadcast): with both sides hashed on __gt the
     // exploded frame's exchange is the SAME subplan the vocabulary
-    // aggregate shuffled, so AQE plans it as a ReusedExchange and the
-    // tokenizer runs ONCE — a broadcast of the tiny vocab would skip
-    // the toks exchange and re-evaluate the explode per branch
+    // aggregate shuffled, so on the ranked path AQE plans it as a
+    // ReusedExchange and the tokenizer runs ONCE — a broadcast of the
+    // tiny vocab would skip the toks exchange and re-evaluate the
+    // explode per branch
     var ordered = toks.join(rankedVocab.hint("shuffle_hash"), "__gt")
       .groupBy(col("__gid"))
       .agg(sort_array(collect_list(col("__gtid"))).as("__gsorted"))
@@ -659,9 +661,7 @@ object Dedup {
       val r = df.agg(sum(col("label").cast("decimal(38,0)"))).head()
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
     }
-    val contractMin: Long = spark.conf.getOption("graft.cc.contractMinEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_CONTRACT_MIN_EDGES"))
-      .flatMap(_.toLongOption).getOrElse(1000000L)
+    val contractMin: Long = Gates.read(Gates.CcContractMinEdges, spark)
     // NARROW-LOOP regime (round-14): below `graft.cc.loopAqeOffEdges`
     // directed edges (default 32 M, env SPARK_GRAFT_CC_LOOP_AQE_OFF_EDGES)
     // the loop runs with adaptive execution OFF at a static
@@ -675,12 +675,9 @@ object Dedup {
     // stage-materialization jobs of 10-100 ms orchestration each, not
     // data. Above the bar everything keeps the round-13 AQE path
     // (runtime skew handling matters once loop frames are cluster-
-    // sized); the bar is conf/env-overridable for A/B runs.
-    val aqeOffBar: Long = spark.conf.getOption("graft.cc.loopAqeOffEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_LOOP_AQE_OFF_EDGES"))
-      .flatMap(_.toLongOption).getOrElse(32000000L)
-    val smallLoop = edgeCount0 < aqeOffBar &&
-      !sys.env.contains("SPARK_GRAFT_LOOP_NARROW_OFF")
+    // sized); the bar is conf/env-overridable for A/B runs (0 forces
+    // the AQE path).
+    val smallLoop = edgeCount0 < Gates.read(Gates.CcLoopAqeOffEdges, spark)
     def hinted(df: DataFrame): DataFrame =
       if (smallLoop) df.hint("shuffle_hash") else df
     var iter = 0
@@ -1138,11 +1135,15 @@ object Dedup {
       records: DataFrame, labels: DataFrame, id: String,
       valueCols: Seq[String], labelId: String = "id"): DataFrame = {
     require(valueCols.nonEmpty, "goldenRecord needs value columns")
-    // Broadcast the labels side while `records` is honestly small (the
-    // leaf-row estimate, not the join-inflated byte one): labels is
+    // Broadcast the labels side while both frames are honestly small
+    // (the leaf-row estimate, not the join-inflated byte one). A labels
+    // frame is gated on its own estimate, so an unrelated or larger one
+    // is never broadcast unconditionally — except a checkpoint scan (a
+    // connectedComponents/dedupClusters result): its stats are the
+    // origin plan's join-inflated ones (q192's 403-row label frame
+    // estimates 2.95 M rows at sf0.01), and such a frame is
     // record-bounded by the survivorship contract (one row per pair-
-    // graph vertex, vertices drawn from the record ids), so a small
-    // records frame means a broadcastable labels frame. This removes
+    // graph vertex, vertices drawn from the record ids). This removes
     // the sort-merge join's two exchanges AND keeps `labeled` on the
     // records scan's (few-partition) layout — the persisted frame the
     // base + per-column election branches re-read was previously laid
@@ -1152,7 +1153,10 @@ object Dedup {
     // Past the row bar the planner keeps its own (exchange) pick.
     val labelsSel = labels.select(col(labelId).as("__gid"), col("cluster"))
     val labelsSide =
-      if (!RangeRank.manyLeafRows(records)) broadcast(labelsSel) else labelsSel
+      if (!RangeRank.manyLeafRows(records) &&
+          (RangeRank.checkpointScan(labels) || !RangeRank.manyLeafRows(labels)))
+        broadcast(labelsSel)
+      else labelsSel
     val labeled = records
       .join(labelsSide, records(id) === col("__gid"), "left")
       .withColumn("cluster", coalesce(col("cluster"), col(id)))

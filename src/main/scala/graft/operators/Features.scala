@@ -1262,7 +1262,7 @@ object Features {
     // change the result. Clamped to the [cores, 16× cores] envelope;
     // an already-wider frame keeps its width.
     val cores = sel.sparkSession.sparkContext.defaultParallelism
-    val parts = math.min(math.max(cores, sel.rdd.getNumPartitions), cores * 16)
+    val parts = Gates.width(cores, sel.rdd.getNumPartitions, 1L, cores)
     val data = sel.repartition(parts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var wdf = data.sparkSession.range(1)

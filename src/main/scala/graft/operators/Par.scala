@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, LeafNode, Union}
 
 /**
  * Deliberate parallelism for COMPUTE-heavy stages over BYTE-light
@@ -23,37 +22,19 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, LeafNode, Union
  * column (never round-robin where a retry could reassign rows,
  * SPARK-38388), sized by the leaf-stats row estimate: `rowsPerPart`
  * input rows per task calibrated to the operator's per-row cost,
- * clamped to the [cores, 16× cores] envelope
- * ([[graft.Sessions.initialPartitions]]'s bound). The shuffle it adds
- * moves only the projected input rows once — orders of magnitude below
- * the work it parallelizes; at scale the estimate grows the width up
- * to the cap instead of pinning a local-mode constant.
+ * clamped to the [cores, 16× cores] envelope ([[Gates.width]]). The
+ * shuffle it adds moves only the projected input rows once — orders of
+ * magnitude below the work it parallelizes; at scale the estimate grows
+ * the width up to the cap instead of pinning a local-mode constant.
  */
 object Par {
 
-  /** Leaf-anchored row estimate (the RangeRank gate recipe): exact
-   *  rowCount when the plan carries one, else the LARGEST leaf through
-   *  joins and the SUM through unions — a join's own sizeInBytes
-   *  multiplies its children, so leaves are the only honest size. */
-  def leafRows(df: DataFrame): BigInt = {
-    def rec(p: LogicalPlan): BigInt = p match {
-      case l: LeafNode => l.stats.rowCount.getOrElse {
-        val w = math.max(1, l.schema.map(_.dataType.defaultSize).sum)
-        l.stats.sizeInBytes / w
-      }
-      case u: Union => u.children.map(rec).sum
-      case _ if p.children.isEmpty => BigInt(0)
-      case _ => p.children.map(rec).max
-    }
-    val plan = df.queryExecution.optimizedPlan
-    plan.stats.rowCount.getOrElse(rec(plan))
-  }
-
   /** Partition count for a compute-heavy stage over `df`: one task per
-   *  `rowsPerPart` estimated input rows, clamped to [cores, 16×cores]. */
+   *  `rowsPerPart` rows of [[RangeRank.estLeafRows]], clamped to
+   *  [cores, 16×cores]. */
   def widthFor(df: DataFrame, rowsPerPart: Long): Int = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    (BigInt(cores) max (leafRows(df) / rowsPerPart) min BigInt(cores * 16L)).toInt
+    Gates.width(cores, RangeRank.estLeafRows(df), rowsPerPart, cores)
   }
 
   /** Hash-repartition `df` on `key` to [[widthFor]] partitions so the

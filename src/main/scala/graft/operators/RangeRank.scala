@@ -60,28 +60,9 @@ object RangeRank {
       peerMaxAs: Option[String] = None,
       denseAs: Option[String] = None)
 
-  private val ThresholdConf = "graft.rank.rangeBytes"
-  private val RowsConf = "graft.rank.rangeRows"
-  private val MaxBucketsConf = "graft.rank.maxBuckets"
-  private val DefaultThreshold: Long = 256L << 20
-  // Half the byte gate's implied cutover at a typical ~64 B row width
-  // (256 MiB / 64 B = 4 M): estRows under-counts actual rows by the
-  // scan's compression ratio (measured 3-4x on snappy parquet — sf10
-  // events estimate 2.46 M for 10 M actual rows), so the nominal
-  // threshold sits lower to fire at the intended ~8 M true rows. At
-  // sf1 the largest narrow-frame estimate is 1.84 M (under), at sf0.1
-  // 0.19 M — bench-scale plans are untouched by the rows clause.
-  private val DefaultRowThreshold: Long = 2L << 20
-
-  private def thresholdBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(ThresholdConf)
-      .orElse(sys.env.get("SPARK_GRAFT_RANK_RANGE_BYTES"))
-      .flatMap(_.toLongOption).getOrElse(DefaultThreshold)
-
-  private def thresholdRows(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(RowsConf)
-      .orElse(sys.env.get("SPARK_GRAFT_RANK_RANGE_ROWS"))
-      .flatMap(_.toLongOption).getOrElse(DefaultRowThreshold)
+  // Cap on the probe's boundary count. The bMax formula below only
+  // reaches it at 128 shuffle partitions (128 × 8 = 1024).
+  private val MaxBuckets = 1024
 
   /** Row estimate from the same Catalyst stats the byte gate reads:
    *  exact rowCount when the plan carries one, else a leaf-anchored
@@ -97,8 +78,9 @@ object RangeRank {
    *  still fires the gate on its true combined volume. Parquet leaves
    *  report COMPRESSED bytes, so this still under-counts true rows by
    *  the compression ratio — a conservative floor, never an
-   *  over-fire. */
-  private def estRows(df: DataFrame): BigInt = {
+   *  over-fire. Also the row estimate behind [[Par.widthFor]] and the
+   *  SSJoin-family row gate. */
+  private[operators] def estLeafRows(df: DataFrame): BigInt = {
     val plan = df.queryExecution.optimizedPlan
     plan.stats.rowCount.getOrElse(estRowsOf(plan))
   }
@@ -143,7 +125,8 @@ object RangeRank {
    *  above, not the rank path — fixed by groupQuantiles' shrink
    *  probe, not by suppressing the gate. */
   def useBucketed(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(thresholdBytes(df)) ||
+    df.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      BigInt(Gates.read(Gates.RankRangeBytes, df.sparkSession)) ||
       manyLeafRows(df)
 
   /** The rows clause alone: does the honest (leaf-scan) row estimate
@@ -154,34 +137,31 @@ object RangeRank {
    *  harmless false-fire for choosing a plan SHAPE on a tiny frame but
    *  a real regression if it triggers materialization work. */
   private[operators] def manyLeafRows(df: DataFrame): Boolean =
-    estRows(df) >= BigInt(thresholdRows(df))
-
-  /** The raw leaf-anchored row estimate, for consumers whose "big"
-   *  bar sits elsewhere than the rank cutover (e.g. the SSJoin verify
-   *  stage, whose intermediate pair volume is a large multiple of the
-   *  input rows — it saturates a box long before a window sort
-   *  would). */
-  private[operators] def estLeafRows(df: DataFrame): BigInt = estRows(df)
+    estLeafRows(df) >= BigInt(Gates.read(Gates.RankRangeRows, df.sparkSession))
 
   /** Is this frame just (Project|Filter)* over one scan? Replaying it
    *  costs one columnar read — cheaper than writing it to cache — so
    *  multi-consumption guards (persist-before-probe) skip it. Anything
    *  with a join/aggregate/window upstream replays the whole pipeline
    *  per consumption and must be materialized instead. */
-  private[operators] def scanShaped(df: DataFrame): Boolean = {
+  private[operators] def scanShaped(df: DataFrame): Boolean = overLeaf(df, _ => true)
+
+  /** Is this frame just (Project|Filter)* over a checkpointed RDD? Its
+   *  leaf stats are then the origin plan's, not the checkpoint's. */
+  private[operators] def checkpointScan(df: DataFrame): Boolean =
+    overLeaf(df, _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+
+  private def overLeaf(df: DataFrame,
+      leaf: org.apache.spark.sql.catalyst.plans.logical.LeafNode => Boolean): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project}
     def walk(p: LogicalPlan): Boolean = p match {
-      case _: LeafNode => true
+      case l: LeafNode => leaf(l)
       case pr: Project => walk(pr.child)
       case f: Filter => walk(f.child)
       case _ => false
     }
     walk(df.queryExecution.optimizedPlan)
   }
-
-  private def maxBuckets(df: DataFrame): Int =
-    df.sparkSession.conf.getOption(MaxBucketsConf)
-      .flatMap(_.toIntOption).getOrElse(1024)
 
   /**
    * ANSI NTILE recomposed from a global row number and the per-key row
@@ -245,7 +225,7 @@ object RangeRank {
     // once the keys alone are parallel enough.
     val spark = df.sparkSession
     val parallelism = spark.sessionState.conf.numShufflePartitions
-    val bMax = math.min(maxBuckets(df), math.max(parallelism * 8, 16))
+    val bMax = math.min(MaxBuckets, math.max(parallelism * 8, 16))
     val kExpr =
       if (keys.isEmpty) lit(1L)
       else approx_count_distinct(struct(keys.map(col): _*))

@@ -730,7 +730,7 @@ object Relational {
     // ~1.2 s deep-plan planning gap at the one action (profiled at
     // sf0.1: 31 jobs for 5 iterations). Below
     // `graft.pagerank.loopAqeOffEdges` normalized edges (default 32 M;
-    // same A/B escapes as CC's) each iteration is ONE statically
+    // 0 forces the AQE path) each iteration is ONE statically
     // planned checkpoint job; the norm frame is re-laid hash(src) at
     // the loop width once so the per-iteration join streams it with no
     // exchange, and the vertex-sized sums side carries an explicit
@@ -739,11 +739,7 @@ object Relational {
     // materializes the same expression tree, and the per-target sums
     // are order-free DECIMAL(38,30) string images.
     val edgeRows = norm0.count()
-    val aqeOffBar: Long = spark.conf.getOption("graft.pagerank.loopAqeOffEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_PAGERANK_LOOP_AQE_OFF_EDGES"))
-      .flatMap(_.toLongOption).getOrElse(32000000L)
-    val narrow = edgeRows < aqeOffBar &&
-      !sys.env.contains("SPARK_GRAFT_LOOP_NARROW_OFF")
+    val narrow = edgeRows < Gates.read(Gates.PagerankLoopAqeOffEdges, spark)
     def hinted(dfh: DataFrame): DataFrame =
       if (narrow) dfh.hint("shuffle_hash") else dfh
     graft.Sessions.withLoopPartitions(spark, math.max(1L, edgeRows), narrow) {

@@ -779,15 +779,14 @@ object Similarity {
     val dDims = meansRows.length.toLong
     val nVecs = if (meansRows.isEmpty) 0L else meansRows.map(_.getLong(2)).max
     // term-stage parallelism: ~1M generated terms per task, clamped to
-    // [cores, 16x cores] (the initialPartitions envelope). The explicit
+    // [cores, 16x cores] ([[Gates.width]]). The explicit
     // keyed repartition is deliberate: the n-row vector frame is tiny
     // in BYTES (one small parquet split at bench scale, one AQE-
     // coalesced partition post-shuffle) but each row explodes into
     // d²/2 decimal-string terms — sized by bytes the whole covariance
     // build serializes onto one core.
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val parts = math.min(math.max(cores.toLong,
-      nVecs * dDims * dDims / 2 / 1000000L), cores * 16L).toInt
+    val parts = Gates.width(cores, nVecs * dDims * dDims / 2, 1000000L, cores)
     // the covariance is symmetric: each row generates only its upper
     // triangle (i ≤ j — halves the decimal-summed term volume, the
     // expensive part) map-side, partial-aggregated before the only

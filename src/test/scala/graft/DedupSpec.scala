@@ -584,6 +584,36 @@ class DedupSpec extends SparkSpec {
       (5L, 2L, 5L, None, Some(2))))
   }
 
+  test("goldenRecord broadcasts labels only while labels is under the row gate too") {
+    // small records, labels frames of ~1000 rows (exact Range rowCount);
+    // auto-broadcast off, so any BroadcastHashJoin is goldenRecord's own.
+    // Each case gets its own labels size: the persisted join of one
+    // call would otherwise serve the other (cache lookup ignores hints).
+    val records = Seq((1L, "A"), (2L, "A"), (3L, "B")).toDF("id", "brand")
+    def broadcasts(labelRows: Long, checkpointed: Boolean = false): Boolean = {
+      val labels0 = spark.range(labelRows)
+        .select(col("id"), (col("id") % 3).as("cluster"))
+      val labels = if (checkpointed) labels0.localCheckpoint() else labels0
+      Dedup.goldenRecord(records, labels, "id", Seq("brand"))
+        .queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
+    }
+    val autoKey = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(autoKey, "-1")
+    try {
+      spark.conf.set("graft.rank.rangeRows", "100000")
+      try assert(broadcasts(1000), "both frames under the bar: labels broadcasts")
+      finally spark.conf.unset("graft.rank.rangeRows")
+      spark.conf.set("graft.rank.rangeRows", "100")
+      try {
+        assert(!broadcasts(1001), "labels above the bar must not broadcast")
+        // a checkpointed label frame (a connectedComponents result)
+        // carries origin-plan stats; the records bound decides
+        assert(broadcasts(1002, checkpointed = true),
+          "a checkpoint-scan labels frame is record-bounded")
+      } finally spark.conf.unset("graft.rank.rangeRows")
+    } finally spark.conf.unset(autoKey)
+  }
+
   test("clusterSizeHistogram: twins vs a template family") {
     val labels = Seq(
       (1L, 1L), (2L, 1L), (3L, 1L),   // one size-3 cluster
