@@ -9,11 +9,13 @@ import org.apache.spark.sql.execution.FormattedMode
  * dims broadcast, shuffles are the ones we budgeted for.
  *
  * Usage: runMain graft.Explain [queryName...]
+ * (`SPARK_GRAFT_CPUS` sets the local core count, default 8: widths come
+ * from [[operators.Gates.width]], so compare plans at equal counts)
  */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = Sessions.local("8", Some(sfDir))
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), Some(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { q =>

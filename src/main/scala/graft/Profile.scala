@@ -70,7 +70,7 @@ object Profile {
     for (name <- names; i <- 1 to reps) {
       jobs.synchronized(jobs.clear())
       stages.synchronized(stages.clear())
-      operators.Dedup.lastCcRounds = -1
+      operators.Dedup.clearLastCc()
       val t0 = System.nanoTime()
       run(name)
       val sec = (System.nanoTime() - t0) / 1e9
@@ -80,12 +80,11 @@ object Profile {
       val jobSum = js.map(j => (j.end - j.start) / 1000.0).sum
       println(f"[profile] $name rep $i: total $sec%.3f s, " +
         f"jobs=${js.size} (sum $jobSum%.3f s, driver gap ${sec - jobSum}%.3f s)")
-      if (operators.Dedup.lastCcRounds >= 0)
-        println(s"[profile] $name cc rounds=${operators.Dedup.lastCcRounds} " +
-          s"edges0=${operators.Dedup.lastCcInitialEdges} " +
-          s"contracted=${operators.Dedup.lastCcEdgeCounts.mkString(",")} " +
-          s"frozen=${operators.Dedup.lastCcFrozenCounts.mkString(",")} " +
-          s"resolveRounds=${operators.Dedup.lastCcResolveRounds}")
+      operators.Dedup.lastCc.foreach { cc =>
+        println(s"[profile] $name cc rounds=${cc.rounds} edges0=${cc.initialEdges} " +
+          s"contracted=${cc.edgeCounts.mkString(",")} " +
+          s"frozen=${cc.frozenCounts.mkString(",")} resolveRounds=${cc.resolveRounds}")
+      }
       js.foreach { j =>
         println(f"[profile]   job ${j.id}%3d ${(j.end - j.start) / 1000.0}%8.3f s " +
           f"stages=${j.stages}%2d tasks=${j.tasks}%5d  ${j.desc.take(100)}")

@@ -83,7 +83,7 @@ object Sessions {
    * explicit join-strategy hints: checkpoint-scan stats are unknown to
    * the static planner, which would otherwise pick sort-merge for
    * every loop join. Callers take the AQE regime instead when their
-   * `*.loopAqeOffEdges` gate is set to 0.
+   * `graft.loop.aqeOffEdges` gate is set to 0.
    *
    * Session-conf scoping caveat: Spark has no per-plan conf, so a
    * CONCURRENT planner in the same session would see the override for

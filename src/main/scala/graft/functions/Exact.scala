@@ -13,6 +13,12 @@ import org.apache.spark.sql.functions._
  * overflow-checked), after which one final cast to double is deterministic.
  * The same trick keeps results stable across AQE re-partitioning at scale.
  *
+ * Two encodings live here, and operators use no other: the fixed-scale
+ * DECIMAL(18,s) cast ([[decSum]], [[decAvg]], [[decCorr]], the moment
+ * builders) for values of known decimal precision, and the
+ * shortest-string DECIMAL(28,18) encoding ([[toDec]], [[absorb]],
+ * [[toD]], [[decMean]]) for arbitrary doubles and floats.
+ *
  * Cost: the per-row double→decimal cast goes through BigDecimal and is
  * the dominant cost of these aggregates (measured ~4.6× a plain double
  * SUM on the q01 shape — the scan itself is ~0.6 s of q01's ~2.9 s).
@@ -32,7 +38,44 @@ object Exact {
   /** Row count as BIGINT (matches DuckDB's COUNT(*)). */
   def cnt: Column = count(lit(1))
 
-  private def dec(c: Column, scale: Int) = c.cast(s"decimal(18,$scale)")
+  private[graft] def dec(c: Column, scale: Int) = c.cast(s"decimal(18,$scale)")
+
+  // ---- the shortest-string DECIMAL(28,18) encoding ----
+  //
+  // Doubles and floats enter an exact sum through their shortest
+  // round-trip STRING, not a direct cast: Spark casts a float to decimal
+  // through its widened double (0.1f → 0.10000000149011612) while DuckDB
+  // uses the float's shortest decimal (0.1), and the Ryu string is the
+  // same in both engines. Scale 18 keeps the parse exact for any |v| >= 1e-9 (float
+  // shortest forms have <= 9 significant digits). Oracles mirror each
+  // helper as CAST(CAST(v AS VARCHAR) AS DECIMAL(28,18)), and read a
+  // decimal back as CAST(CAST(d AS VARCHAR) AS DOUBLE): DuckDB's direct
+  // DECIMAL→DOUBLE double-rounds, the string parse is correctly rounded.
+
+  /** A value through its shortest string into DECIMAL(28,18), or into
+   *  `to` (pageRank's DECIMAL(38,30) contributions, the χ² cells'
+   *  DECIMAL(38,12)). */
+  def toDec(c: Column, to: String = "decimal(28,18)"): Column =
+    c.cast("string").cast(to)
+
+  /** A double rounded to its FLOAT image, then [[toDec]]: the absorb
+   *  step for terms whose last double bits may differ across libms
+   *  (ln, exp, log2 — float's ~6e-8 quantum swallows a 1-ulp wobble).
+   *  Oracles mirror it as CAST(CAST(CAST(CAST(v AS REAL) AS DOUBLE) AS
+   *  VARCHAR) AS DECIMAL(28,18)). */
+  def absorb(c: Column): Column = toDec(c.cast("float").cast("double"))
+
+  /** A decimal (an exact sum of [[toDec]]/[[absorb]] terms) back to
+   *  double through its string. */
+  def toD(c: Column): Column = c.cast("string").cast("double")
+
+  /** Exact per-group mean: Σ [[toDec]](c) as double over the row count
+   *  (double / long is one IEEE division; a decimal division would
+   *  round at decimal scale, where engines disagree). */
+  def decMean(c: Column): Column = sum(toDec(c)).cast("double") / count(lit(1))
+
+  /** DECIMAL(28,18) zero: the [[toDec]]-typed default of a coalesce. */
+  def decZero: Column = lit(0).cast("decimal(28,18)")
 
   /**
    * Order-independent Pearson correlation: every moment (Σx, Σy, Σxy,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact.{absorb, toD, toDec}
 import graft.functions.TextFns
 
 /**
@@ -435,13 +436,10 @@ object Curation {
     val scored = counts.crossJoin(broadcast(total))
       .withColumn("share",
         col(measure).cast("double") / col("__gtot").cast("double"))
-      .withColumn("__gw",
-        sqrt(col("share")).cast("string").cast("decimal(28,18)"))
+      .withColumn("__gw", toDec(sqrt(col("share"))))
     val norm = scored.agg(sum(col("__gw")).as("__gnorm"))
     scored.crossJoin(broadcast(norm))
-      .withColumn("weight",
-        col("__gw").cast("string").cast("double") /
-          col("__gnorm").cast("string").cast("double"))
+      .withColumn("weight", toD(col("__gw")) / toD(col("__gnorm")))
   }
 
   /**
@@ -688,15 +686,14 @@ object Curation {
     val totals = counts.groupBy(col("source"))
       .agg(sum(col("__gc")).as("__gN"), count(lit(1)).as("__gv"))
     val p = col("__gc").cast("double") / col("__gN").cast("double")
-    val term = (-p * log(p)).cast("float").cast("double")
-      .cast("string").cast("decimal(28,18)")
+    val term = absorb(-p * log(p))
     counts.join(broadcast(totals), "source")
       .groupBy(col("source"))
       .agg(max(col("__gN")).as("n_tokens"),
         max(col("__gv")).as("vocab"),
         sum(term).as("__gh"))
       .select(col("source"), col("n_tokens"), col("vocab"),
-        col("__gh").cast("string").cast("double").as("entropy_nats"))
+        toD(col("__gh")).as("entropy_nats"))
   }
 
   /**
@@ -786,8 +783,6 @@ object Curation {
     val grand = counts.agg(sum(col("__gc")).as("__gn"))
     val p = col("__gc").cast("double") / col("__gns").cast("double")
     val q = col("__gg").cast("double") / col("__gn").cast("double")
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
     val joined = counts
       .join(corpus, "__gw")
       .join(broadcast(srcTotals), "source")
@@ -798,12 +793,11 @@ object Curation {
       sum(col("__gg")).as("__ggs"),
       sum(absorb(p * log(lit(2.0) * p / (p + q)))).as("__ga"),
       sum(absorb(q * log(lit(2.0) * q / (p + q)))).as("__gb"))
-    def d(c: String) = col(c).cast("string").cast("double")
     val coverage = col("__ggs").cast("double") / col("__gnn").cast("double")
     val ln2 = lit(ln2Literal).cast("double")
     agg.select(col("source"), col("n_tokens"),
       coverage.as("coverage"),
-      (lit(0.5) * (d("__ga") + d("__gb") + ln2 * (lit(1.0) - coverage)))
+      (lit(0.5) * (toD(col("__ga")) + toD(col("__gb")) + ln2 * (lit(1.0) - coverage)))
         .as("jsd_nats"))
   }
 
@@ -837,20 +831,19 @@ object Curation {
     val v = ranked.select(
       fl(log(col("__gr").cast("double"))).as("__gx"),
       fl(log(col("__gc").cast("double"))).as("__gy"))
-    def dec(c: Column) = c.cast("string").cast("decimal(28,18)")
     val m = v.agg(
       count(lit(1)).as("n"),
-      sum(dec(col("__gx"))).as("__gsx"),
-      sum(dec(col("__gy"))).as("__gsy"),
-      sum(dec(col("__gx") * col("__gy"))).as("__gsxy"),
-      sum(dec(col("__gx") * col("__gx"))).as("__gsxx"))
-    def d(c: String) = col(c).cast("string").cast("double")
+      sum(toDec(col("__gx"))).as("__gsx"),
+      sum(toDec(col("__gy"))).as("__gsy"),
+      sum(toDec(col("__gx") * col("__gy"))).as("__gsxy"),
+      sum(toDec(col("__gx") * col("__gx"))).as("__gsxx"))
     val nD = col("n").cast("double")
-    val den = nD * d("__gsxx") - d("__gsx") * d("__gsx")
-    val slope = (nD * d("__gsxy") - d("__gsx") * d("__gsy")) / den
+    val Seq(sx, sy, sxy, sxx) =
+      Seq("__gsx", "__gsy", "__gsxy", "__gsxx").map(c => toD(col(c)))
+    val den = nD * sxx - sx * sx
+    val slope = (nD * sxy - sx * sy) / den
     m.withColumn("slope", when(den > 0, slope))
-      .withColumn("intercept",
-        when(den > 0, (d("__gsy") - col("slope") * d("__gsx")) / nD))
+      .withColumn("intercept", when(den > 0, (sy - col("slope") * sx) / nD))
       .select(col("n"), col("slope"), col("intercept"))
   }
 
@@ -1075,13 +1068,11 @@ object Curation {
    */
   def naiveBayesSource(
       docs: DataFrame, id: String, classCol: String, textCol: String): DataFrame = {
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
     // ONE corpus pass: the (doc, token) occurrence counts feed BOTH the
     // training counts and the scoring join (the raw exploded frame fed
     // two branches = the tokenizer ran twice), and the per-occurrence
     // score sum collapses to an exact count×term decimal product —
-    // decimal(28,18) × decimal(9,0) types as decimal(38,18), no
+    // the absorbed DECIMAL(28,18) × decimal(9,0) types as decimal(38,18), no
     // precision cap, so Σ_occurrences d ≡ k·d bit-for-bit (argmax
     // unchanged; the 1e9 per-(doc,token) count bound is structural: a
     // document's length bounds any token's occurrences).
@@ -1224,8 +1215,6 @@ object Curation {
       docs: DataFrame, id: String, textCol: String,
       nTerms: Int, k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(nTerms >= 1 && k >= 1, "bm25TopK needs nTerms >= 1 and k >= 1")
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
     val toks = docs.select(col(id), explode(split(col(textCol), " ")).as("__gtok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dl = toks.groupBy(col(id)).agg(count(lit(1)).as("__gdl"))
@@ -1257,7 +1246,7 @@ object Curation {
     perDoc.orderBy(col("__gscore").desc, col(id).asc).limit(k)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("__gscore").desc, col(id).asc)))
-      .select(col(id), col("__gscore").cast("string").cast("double").as("bm25"),
+      .select(col(id), toD(col("__gscore")).as("bm25"),
         col("rank"))
   }
 

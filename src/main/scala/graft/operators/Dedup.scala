@@ -19,15 +19,24 @@ import graft.plans.GraftFunctions
  */
 object Dedup {
 
-  /** Round-count telemetry from the most recent [[connectedComponents]]
-   *  call on this driver: rounds to fixpoint and the contracted edge
-   *  count after each non-final round (scale evidence for the shrinking
-   *  graph — diagnostics only, never read by operators). */
-  @volatile var lastCcRounds: Int = -1
-  @volatile var lastCcInitialEdges: Long = -1L
-  @volatile var lastCcEdgeCounts: Seq[Long] = Nil
-  @volatile var lastCcFrozenCounts: Seq[Long] = Nil
-  @volatile var lastCcResolveRounds: Int = 0
+  /** Loop telemetry of one [[connectedComponents]] call: rounds to
+   *  fixpoint, the initial directed edge count, the contracted edge
+   *  count after each non-final round, the rows frozen per settled-exit
+   *  event, and the end-resolution jump rounds (scale evidence for the
+   *  shrinking graph — diagnostics only, never read by operators). */
+  final case class CcStats(rounds: Int, initialEdges: Long, edgeCounts: Seq[Long],
+      frozenCounts: Seq[Long], resolveRounds: Int)
+
+  private val lastCcStats =
+    new java.util.concurrent.atomic.AtomicReference[Option[CcStats]](None)
+
+  /** The stats of the most recent [[connectedComponents]] call on this
+   *  driver that returned, published once as a whole when it ends. */
+  def lastCc: Option[CcStats] = lastCcStats.get
+
+  /** Forget the published stats (so a caller can tell whether the next
+   *  run published any). */
+  def clearLastCc(): Unit = lastCcStats.set(None)
 
   /** Exact dedup: groups identical values of `on`, electing min(`id`) as keeper. */
   def exactGroups(df: DataFrame, on: String, id: String): DataFrame =
@@ -611,8 +620,8 @@ object Dedup {
    * |V| rows. Frozen mappings are resolved transitively at the end:
    * one O(log events) pointer-jump pass over the reunited frame (proof
    * of termination at the component min in the body). Telemetry:
-   * [[lastCcFrozenCounts]] (rows frozen per event) and
-   * [[lastCcResolveRounds]] (end-resolution jump rounds).
+   * [[CcStats]]`.frozenCounts` (rows frozen per event) and
+   * `.resolveRounds` (end-resolution jump rounds).
    *
    * Scale shape: every round is two hash joins over (edges, labels)
    * plus the contraction's relabel joins over the (shrinking) edge
@@ -623,8 +632,7 @@ object Dedup {
    * round so round N's plan does not replay rounds 1..N-1 (the
    * standard iterative-algorithm requirement; on a cluster with a
    * checkpoint dir, reliable `checkpoint` is the durable variant).
-   * [[lastCcRounds]]/[[lastCcEdgeCounts]] expose round-count telemetry
-   * for scale evidence.
+   * [[lastCc]] exposes round-count telemetry for scale evidence.
    *
    * Returns (id, component): one row per distinct vertex appearing in
    * `pairs`, component = min vertex id reachable via the pair graph.
@@ -662,8 +670,8 @@ object Dedup {
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
     }
     val contractMin: Long = Gates.read(Gates.CcContractMinEdges, spark)
-    // NARROW-LOOP regime (round-14): below `graft.cc.loopAqeOffEdges`
-    // directed edges (default 32 M, env SPARK_GRAFT_CC_LOOP_AQE_OFF_EDGES)
+    // NARROW-LOOP regime (round-14): below `graft.loop.aqeOffEdges`
+    // directed edges (default 32 M, env SPARK_GRAFT_LOOP_AQE_OFF_EDGES)
     // the loop runs with adaptive execution OFF at a static
     // loop-row-sized shuffle width, every loop join carries an explicit
     // SHUFFLE_HASH hint (checkpoint-scan stats are unknown to the
@@ -677,7 +685,7 @@ object Dedup {
     // (runtime skew handling matters once loop frames are cluster-
     // sized); the bar is conf/env-overridable for A/B runs (0 forces
     // the AQE path).
-    val smallLoop = edgeCount0 < Gates.read(Gates.CcLoopAqeOffEdges, spark)
+    val smallLoop = edgeCount0 < Gates.read(Gates.LoopAqeOffEdges, spark)
     def hinted(df: DataFrame): DataFrame =
       if (smallLoop) df.hint("shuffle_hash") else df
     var iter = 0
@@ -830,10 +838,6 @@ object Dedup {
     // generation the edge roller still holds (CacheHygieneSpec: live
     // caches must be referenced by the returned plan)
     edgeRoller.advance(); edgeRoller.advance()
-    lastCcRounds = iter
-    lastCcInitialEdges = edgeCount0
-    lastCcEdgeCounts = edgeCounts.toSeq
-    lastCcFrozenCounts = frozenCounts.toSeq
     // Unconverged labels are MID-MERGE (multiple "keepers" inside one
     // true cluster) — silently returning them would ship duplicates.
     // With pointer jumping, maxIter rounds cover diameters past
@@ -842,8 +846,13 @@ object Dedup {
       throw new IllegalStateException(
         s"connectedComponents did not reach a fixpoint in $maxIter rounds; " +
           "raise maxIter (each round doubles the covered component diameter)")
-    lastCcResolveRounds = 0
-    if (frozenParts.isEmpty) labels.select(col("id"), col("label").as("component"))
+    // the one publication of this call's telemetry, as a whole
+    def published(components: DataFrame, resolveRounds: Int): DataFrame = {
+      lastCcStats.set(Some(CcStats(iter, edgeCount0, edgeCounts.toSeq,
+        frozenCounts.toSeq, resolveRounds)))
+      components
+    }
+    if (frozenParts.isEmpty) published(labels.select(col("id"), col("label").as("component")), 0)
     else {
       // Transitive resolution of the frozen exits. Why it terminates at
       // the right label: every frozen mapping points strictly downward
@@ -880,12 +889,11 @@ object Dedup {
         rIter += 1
         roller.advance()
       }
-      lastCcResolveRounds = rIter
       if (!done)
         throw new IllegalStateException(
           s"connectedComponents frozen-chain resolution did not reach a " +
             s"fixpoint in $maxIter pointer-jump rounds")
-      all.select(col("id"), col("label").as("component"))
+      published(all.select(col("id"), col("label").as("component")), rIter)
     }
     } // withLoopPartitions
   }

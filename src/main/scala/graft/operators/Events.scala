@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact.{absorb, toD}
+
 /**
  * Event-sequence operators: batch sessionization and as-of joins —
  * the batch twins of [[graft.streaming.EventStreams]], and the
@@ -681,11 +683,12 @@ object Events {
       sum(dx * dy).as("__gsxy"),
       sum(dx * dx).as("__gsxx"),
       sum(dy * dy).as("__gsyy"))
-    def d(c: String) = col(c).cast("string").cast("double")
     val nD = col("n_pairs").cast("double")
-    val num = nD * d("__gsxy") - d("__gsx") * d("__gsy")
-    val den1 = nD * d("__gsxx") - d("__gsx") * d("__gsx")
-    val den2 = nD * d("__gsyy") - d("__gsy") * d("__gsy")
+    val Seq(sx, sy, sxy, sxx, syy) =
+      Seq("__gsx", "__gsy", "__gsxy", "__gsxx", "__gsyy").map(c => toD(col(c)))
+    val num = nD * sxy - sx * sy
+    val den1 = nD * sxx - sx * sx
+    val den2 = nD * syy - sy * sy
     m.select(keys.map(col) ++ Seq(col("lag"), col("n_pairs"),
       when(den1 > 0 && den2 > 0, num / (sqrt(den1) * sqrt(den2)))
         .as("acf")): _*)
@@ -724,11 +727,12 @@ object Events {
       sum(dx * dy).as("__gsxy"),
       sum(dx * dx).as("__gsxx"),
       sum(dy * dy).as("__gsyy"))
-    def d(c: String) = col(c).cast("string").cast("double")
     val nD = col("n_pairs").cast("double")
-    val num = nD * d("__gsxy") - d("__gsx") * d("__gsy")
-    val den1 = nD * d("__gsxx") - d("__gsx") * d("__gsx")
-    val den2 = nD * d("__gsyy") - d("__gsy") * d("__gsy")
+    val Seq(sx, sy, sxy, sxx, syy) =
+      Seq("__gsx", "__gsy", "__gsxy", "__gsxx", "__gsyy").map(c => toD(col(c)))
+    val num = nD * sxy - sx * sy
+    val den1 = nD * sxx - sx * sx
+    val den2 = nD * syy - sy * sy
     m.select(keys.map(col) ++ Seq(col("n_pairs"),
       when(den1 > 0 && den2 > 0, num / (sqrt(den1) * sqrt(den2)))
         .as("acf")): _*)
@@ -774,7 +778,7 @@ object Events {
       .select(keys.map(col) ++ Seq(
         col("__gn").as("n"),
         col("__gi").as(outIndex),
-        (col("__gd").cast("string").cast("double") /
+        (toD(col("__gd")) /
           (col("__gn").cast("double") * col("__gn").cast("double"))).as("score")): _*)
   }
 
@@ -811,13 +815,13 @@ object Events {
       sum(dy).as("__gsy"),
       sum(col("__gcx") * dy).as("__gsxy"),
       sum(col("__gcx") * col("__gcx")).as("__gsxx"))
-    def d(c: String) = col(c).cast("string").cast("double")
     val nD = col("n").cast("double")
-    val den = nD * d("__gsxx") - d("__gsx") * d("__gsx")
-    val slope = (nD * d("__gsxy") - d("__gsx") * d("__gsy")) / den
+    val Seq(sx, sy, sxy, sxx) =
+      Seq("__gsx", "__gsy", "__gsxy", "__gsxx").map(c => toD(col(c)))
+    val den = nD * sxx - sx * sx
+    val slope = (nD * sxy - sx * sy) / den
     m.withColumn("slope", when(den > 0, slope))
-      .withColumn("intercept",
-        when(den > 0, (d("__gsy") - col("slope") * d("__gsx")) / nD))
+      .withColumn("intercept", when(den > 0, (sy - col("slope") * sx) / nD))
       .select(keys.map(col) ++ Seq(col("n"), col("slope"), col("intercept")): _*)
   }
 
@@ -856,9 +860,8 @@ object Events {
     // a step where EVERYONE at risk exits has factor 0: ln is −∞, so
     // flag it and pin S(t)=0 from there on instead of feeding the sum
     val lnFactor = when(col("n_event") < col("n_risk"),
-      log(lit(1.0d) -
-        col("n_event").cast("double") / col("n_risk").cast("double"))
-        .cast("float").cast("double").cast("string").cast("decimal(28,18)"))
+      absorb(log(lit(1.0d) -
+        col("n_event").cast("double") / col("n_risk").cast("double"))))
     val hitZero = max(when(col("n_event") === col("n_risk"), 1).otherwise(0))
       .over(ord)
     byT.crossJoin(broadcast(total))
@@ -866,7 +869,7 @@ object Events {
       .withColumn("survival",
         when(hitZero === 1, lit(0.0d)).otherwise(
           coalesce(
-            exp(sum(lnFactor).over(ord).cast("string").cast("double")),
+            exp(toD(sum(lnFactor).over(ord))),
             lit(1.0d))))
       .select(col("t"), col("n_risk"), col("n_event"), col("n_censored"),
         col("survival"))

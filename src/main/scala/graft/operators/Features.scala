@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Exact
+import graft.functions.Exact.{absorb, toD}
 
 /**
  * Feature preparation for model-training pipelines: per-group
@@ -852,7 +853,7 @@ object Features {
         (col("__gcn") * 2 + col("__gn")).cast("decimal(18,0)")).as("__gu2"))
       .select(col("n_pos"), col("n_neg"),
         when(col("n_pos") > 0 && col("n_neg") > 0,
-          col("__gu2").cast("string").cast("double") /
+          toD(col("__gu2")) /
             (lit(2.0d) * col("n_pos").cast("double") *
               col("n_neg").cast("double"))).as("auc"))
   }
@@ -902,11 +903,12 @@ object Features {
       sum(dx * dy).as("__gsxy"),
       sum(dx * dx).as("__gsxx"),
       sum(dy * dy).as("__gsyy"))
-    def d(c: String) = col(c).cast("string").cast("double")
     val nD = col("n").cast("double")
-    val num = nD * d("__gsxy") - d("__gsx") * d("__gsy")
-    val den1 = nD * d("__gsxx") - d("__gsx") * d("__gsx")
-    val den2 = nD * d("__gsyy") - d("__gsy") * d("__gsy")
+    val Seq(sx, sy, sxy, sxx, syy) =
+      Seq("__gsx", "__gsy", "__gsxy", "__gsxx", "__gsyy").map(c => toD(col(c)))
+    val num = nD * sxy - sx * sy
+    val den1 = nD * sxx - sx * sx
+    val den2 = nD * syy - sy * sy
     m.select(col("n"),
       when(den1 > 0 && den2 > 0, num / (sqrt(den1) * sqrt(den2)))
         .as("rho"))
@@ -942,7 +944,7 @@ object Features {
     totals.crossJoin(broadcast(dNum))
       .select(col("n_a"), col("n_b"),
         when(col("n_a") > 0 && col("n_b") > 0,
-          col("__gd").cast("string").cast("double") /
+          toD(col("__gd")) /
             (col("n_a").cast("double") * col("n_b").cast("double"))).as("ks"))
   }
 
@@ -973,16 +975,15 @@ object Features {
       count(va).as("n_a"), count(vb).as("n_b"),
       sum(va).as("__gsa"), sum(vb).as("__gsb"),
       sum(va * va).as("__gsaa"), sum(vb * vb).as("__gsbb"))
-    def d(c: String) = col(c).cast("string").cast("double")
     val (na, nb) = (col("n_a").cast("double"), col("n_b").cast("double"))
-    val ma = d("__gsa") / na
-    val mb = d("__gsb") / nb
+    val Seq(sa, sb, saa, sbb) =
+      Seq("__gsa", "__gsb", "__gsaa", "__gsbb").map(c => toD(col(c)))
+    val ma = sa / na
+    val mb = sb / nb
     // sample variance via the moment form, clamped at 0 (the q75
     // constant-group ulp-residue contract)
-    val vva = greatest(na * d("__gsaa") - d("__gsa") * d("__gsa"), lit(0d)) /
-      (na * (na - 1))
-    val vvb = greatest(nb * d("__gsbb") - d("__gsb") * d("__gsb"), lit(0d)) /
-      (nb * (nb - 1))
+    val vva = greatest(na * saa - sa * sa, lit(0d)) / (na * (na - 1))
+    val vvb = greatest(nb * sbb - sb * sb, lit(0d)) / (nb * (nb - 1))
     val se = sqrt(vva / na + vvb / nb)
     m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
       when(col("n_a") >= 2 && col("n_b") >= 2,
@@ -1070,7 +1071,7 @@ object Features {
     val peNum = rows.join(cols, "__glab")
       .agg(sum(col("__grt") * col("__gct")).as("__gpe"))
     val po = col("__gtrace").cast("double") / col("n").cast("double")
-    val pe = col("__gpe").cast("string").cast("double") /
+    val pe = toD(col("__gpe")) /
       (col("n").cast("double") * col("n").cast("double"))
     totals.crossJoin(broadcast(peNum))
       .withColumn("po", po)
@@ -1275,9 +1276,7 @@ object Features {
       val sig = (lit(1.0) / (lit(1.0) + exp(-z))).cast("float").cast("double")
       val grads = (0 to k).map { j =>
         val xj = if (j == 0) lit(1.0) else col(s"__gx$j")
-        (sum(((sig - col("__gy")) * xj).cast("float").cast("double")
-          .cast("string").cast("decimal(28,18)"))
-          .cast("string").cast("double") /
+        (toD(sum(absorb((sig - col("__gy")) * xj))) /
           count(lit(1)).cast("double")).as(s"__gg$j")
       }
       val g = data.crossJoin(broadcast(wdf)).agg(grads.head, grads.tail: _*)
@@ -1348,9 +1347,7 @@ object Features {
       .agg(count(lit(1)).as("n"),
         (sum(when((col("__gsig") >= 0.5) === (col("__gy") === 1.0), 1L))
           .cast("double") / count(lit(1)).cast("double")).as("accuracy"),
-        (sum(ll.cast("float").cast("double").cast("string").cast("decimal(28,18)"))
-          .cast("string").cast("double") /
-          count(lit(1)).cast("double")).as("logloss"))
+        (toD(sum(absorb(ll))) / count(lit(1)).cast("double")).as("logloss"))
   }
 
   /**

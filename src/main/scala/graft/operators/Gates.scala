@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
  * bench-scale plan and its scale plan. Every gate resolves the same
  * way: the session conf key, then the environment alias, then the
  * default. The alias is derived from the key by one rule
- * ([[envName]]: `graft.cc.loopAqeOffEdges` ↔
- * `SPARK_GRAFT_CC_LOOP_AQE_OFF_EDGES`), so setting every alias to 0
+ * ([[envName]]: `graft.loop.aqeOffEdges` ↔
+ * `SPARK_GRAFT_LOOP_AQE_OFF_EDGES`), so setting every alias to 0
  * forces every gated operator onto its scale branch at any data size.
  */
 object Gates {
@@ -36,17 +36,16 @@ object Gates {
   /** Connected components contracts its edge frame above this many
    *  directed edges. */
   val CcContractMinEdges = Gate("graft.cc.contractMinEdges", 1000000L)
-  /** Connected components runs its narrow loop regime (AQE off, static
-   *  loop width, hash hints) below this many directed edges. */
-  val CcLoopAqeOffEdges = Gate("graft.cc.loopAqeOffEdges", 32000000L)
-  /** pageRank's narrow loop regime bar, in normalized edges. */
-  val PagerankLoopAqeOffEdges = Gate("graft.pagerank.loopAqeOffEdges", 32000000L)
+  /** Iterative graph loops run their narrow regime (AQE off, static
+   *  loop width, hash hints) below this many loop edge rows: connected
+   *  components counts directed edges, pageRank normalized edges. */
+  val LoopAqeOffEdges = Gate("graft.loop.aqeOffEdges", 32000000L)
   /** Naive Bayes scores through the dense broadcast (class, token) grid
    *  up to this many probed cells, the sparse join above. */
   val NbGridCells = Gate("graft.nb.gridCells", 1000000L)
 
   val all: Seq[Gate] = Seq(RankRangeBytes, RankRangeRows, SsjoinHashRows,
-    CcContractMinEdges, CcLoopAqeOffEdges, PagerankLoopAqeOffEdges, NbGridCells)
+    CcContractMinEdges, LoopAqeOffEdges, NbGridCells)
 
   /** `graft.a.bcDe` → `SPARK_GRAFT_A_BC_DE`: dots become underscores and
    *  every camel-case hump starts a new word. */

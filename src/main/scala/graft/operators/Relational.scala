@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+import graft.functions.Exact.{absorb, toD, toDec}
+
 /**
  * Relational operators: joins, dedup, union, top-k, pivot, windows —
  * the Spark-first re-expression of the reference's `merge_dados` /
@@ -611,14 +614,13 @@ object Relational {
    * bounded aggregation; the fact-table pass happened upstream.
    */
   def cramersV(cells: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val dec = col("contribution").cast("string").cast("decimal(38,12)")
     val m = cells.agg(
       sum(col("n")).as("n_obs"),
       countDistinct(col(aCol)).as("__gr"),
       countDistinct(col(bCol)).as("__gc"),
-      sum(dec).as("__gchi"))
+      sum(toDec(col("contribution"), "decimal(38,12)")).as("__gchi"))
     val dof = least(col("__gr") - 1, col("__gc") - 1)
-    val chi2 = col("__gchi").cast("string").cast("double")
+    val chi2 = toD(col("__gchi"))
     m.select(col("n_obs"),
       dof.as("dof_min"),
       chi2.as("chi2"),
@@ -653,11 +655,10 @@ object Relational {
         (rowT.cast("double") * colT.cast("double")))
     cells
       .select(col("__gn"),
-        term.cast("float").cast("double").cast("string").cast("decimal(28,18)")
-          .as("__gt"))
+        absorb(term).as("__gt"))
       .agg(sum(col("__gn")).as("n_obs"), sum(col("__gt")).as("__gmi"))
       .select(col("n_obs"),
-        col("__gmi").cast("string").cast("double").as("mi_nats"))
+        toD(col("__gmi")).as("mi_nats"))
   }
 
   /**
@@ -723,13 +724,13 @@ object Relational {
     // the exact expression the dense path materialized per node
     def rankOf(sumCol: Column): Column =
       (lit(1.0d) - d) / gN +
-        d * coalesce(sumCol.cast("string").cast("double"), lit(0.0d))
+        d * coalesce(toD(sumCol), lit(0.0d))
     // EAGER iteration under the narrow loop regime (round-14, the CC
     // recipe): the lazy `iterations`-deep plan paid AQE stage
     // materialization + replanning per exchange per iteration plus a
     // ~1.2 s deep-plan planning gap at the one action (profiled at
     // sf0.1: 31 jobs for 5 iterations). Below
-    // `graft.pagerank.loopAqeOffEdges` normalized edges (default 32 M;
+    // `graft.loop.aqeOffEdges` normalized edges (default 32 M;
     // 0 forces the AQE path) each iteration is ONE statically
     // planned checkpoint job; the norm frame is re-laid hash(src) at
     // the loop width once so the per-iteration join streams it with no
@@ -739,7 +740,7 @@ object Relational {
     // materializes the same expression tree, and the per-target sums
     // are order-free DECIMAL(38,30) string images.
     val edgeRows = norm0.count()
-    val narrow = edgeRows < Gates.read(Gates.PagerankLoopAqeOffEdges, spark)
+    val narrow = edgeRows < Gates.read(Gates.LoopAqeOffEdges, spark)
     def hinted(dfh: DataFrame): DataFrame =
       if (narrow) dfh.hint("shuffle_hash") else dfh
     graft.Sessions.withLoopPartitions(spark, math.max(1L, edgeRows), narrow) {
@@ -756,16 +757,14 @@ object Relational {
         val contrib = sums match {
           case None => // uniform start: rank0 = 1/N for every node
             norm.select(col(dst).as("__gdst"),
-              ((lit(1.0d) / gN) * col(weight).cast("double") /
-                col("__gW").cast("double"))
-                .cast("string").cast("decimal(38,30)").as("__gc"))
+              toDec((lit(1.0d) / gN) * col(weight).cast("double") /
+                col("__gW").cast("double"), "decimal(38,30)").as("__gc"))
           case Some(s0) =>
             norm.join(hinted(s0.select(col("__gdst").as("__gsrc"), col("__gs"))),
                 col(src) === col("__gsrc"), "left")
               .select(col(dst).as("__gdst"),
-                (rankOf(col("__gs")) * col(weight).cast("double") /
-                  col("__gW").cast("double"))
-                  .cast("string").cast("decimal(38,30)").as("__gc"))
+                toDec(rankOf(col("__gs")) * col(weight).cast("double") /
+                  col("__gW").cast("double"), "decimal(38,30)").as("__gc"))
         }
         sums = Some(roller.roll(
           contrib.groupBy(col("__gdst")).agg(sum(col("__gc")).as("__gs"))))
@@ -879,7 +878,7 @@ object Relational {
       valid, keys, column, Seq(lo -> "__glo", hi -> "__ghi"))) { j =>
       j.filter(v >= col("__glo") && v <= col("__ghi"))
         .groupBy(keys.map(col): _*)
-        .agg(graft.functions.Exact.decAvg(v, scale).as(out))
+        .agg(Exact.decAvg(v, scale).as(out))
     }
   }
 
@@ -1242,11 +1241,8 @@ object Relational {
         lit(2.0) * col("precision") * col("recall") /
           (col("precision") + col("recall"))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
     def meanOf(c: String) =
-      (sum(absorb(col(c))).cast("string").cast("double") /
-        count(col(c)).cast("double")).as(c)
+      (toD(sum(absorb(col(c)))) / count(col(c)).cast("double")).as(c)
     val macroRow = perClass.agg(
       meanOf("precision"), meanOf("recall"), meanOf("f1"))
       .select(lit("__macro__").as("label"),
@@ -1382,11 +1378,11 @@ object Relational {
     require(window > 1, "rollingAnomalies needs a window of at least 2 rows")
     val base = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
     val w = base.orderBy(order: _*).rowsBetween(-window, -1)
-    def dec(c: Column) = c.cast(s"decimal(18,$scale)")
     val v = col(column)
+    val dv = Exact.dec(v, scale)
     val n = count(v).over(w).cast("double")
-    val sx = sum(dec(v)).over(w).cast("double")
-    val sxx = sum(dec(v) * dec(v)).over(w).cast("double")
+    val sx = sum(dv).over(w).cast("double")
+    val sxx = sum(dv * dv).over(w).cast("double")
     // explicit n > 0 guards, not null-propagation: greatest() IGNORES
     // nulls (both engines), so an empty frame would otherwise reach the
     // division as sqrt(0)/0 — an ANSI error, not a NULL. One select (not

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact.{absorb, decMean, decZero, toD, toDec}
 import graft.plans.GraftFunctions
 
 /**
@@ -187,12 +188,10 @@ object Similarity {
     val rr = neighbors.select(col("query_id")).distinct()
       .join(firstHit, Seq("query_id"), "left")
       .withColumn("__grr",
-        coalesce((lit(1.0d) / col("__gfirst")).cast("string").cast("decimal(28,18)"),
-          lit(0).cast("decimal(28,18)")))
+        coalesce(toDec(lit(1.0d) / col("__gfirst")), decZero))
     rr.agg(count(lit(1)).as("n_queries"), sum(col("__grr")).as("__gsum"))
       .select(col("n_queries"),
-        (col("__gsum").cast("string").cast("double") /
-          col("n_queries").cast("double")).as("mrr"))
+        (toD(col("__gsum")) / col("n_queries").cast("double")).as("mrr"))
   }
 
   /**
@@ -222,8 +221,7 @@ object Similarity {
     require(k > 0, "ndcgAtK needs k > 0")
     val lab = labels.select(col(id), col(labelCol))
     def gain(pos: Column): Column =
-      (lit(1.0d) / log2(pos.cast("double") + lit(1.0d)))
-        .cast("float").cast("double").cast("string").cast("decimal(28,18)")
+      absorb(lit(1.0d) / log2(pos.cast("double") + lit(1.0d)))
     val rel = neighbors.filter(col("rank") <= k)
       .join(lab.select(col(id).as("query_id"), col(labelCol).as("__gql")), "query_id")
       .join(lab.select(col(id).as("neighbor_id"), col(labelCol).as("__gnl")), "neighbor_id")
@@ -234,16 +232,13 @@ object Similarity {
       .agg(sum(gain(col("rank"))).as("__gdcg"),
         sum(gain(col("__gideal"))).as("__gidcg"))
       .select(col("query_id"),
-        (col("__gdcg").cast("string").cast("double") /
-          col("__gidcg").cast("string").cast("double")).as("__gndcg"))
+        (toD(col("__gdcg")) / toD(col("__gidcg"))).as("__gndcg"))
     neighbors.select(col("query_id")).distinct()
       .join(perQuery, Seq("query_id"), "left")
-      .select(coalesce(col("__gndcg").cast("string").cast("decimal(28,18)"),
-        lit(0).cast("decimal(28,18)")).as("__gn"))
+      .select(coalesce(toDec(col("__gndcg")), decZero).as("__gn"))
       .agg(count(lit(1)).as("n_queries"), sum(col("__gn")).as("__gsum"))
       .select(col("n_queries"),
-        (col("__gsum").cast("string").cast("double") /
-          col("n_queries").cast("double")).as("mean_ndcg"))
+        (toD(col("__gsum")) / col("n_queries").cast("double")).as("mean_ndcg"))
   }
 
   /**
@@ -276,7 +271,7 @@ object Similarity {
       iterations: Int): DataFrame = {
     require(iterations >= 1, "labelPropagation needs at least one iteration")
     val e = edges.select(col(src).as("__gsrc"), col(dst).as("__gdst"),
-      col(weightCol).cast("double").cast("string").cast("decimal(28,18)").as("__gw"))
+      toDec(col(weightCol).cast("double")).as("__gw"))
       .persist()
     val sd = seeds.select(col(id).as("__gsid"), col(labelCol).as("__gslab")).persist()
     var labels = sd.select(col("__gsid").as("node"), col("__gslab").as("lab"))
@@ -421,8 +416,6 @@ object Similarity {
       bits: Int = 8, tables: Int = 2, maxBucketSize: Int = 0): DataFrame = {
     require(bits >= 1 && bits <= 30 && tables >= 1,
       "hyperplaneMd5Pairs needs 1 <= bits <= 30 and tables >= 1")
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
     val x = df.select(col(id).as("__hid"),
       posexplode(col(vecCol)).as(Seq("pos", "__hv")))
     val tj = explode(array((for (t <- 0 until tables; j <- 0 until bits)
@@ -639,18 +632,10 @@ object Similarity {
   def meanEmbedding(df: DataFrame, groupCol: String, vecCol: String): DataFrame =
     df.select(col(groupCol), posexplode(col(vecCol)).as(Seq("pos", "__gv")))
       .groupBy(col(groupCol), col("pos"))
-      // float → STRING → decimal, not float → decimal: Spark widens a
-      // float through its exact binary expansion (0.1f → 0.1000000015)
-      // while DuckDB uses the shortest round-trip decimal (0.1) — the
-      // Ryu string is the shortest form in BOTH engines, so summing the
-      // string-parsed decimals is engine-identical. Scale 18 keeps the
-      // parse exact (no engine-divergent rounding) for any |v| >= 1e-9
-      // — float32 shortest reprs have <= 9 significant digits. The
-      // exact sum is cast to DOUBLE before dividing (decimal division
-      // rounds at decimal scale — engines disagree; double/long is
-      // IEEE).
-      .agg((sum(col("__gv").cast("string").cast("decimal(28,18)")).cast("double") /
-        count(lit(1))).as("mean"))
+      // float → shortest STRING → decimal, never float → decimal
+      // (Exact's shortest-string encoding: the only float image both
+      // engines agree on)
+      .agg(decMean(col("__gv")).as("mean"))
 
   /**
    * Embedding-coherence audit: each vector's cosine similarity to its
@@ -677,17 +662,14 @@ object Similarity {
       .select(col(groupCol), col("pos"), col("mean").as("__gc"))
     val vecs = df.select(col(id), col(groupCol),
       posexplode(col(vecCol).cast("array<double>")).as(Seq("pos", "__gv")))
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
     val m = vecs.join(broadcast(cent), Seq(groupCol, "pos"))
       .groupBy(col(id), col(groupCol)).agg(
         sum(absorb(col("__gv") * col("__gc"))).as("__gdot"),
         sum(absorb(col("__gv") * col("__gv"))).as("__gnv"),
         sum(absorb(col("__gc") * col("__gc"))).as("__gnc"))
-    def d(c: String) = col(c).cast("string").cast("double")
+    val Seq(dot, nv, nc) = Seq("__gdot", "__gnv", "__gnc").map(c => toD(col(c)))
     m.select(col(id), col(groupCol),
-      when(d("__gnv") > 0 && d("__gnc") > 0,
-        d("__gdot") / (sqrt(d("__gnv")) * sqrt(d("__gnc")))).as("cos_centroid"))
+      when(nv > 0 && nc > 0, dot / (sqrt(nv) * sqrt(nc))).as("cos_centroid"))
   }
 
   /**
@@ -753,9 +735,6 @@ object Similarity {
           .orderBy(xxhash64(col(id)).asc, col(id).asc)
           .limit(trainSampleSize)
       else df
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
-    def toD(c: Column) = c.cast("string").cast("double")
     // global per-position means — [[meanEmbedding]]'s exact-decimal
     // recipe without a group key — COLLECTED: d (pos, mean) doubles is
     // the bounded agg-to-literal class (the k-means-centroid
@@ -766,8 +745,7 @@ object Similarity {
     val meansRows = train
       .select(posexplode(col(vecCol)).as(Seq("pos", "__gmv")))
       .groupBy(col("pos"))
-      .agg((sum(col("__gmv").cast("string").cast("decimal(28,18)")).cast("double") /
-        count(lit(1))).as("mean"), count(lit(1)).as("__gnp"))
+      .agg(decMean(col("__gmv")).as("mean"), count(lit(1)).as("__gnp"))
       .orderBy(col("pos")).collect()
     // posexplode positions are 0-based and dense per row, so the global
     // set is 0..d-1 — element_at(meanArr, pos+1) below relies on it
@@ -894,19 +872,15 @@ object Similarity {
   def pcaProject(
       df: DataFrame, id: String, vecCol: String,
       loadings: DataFrame): DataFrame = {
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
     val means = df.select(posexplode(col(vecCol)).as(Seq("pos", "__gmv")))
       .groupBy(col("pos"))
-      .agg((sum(col("__gmv").cast("string").cast("decimal(28,18)")).cast("double") /
-        count(lit(1))).as("mean"))
+      .agg(decMean(col("__gmv")).as("mean"))
     val x = df.select(col(id),
       posexplode(col(vecCol).cast("array<double>")).as(Seq("pos", "__gv")))
     x.join(broadcast(means), "pos")
       .join(broadcast(loadings), "pos")
       .groupBy(col(id))
-      .agg(sum(absorb((col("__gv") - col("mean")) * col("loading")))
-        .cast("string").cast("double").as("pc1"))
+      .agg(toD(sum(absorb((col("__gv") - col("mean")) * col("loading")))).as("pc1"))
   }
 
   /**
@@ -941,8 +915,6 @@ object Similarity {
       df: DataFrame, id: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
     require(k >= 2 && iters >= 1, "kmeansLloyd needs k >= 2 and iters >= 1")
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
     // spread before the explode + persist: the cached frame freezes the
     // scan's layout (1 partition at bench scale), and EVERY assignment
     // join and centroid rebuild would inherit that single task
@@ -982,8 +954,7 @@ object Similarity {
         // chain replays every earlier assignment per consumer
         cents = roller.roll(assigned.join(x, "__gvid")
           .groupBy(col("__gcid"), col("pos"))
-          .agg((sum(col("__gvf").cast("string").cast("decimal(28,18)")).cast("double") /
-            count(lit(1))).as("__gc")))
+          .agg(decMean(col("__gvf")).as("__gc")))
         roller.advance()
       }
     }
@@ -1020,21 +991,18 @@ object Similarity {
   def kmeansQuality(
       df: DataFrame, id: String, vecCol: String,
       assigned: DataFrame): DataFrame = {
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
     val x = df.select(col(id),
       posexplode(col(vecCol)).as(Seq("pos", "__gvf")))
     val members = assigned.join(x, id)
     val cents = members.groupBy(col("cluster"), col("pos"))
-      .agg((sum(col("__gvf").cast("string").cast("decimal(28,18)")).cast("double") /
-        count(lit(1))).as("__gc"))
+      .agg(decMean(col("__gvf")).as("__gc"))
     val dv = col("__gvf").cast("double") - col("__gc")
     val perVec = members.join(broadcast(cents), Seq("cluster", "pos"))
       .groupBy(col(id), col("cluster"))
       .agg(sum(absorb(dv * dv)).as("__gd"))
     perVec.groupBy(col("cluster"))
       .agg(count(lit(1)).as("n"),
-        sum(col("__gd")).cast("string").cast("double").as("sse"))
+        toD(sum(col("__gd"))).as("sse"))
   }
 
   /**
@@ -1071,9 +1039,6 @@ object Similarity {
    */
   def nearestCentroid(
       df: DataFrame, id: String, labelCol: String, vecCol: String): DataFrame = {
-    def absorb(c: Column) =
-      c.cast("float").cast("double").cast("string").cast("decimal(28,18)")
-    def d(c: String) = col(c).cast("string").cast("double")
     val cent = meanEmbedding(df, labelCol, vecCol)
       .select(col(labelCol).as("__gcl"), col("pos"), col("mean").as("__gc"))
     // spread before the explode: the dot fan-out (n·d·|classes| decimal
@@ -1093,9 +1058,9 @@ object Similarity {
       .groupBy(col(id), col("__gcl"))
       .agg(sum(absorb(col("__gv") * col("__gc"))).as("__gdot"))
     val m = dots.join(vnorm, id).join(broadcast(cnorm), "__gcl")
+    val Seq(dot, nv, nc) = Seq("__gdot", "__gnv", "__gnc").map(c => toD(col(c)))
     val scored = m.select(col(id), col("__gcl"),
-      when(d("__gnv") > 0 && d("__gnc") > 0,
-        d("__gdot") / (sqrt(d("__gnv")) * sqrt(d("__gnc")))).as("__gcos"))
+      when(nv > 0 && nc > 0, dot / (sqrt(nv) * sqrt(nc))).as("__gcos"))
     val best = scored.withColumn("__grk", row_number().over(
       Window.partitionBy(col(id))
         .orderBy(col("__gcos").desc_nulls_last, col("__gcl").asc)))

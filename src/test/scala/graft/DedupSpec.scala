@@ -252,8 +252,8 @@ class DedupSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       finally spark.conf.unset("graft.cc.contractMinEdges")
     assert(got == unionFind(chain ++ clique))
-    assert(Dedup.lastCcRounds >= 2 && Dedup.lastCcRounds <= 25)
-    val counts = Dedup.lastCcEdgeCounts
+    assert(Dedup.lastCc.get.rounds >= 2 && Dedup.lastCc.get.rounds <= 25)
+    val counts = Dedup.lastCc.get.edgeCounts
     assert(counts.nonEmpty, "expected per-round contracted-edge telemetry")
     assert(counts.zip(counts.tail).forall { case (a, b) => b <= a },
       s"contracted edge counts must be non-increasing, got $counts")
@@ -278,7 +278,7 @@ class DedupSpec extends SparkSpec {
     val edges = chain ++ clique ++ noise
     val default = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
       .as[(Long, Long)].collect().toMap
-    assert(Dedup.lastCcFrozenCounts.isEmpty,
+    assert(Dedup.lastCc.get.frozenCounts.isEmpty,
       "gate at 1M edges must keep the unfrozen path on a tiny graph")
     spark.conf.set("graft.cc.contractMinEdges", "0")
     val frozenPath =
@@ -288,9 +288,9 @@ class DedupSpec extends SparkSpec {
     assert(frozenPath == default, "settled-exit labels must equal the default path")
     assert(frozenPath == unionFind(edges))
     // the exit actually engaged and the end resolution ran
-    assert(Dedup.lastCcFrozenCounts.nonEmpty && Dedup.lastCcFrozenCounts.sum > 0,
-      s"expected frozen-exit telemetry, got ${Dedup.lastCcFrozenCounts}")
-    assert(Dedup.lastCcResolveRounds >= 1,
+    assert(Dedup.lastCc.get.frozenCounts.nonEmpty && Dedup.lastCc.get.frozenCounts.sum > 0,
+      s"expected frozen-exit telemetry, got ${Dedup.lastCc.get.frozenCounts}")
+    assert(Dedup.lastCc.get.resolveRounds >= 1,
       "frozen mappings must be resolved by at least one end jump round")
   }
 

@@ -74,4 +74,46 @@ class ExactSpec extends SparkSpec {
       assert(got == want, s"seed=$seed")
     }
   }
+
+  test("toDec/absorb/toD pin the shortest-string encoding on literal values") {
+    val df = Seq(Some(0.1), Some(-2.5), None).toDF("v")
+      .withColumn("f", col("v").cast("float"))
+    val rows = df.select(Exact.toDec(col("v")), Exact.absorb(col("v")),
+        Exact.toD(Exact.toDec(col("v"))), Exact.toDec(col("f")),
+        Exact.toDec(col("v"), "decimal(38,30)"))
+      .collect()
+    def dec(i: Int, c: Int) =
+      Option(rows(i).getDecimal(c)).map(_.toPlainString).orNull
+    // 0.1 as a double parses exactly; through FLOAT it keeps the float's
+    // 17-digit double image; a float enters through its own shortest form
+    assert(dec(0, 0) == "0.100000000000000000")
+    assert(dec(0, 1) == "0.100000001490116120")
+    assert(rows(0).getDouble(2) == 0.1)
+    assert(dec(0, 3) == "0.100000000000000000")
+    assert(dec(0, 4) == "0.100000000000000000000000000000")
+    assert(dec(1, 0) == "-2.500000000000000000")
+    assert(dec(1, 1) == "-2.500000000000000000")
+    assert(rows(1).getDouble(2) == -2.5)
+    assert((0 to 4).forall(rows(2).isNullAt))
+    // the direct cast this encoding avoids lands on the float's widened
+    // double image, not the float's shortest form (DuckDB's reading)
+    assert(df.select(col("f").cast("decimal(28,18)")).head.getDecimal(0).toPlainString ==
+      "0.100000001490116120")
+  }
+
+  test("decMean is the exact decimal sum over every row of the group") {
+    val df = Seq(("a", Some(0.1)), ("a", Some(0.2)), ("b", Some(0.1)), ("b", Some(0.2)),
+      ("b", None), ("c", Some(-0.75))).toDF("g", "v")
+    val got = df.groupBy("g").agg(Exact.decMean(col("v")).as("m"))
+      .as[(String, Double)].collect().toMap
+    // a double sum would give (0.1 + 0.2) / 2 = 0.15000000000000002
+    assert(got == Map("a" -> 0.15, "b" -> 0.3 / 3, "c" -> -0.75))
+  }
+
+  test("a sum through absorb is bit-identical across partitionings") {
+    val vals = Seq.tabulate(1000)(i => math.log(i + 2.0) * (if (i % 3 == 0) -1.3 else 0.7))
+    def total(parts: Int): Double = vals.toDF("v").repartition(parts)
+      .agg(Exact.toD(sum(Exact.absorb(col("v"))))).head.getDouble(0)
+    assert(total(1) == total(8))
+  }
 }

@@ -18,11 +18,10 @@ class GatesSpec extends AnyFunSuite {
     "graft.rank.rangeRows" -> (2L << 20),
     "graft.ssjoin.hashRows" -> 400000L,
     "graft.cc.contractMinEdges" -> 1000000L,
-    "graft.cc.loopAqeOffEdges" -> 32000000L,
-    "graft.pagerank.loopAqeOffEdges" -> 32000000L,
+    "graft.loop.aqeOffEdges" -> 32000000L,
     "graft.nb.gridCells" -> 1000000L)
 
-  test("the table holds exactly the seven gates, each at its default") {
+  test("the table holds exactly the six gates, each at its default") {
     assert(Gates.all.map(g => g.key -> g.default) === defaults)
     Gates.all.foreach(g => assert(Gates.resolve(g, None, None) === g.default, g.key))
   }
@@ -32,10 +31,9 @@ class GatesSpec extends AnyFunSuite {
       "graft.rank.rangeBytes" -> "SPARK_GRAFT_RANK_RANGE_BYTES",
       "graft.rank.rangeRows" -> "SPARK_GRAFT_RANK_RANGE_ROWS",
       "graft.ssjoin.hashRows" -> "SPARK_GRAFT_SSJOIN_HASH_ROWS",
-      "graft.cc.contractMinEdges" -> "SPARK_GRAFT_CC_CONTRACT_MIN_EDGES",
-      "graft.cc.loopAqeOffEdges" -> "SPARK_GRAFT_CC_LOOP_AQE_OFF_EDGES",
-      "graft.pagerank.loopAqeOffEdges" -> "SPARK_GRAFT_PAGERANK_LOOP_AQE_OFF_EDGES")
+      "graft.cc.contractMinEdges" -> "SPARK_GRAFT_CC_CONTRACT_MIN_EDGES")
     established.foreach { case (k, e) => assert(Gates.envName(k) === e) }
+    assert(Gates.LoopAqeOffEdges.env === "SPARK_GRAFT_LOOP_AQE_OFF_EDGES")
     assert(Gates.NbGridCells.env === "SPARK_GRAFT_NB_GRID_CELLS")
     assert(Gates.all.map(_.env).distinct.size === Gates.all.size)
   }

@@ -1,0 +1,55 @@
+package graft
+
+import java.io.File
+import scala.io.Source
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/**
+ * Source-layout rules that no compiler enforces, checked by reading the
+ * files (no session): the shortest-string decimal encoding is spelled
+ * only in `graft.functions.Exact`, and the environment is read only
+ * through the gate table.
+ */
+class SourceRulesSpec extends AnyFunSuite {
+
+  private val root = new File("src/main/scala/graft")
+
+  private def read(f: File): String = {
+    val src = Source.fromFile(f, "UTF-8")
+    try src.mkString finally src.close()
+  }
+
+  private def operatorFiles: Seq[File] = {
+    val dir = new File(root, "operators")
+    assert(dir.isDirectory, s"run from the repository root: ${dir.getAbsolutePath}")
+    dir.listFiles().filter(_.getName.endsWith(".scala")).sortBy(_.getName).toSeq
+  }
+
+  /** `file:line` of every match of `pattern` in `files`. */
+  private def hits(files: Seq[File], pattern: String): Seq[String] =
+    files.flatMap { f =>
+      val text = read(f)
+      pattern.r.findAllMatchIn(text)
+        .map(m => s"${f.getName}:${text.take(m.start).count(_ == '\n') + 1}")
+    }
+
+  test("operators spell the decimal encoding only through graft.functions.Exact") {
+    val rules = Seq(
+      "decimal(28,18) type" -> """decimal\(28,18\)""",
+      "string-cast chain" -> """cast\("string"\)\s*\.cast\(""",
+      "local absorb" -> """def\s+absorb\b""")
+    val files = operatorFiles
+    assert(files.size > 10)
+    rules.foreach { case (what, pattern) =>
+      val found = hits(files, pattern)
+      assert(found.isEmpty, s"$what outside Exact: ${found.mkString(", ")}")
+    }
+  }
+
+  test("under operators/ and in Sessions, only Gates.scala reads sys.env") {
+    val found = hits(operatorFiles :+ new File(root, "Sessions.scala"), """sys\.env""")
+    assert(found.nonEmpty, "the gate table must still read the env")
+    assert(found.forall(_.startsWith("Gates.scala:")), s"sys.env read at ${found.mkString(", ")}")
+  }
+}
