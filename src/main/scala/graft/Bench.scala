@@ -12,6 +12,11 @@ package graft
  * state, not first-query JVM warm-up.
  */
 object Bench {
+  /** The mainline core count: the default `SPARK_GRAFT_CPUS`, and the
+   *  one count whose artifacts and tail baseline carry no `_c<cpus>`
+   *  suffix. Every artifact also stamps the cpus it ran at. */
+  val MainlineCpus = "32"
+
   /** 1-minute load average, or -1 where /proc is unavailable. */
   private def load1: Double =
     try {
@@ -22,7 +27,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", MainlineCpus)
 
     // --- contention guard. A concurrent heavy process once inflated a
     // full run 2.6x on unchanged code, and the artifact was
@@ -144,7 +149,7 @@ object Bench {
     // number); an explicit SPARK_GRAFT_BENCH_PREV naming an artifact
     // from another core count (or one too old to carry the stamp) is
     // not a baseline for this run.
-    val cpuSuffix = if (cpus == "32") "" else s"_c$cpus"
+    val cpuSuffix = if (cpus == MainlineCpus) "" else s"_c$cpus"
     val cores = spark.sparkContext.defaultParallelism
     val prevTimes: Map[String, Double] = {
       val explicit = sys.env.get("SPARK_GRAFT_BENCH_PREV")

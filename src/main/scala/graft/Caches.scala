@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * The caller-owned-cache contract, in one place.
@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
  *    release when done.
  *
  * Operators whose persisted frame is DEAD before return (training
- * passes that end in a `localCheckpoint`ed model frame: `pcaPower`,
+ * passes that end in a checkpointed model frame: `pcaPower`,
  * `logisticWeights`, `kmeansFit`'s feature frame) must instead
  * eager-unpersist inside the operator — `CacheHygieneSpec` audits every
  * persisting query entry for exactly that distinction: after
@@ -28,8 +28,38 @@ import org.apache.spark.sql.SparkSession
  */
 object Caches {
 
+  /** A checkpoint frame and what its one job counted: the exact row
+   *  count and, when asked, the exact sum of one long column. */
+  final case class Counted(df: DataFrame, rows: Long, sum: BigInt)(
+      private[graft] val rddId: Int)
+
   /**
-   * Rolling `localCheckpoint` for iterative operators (pointer-jumping
+   * The counted checkpoint, the one way graft checkpoints a frame.
+   *
+   * Contract: ONE eager job materializes `df` into local checkpoint
+   * blocks and returns, in the same pass over the rows, the row count
+   * and the exact sum of the long column `sumOf` (nulls skipped; 0 for
+   * an empty or all-null frame; exact past `Long.MaxValue`). The
+   * returned frame's plan carries those rows as its statistics —
+   * `rowCount` exact and `sizeInBytes` = rows × row width — instead of
+   * the origin plan's estimate (Spark's own checkpoint scan reports the
+   * origin's, join-inflated: q98's 403-row label frame estimated 2.95 M
+   * rows at sf0.01). Partitioning, ordering and constraints are the
+   * origin plan's, so a frame checkpointed after `repartition(n, k)`
+   * still joins on `k` with no exchange on its side. A loop that needs
+   * a count or a fixpoint sum of a frame it checkpoints reads it here
+   * instead of paying a second job.
+   *
+   * Blocks live until [[releaseAll]] (or a roller's [[CheckpointRoller.advance]]).
+   */
+  def checkpoint(df: DataFrame, sumOf: Option[String] = None): Counted = {
+    val (cp, rddId, rows, sum) =
+      org.apache.spark.sql.CountedCheckpoint.localCheckpoint(df, sumOf)
+    Counted(cp, rows, sum)(rddId)
+  }
+
+  /**
+   * Rolling counted checkpoints for iterative operators (pointer-jumping
    * CC, power/Lloyd/GD loops). Each iteration checkpoints one
    * generation of frames; once the NEXT generation is eagerly
    * materialized, the previous generation's blocks are dead — but
@@ -37,7 +67,7 @@ object Caches {
    * generations of state (audited by `CacheHygieneSpec`; at corpus
    * scale that is N iterations of cluster memory instead of 1).
    *
-   * Protocol: `roll(df)` eagerly checkpoints `df` into the current
+   * Protocol: `roll(df)` runs [[checkpoint]] on `df` into the current
    * generation (a generation may hold several frames — pcaPower
    * checkpoints a vector AND its norm per iteration); `advance()`
    * seals the generation and releases the blocks of the one BEFORE it,
@@ -50,22 +80,13 @@ object Caches {
     private var prev: Set[Int] = Set.empty
     private var cur: Set[Int] = Set.empty
 
-    /** Eagerly localCheckpoint `df`, tracking its blocks in the current
-     *  generation. Attribution is by registration diff, NARROWED to
-     *  checkpointed RDDs: the eager materialization may be the
-     *  first execution of some caller-owned Dataset cache (kmeans'
-     *  feature frame, a signature frame), whose buffer RDD registers at
-     *  that moment — attributing it to this generation would release a
-     *  cache the operator still reads. Checkpoint blocks are the only
-     *  thing a roller owns. */
-    def roll(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val next = df.localCheckpoint()
-      cur = cur ++ sc.getPersistentRDDs.collect {
-        case (id, r) if !before(id) && r.isCheckpointed => id
-      }
-      next
+    /** [[checkpoint]] `df` into the current generation. A roller owns
+     *  exactly the checkpoint RDDs it made, never a caller-owned Dataset
+     *  cache the checkpoint job happened to materialize first. */
+    def roll(df: DataFrame, sumOf: Option[String] = None): Counted = {
+      val c = checkpoint(df, sumOf)
+      cur += c.rddId
+      c
     }
 
     /** Seal the current generation; release the superseded one. */

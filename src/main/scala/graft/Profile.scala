@@ -24,7 +24,7 @@ object Profile {
     val names = args(0).split(",").toSeq.filter(_.nonEmpty)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), Some(sfDir))
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.MainlineCpus), Some(sfDir))
     spark.sparkContext.setLogLevel("WARN")
 
     final class J(val id: Int, val desc: String, val start: Long,

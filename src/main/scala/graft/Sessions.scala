@@ -46,11 +46,16 @@ object Sessions {
   }
 
   /** Static shuffle width for a NARROW loop (see below): one partition
-   *  per ~250k narrow loop rows, floored at 4 (a tiny loop frame needs
-   *  no more; the session default would pay ~cores tasks per exchange
-   *  per round). */
+   *  per ~250k narrow loop rows, floored at 1 — a loop under 500k rows
+   *  runs one task per stage, and loops of at least 1 M rows keep the
+   *  width the old floor of 4 gave them. Below that every extra task
+   *  is per-round scheduling over a few hundred KB: on q62 at sf0.1
+   *  (8,000 directed edges, 4 cores, perfbench `curation_loops`, 5
+   *  alternating pairs, counted checkpoints on both sides) floor 1 ran
+   *  a pass in 1.06 s median against 1.48 s at floor 4, lower in every
+   *  pair. */
   def loopShufflePartitions(spark: SparkSession, rows: Long): Int =
-    Gates.width(spark.sparkContext.defaultParallelism, rows, 250000L, 4)
+    Gates.width(spark.sparkContext.defaultParallelism, rows, 250000L, 1)
 
   /**
    * Scoped AQE initial-partition override for ITERATIVE operators.
@@ -66,7 +71,7 @@ object Sessions {
    * per ~1M loop rows (loop rows are narrow — two longs — so 1M rows
    * ≈ 16-30 MB, Spark's advisory size), floored at cores like the input
    * rule. The conf is restored on exit; everything the loop
-   * materializes (localCheckpoints) runs under the override, and
+   * materializes (checkpoints) runs under the override, and
    * the returned frame is a checkpoint scan that plans no shuffles, so
    * the restore cannot race the result.
    *
@@ -79,11 +84,12 @@ object Sessions {
    * 10-100 ms orchestration over frames of a few MB. With AQE off the
    * whole round is ONE statically-planned job; the loop frames are
    * orders of magnitude below the sizes where AQE's coalescing/skew
-   * machinery earns its planning cost. Callers must pair this with
-   * explicit join-strategy hints: checkpoint-scan stats are unknown to
-   * the static planner, which would otherwise pick sort-merge for
-   * every loop join. Callers take the AQE regime instead when their
-   * `graft.loop.aqeOffEdges` gate is set to 0.
+   * machinery earns its planning cost. Callers pair this with explicit
+   * join-strategy hints, which predate checkpoint scans carrying their
+   * true row counts ([[Caches.checkpoint]]) and stay until an sf10 A/B
+   * shows the static planner's own picks match them. Callers take the
+   * AQE regime instead when their `graft.loop.aqeOffEdges` gate is set
+   * to 0.
    *
    * Session-conf scoping caveat: Spark has no per-plan conf, so a
    * CONCURRENT planner in the same session would see the override for

@@ -605,7 +605,7 @@ object Dedup {
    * graphs keep the win; shallow ones never pay.
    * Convergence is detected by the label-sum fixpoint: labels
    * are min-ids, so the per-vertex label is monotone nonincreasing and
-   * the (exact, decimal) sum strictly decreases until the fixpoint; an
+   * the exact (arbitrary-precision) sum strictly decreases until the fixpoint; an
    * unchanged sum means no label moved, which makes the next round's
    * propagation, compression, AND contraction identical — a true
    * fixpoint of the whole system.
@@ -626,12 +626,17 @@ object Dedup {
    * Scale shape: every round is two hash joins over (edges, labels)
    * plus the contraction's relabel joins over the (shrinking) edge
    * frame — no all-pairs, no driver-side graph. The driver loop is
-   * bounded (`maxIter`) and collects ONE scalar per round (the
+   * bounded (`maxIter`) and reads ONE scalar per round (the exact
    * convergence sum), matching the library's bounded agg-to-literal
-   * exception. `localCheckpoint` truncates the growing lineage each
-   * round so round N's plan does not replay rounds 1..N-1 (the
-   * standard iterative-algorithm requirement; on a cluster with a
-   * checkpoint dir, reliable `checkpoint` is the durable variant).
+   * exception — and reads it from the round's checkpoint job
+   * ([[graft.Caches.checkpoint]] counts rows and sums `label` in the
+   * pass that materializes the frame), so the sum, the contracted edge
+   * count and the frozen count cost no job of their own (q62 at sf0.1:
+   * 14 → 8 construction jobs, 33 → 21 stages). The checkpoint truncates the
+   * growing lineage each round so round N's plan does not replay
+   * rounds 1..N-1 (the standard iterative-algorithm requirement; on a
+   * cluster with a checkpoint dir, reliable `checkpoint` is the
+   * durable variant).
    * [[lastCc]] exposes round-count telemetry for scale evidence.
    *
    * Returns (id, component): one row per distinct vertex appearing in
@@ -640,63 +645,59 @@ object Dedup {
   def connectedComponents(
       pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
       maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+    val spark = pairs.sparkSession
+    // Every frame the loop materializes is a counted checkpoint
+    // (graft.Caches.checkpoint): its one job also returns the frame's
+    // row count and the exact sum of its `label` column, so the edge
+    // counts, frozen counts and fixpoint sums below cost no job of
+    // their own.
+    val Label = Some("label")
+    // rolling checkpoints: each round's label frame supersedes the
+    // previous one; the roller releases the dead generation instead of
+    // letting maxIter generations of blocks pile up (CacheHygieneSpec)
+    val roller = new graft.Caches.CheckpointRoller(spark)
+    // edges roll in their OWN generation sequence, advanced only when a
+    // new edge frame supersedes the old one: the label roller's fixed
+    // two-generation cadence would release the last contracted frame
+    // while later rounds still join it if contraction stops early (the
+    // count can fall below the gate mid-run)
+    val edgeRoller = new graft.Caches.CheckpointRoller(spark)
     // ONE scan of `pairs`, exploded into both directions — a self-union
     // would be two plan branches, i.e. the (possibly expensive: a whole
-    // LSH pipeline) pair generation evaluated twice
-    val edges0 = pairs
+    // LSH pipeline) pair generation evaluated twice. The edge
+    // checkpoint happens FIRST, under the caller's input-sized AQE
+    // ceiling — the pair-generation distinct is data-sized and must
+    // stay wide. Its exact row count then (a) gates contraction, (b)
+    // sizes the loop ceiling and (c) picks the loop execution regime.
+    val edges0 = edgeRoller.roll(pairs
       .select(explode(array(
         struct(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst")),
         struct(col(idB).cast("long").as("src"), col(idA).cast("long").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= col("dst") && col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val spark = pairs.sparkSession
-    // The edge materialization (one exact count of the persisted frame)
-    // happens FIRST, under the caller's input-sized AQE ceiling — the
-    // pair-generation distinct is data-sized and must stay wide. The
-    // count then (a) gates contraction, (b) sizes the loop ceiling and
-    // (c) picks the loop execution regime below.
-    val edgeCount0: Long = edges0.count()
-    // rolling checkpoints: each round's label frame supersedes the
-    // previous one; the roller releases the dead generation instead of
-    // letting maxIter generations of blocks pile up (CacheHygieneSpec)
-    val roller = new graft.Caches.CheckpointRoller(pairs.sparkSession)
-    // Exact decimal sum: label ids are arbitrary longs; a DOUBLE sum
-    // loses low bits past 2^53 and could report a false fixpoint.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val r = df.agg(sum(col("label").cast("decimal(38,0)"))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
+      .distinct())
+    edgeRoller.advance()
+    val edgeCount0: Long = edges0.rows
     val contractMin: Long = Gates.read(Gates.CcContractMinEdges, spark)
     // NARROW-LOOP regime (round-14): below `graft.loop.aqeOffEdges`
     // directed edges (default 32 M, env SPARK_GRAFT_LOOP_AQE_OFF_EDGES)
     // the loop runs with adaptive execution OFF at a static
     // loop-row-sized shuffle width, every loop join carries an explicit
-    // SHUFFLE_HASH hint (checkpoint-scan stats are unknown to the
-    // static planner, which would otherwise sort-merge every round),
-    // and the edge frame is re-laid hash(src) at the loop width so the
-    // per-round propagate join reuses the cached layout with NO edge
-    // exchange. Measured at sf0.1 (min-of-3, same labels bit-for-bit):
-    // q62 3.1→1.7 s, q98 3.7→1.7 s — the per-round cost was ~8 AQE
-    // stage-materialization jobs of 10-100 ms orchestration each, not
-    // data. Above the bar everything keeps the round-13 AQE path
-    // (runtime skew handling matters once loop frames are cluster-
-    // sized); the bar is conf/env-overridable for A/B runs (0 forces
-    // the AQE path).
+    // SHUFFLE_HASH hint, and the edge frame is re-laid hash(src) at the
+    // loop width so the per-round propagate join reuses the cached
+    // layout with NO edge exchange. Measured at sf0.1 (min-of-3, same
+    // labels bit-for-bit): q62 3.1→1.7 s, q98 3.7→1.7 s — the per-round
+    // cost was ~8 AQE stage-materialization jobs of 10-100 ms
+    // orchestration each, not data. Above the bar everything keeps the
+    // round-13 AQE path (runtime skew handling matters once loop frames
+    // are cluster-sized); the bar is conf/env-overridable for A/B runs
+    // (0 forces the AQE path).
     val smallLoop = edgeCount0 < Gates.read(Gates.LoopAqeOffEdges, spark)
     def hinted(df: DataFrame): DataFrame =
       if (smallLoop) df.hint("shuffle_hash") else df
     var iter = 0
     var edgeCount: Long = edgeCount0
     val edgeCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
-    // edges roll in their OWN generation sequence, advanced only when a
-    // new contraction supersedes the old frame: the label roller's
-    // fixed two-generation cadence would release the last contracted
-    // frame while later rounds still join it if contraction stops early
-    // (the count can fall below the gate mid-run)
-    val edgeRoller = new graft.Caches.CheckpointRoller(pairs.sparkSession)
     // Settled exit (round-10 verdict item 1): the per-round cost was the
     // FULL label frame — propagate + pointer-jump over every vertex even
     // after contraction had shrunk the edges to near-nothing (the q62
@@ -709,32 +710,31 @@ object Dedup {
     // carrying its label-at-exit, and the loop's joins run over the
     // contracted graph's vertex set only. Each frozen part is
     // checkpointed individually (its parent generation is released a
-    // round later, and an unpersisted localCheckpoint cannot recompute);
+    // round later, and an unpersisted checkpoint cannot recompute);
     // the end resolution pointer-jumps frozen chains onto the active
     // frame's final labels — O(log events) full-frame joins ONCE instead
     // of every round.
     val frozenParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val frozenCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val frozenRoller = new graft.Caches.CheckpointRoller(pairs.sparkSession)
+    val frozenRoller = new graft.Caches.CheckpointRoller(spark)
     // Loop shuffles are sized by the LOOP frames, not the input: at the
     // input-sized AQE ceiling every round paid per-partition overhead
     // across 3-4 exchanges (q62 at sf10: 39.8 s → 8.7 s under the
     // loop-sized ceiling — the round cost was partition count, not
-    // rows; see Sessions.withLoopPartitions). The labels init and the
-    // first fixpoint sum are loop-frame stages too, so they sit inside.
-    graft.Sessions.withLoopPartitions(pairs.sparkSession,
+    // rows; see Sessions.withLoopPartitions). The first round is a
+    // loop-frame stage too, so it sits inside.
+    graft.Sessions.withLoopPartitions(spark,
         math.max(1L, edgeCount0), narrow = smallLoop) {
     var curEdges =
       if (smallLoop) {
         // loop-layout edges: one deterministic hash(src) relayout at
         // the loop width — every round's propagate join then streams
         // the cached layout with no per-round edge exchange
-        val relaid = edgeRoller.roll(edges0.repartition(
-          graft.Sessions.loopShufflePartitions(spark, edgeCount0), col("src")))
+        val relaid = edgeRoller.roll(edges0.df.repartition(
+          graft.Sessions.loopShufflePartitions(spark, edgeCount0), col("src"))).df
         edgeRoller.advance()
-        edges0.unpersist()
         relaid
-      } else edges0
+      } else edges0.df
     // FUSED first round: propagating from the identity labeling needs
     // no label frame at all — min(self, min(neighbors)) is ONE
     // aggregation over the edge frame (the separate labels-init
@@ -747,14 +747,19 @@ object Dedup {
     val first = curEdges.groupBy(col("src"))
       .agg(min(col("dst")).as("__gm"))
       .select(col("src").as("id"), least(col("src"), col("__gm")).as("label"))
-    var labels = roller.roll {
+    val firstRound = roller.roll({
       val b = first.select(col("id").as("label"), col("label").as("__ll")).as("b")
       first.as("a").join(hinted(b), Seq("label"))
         .select(col("id"), col("__ll").as("label"))
-    }
+    }, Label)
     roller.advance()
+    var labels = firstRound.df
     iter = 1
-    var prev = labelSum(labels)
+    // The fixpoint test compares exact label sums, read off each label
+    // checkpoint's own job: label ids are arbitrary longs, so a DOUBLE
+    // sum would lose low bits past 2^53 and could report a false
+    // fixpoint.
+    var prev = firstRound.sum
     var converged = edgeCount0 == 0L
     while (!converged && iter < maxIter) {
       val viaNeighbors = curEdges
@@ -785,31 +790,27 @@ object Dedup {
           else
             propagated.as("a").join(hinted(b), Seq("label"), "left")
               .select(col("id"), coalesce(col("__ll"), col("label")).as("label"))
-        roller.roll(joined)
+        roller.roll(joined, Label)
       }
-      val cur = labelSum(compressed)
-      converged = cur.compareTo(prev) == 0
-      prev = cur
-      labels = compressed
+      converged = compressed.sum == prev
+      prev = compressed.sum
+      labels = compressed.df
       iter += 1
       roller.advance()
       if (!converged && iter >= 2 && iter < maxIter && edgeCount >= contractMin) {
         // Contract: rewrite each edge onto its endpoints' NEW labels and
         // drop self-loops (settled edges). Two relabel joins + a distinct
-        // over the current (shrinking) edge frame; the rolled checkpoint
-        // materializes it so the count below is a cached-partition scan.
+        // over the current (shrinking) edge frame; its checkpoint job
+        // counts the new edge frame.
         val contracted = edgeRoller.roll(curEdges
-          .join(hinted(compressed.select(col("id").as("src"), col("label").as("__ls"))), "src")
-          .join(hinted(compressed.select(col("id").as("dst"), col("label").as("__ld"))), "dst")
+          .join(hinted(labels.select(col("id").as("src"), col("label").as("__ls"))), "src")
+          .join(hinted(labels.select(col("id").as("dst"), col("label").as("__ld"))), "dst")
           .filter(col("__ls") =!= col("__ld"))
           .select(col("__ls").as("src"), col("__ld").as("dst"))
           .distinct())
         edgeRoller.advance()
-        // the initial persisted edge frame dies at its first contraction;
-        // later generations are checkpoints the edge roller releases
-        if (curEdges eq edges0) edges0.unpersist()
-        curEdges = contracted
-        edgeCount = contracted.count()
+        curEdges = contracted.df
+        edgeCount = contracted.rows
         edgeCounts += edgeCount
         // Settled exit: the active vertex set is exactly the contracted
         // frame's endpoints. Everything else leaves with (id, label) —
@@ -817,26 +818,28 @@ object Dedup {
         // id the active frame keeps evolving; the end resolution joins
         // it forward. activeIds is small post-shrink, so both splits
         // broadcast against the label frame.
-        val activeIds = contracted.select(col("src").as("id"))
-          .union(contracted.select(col("dst").as("id"))).distinct()
+        val activeIds = curEdges.select(col("src").as("id"))
+          .union(curEdges.select(col("dst").as("id"))).distinct()
         val frz = frozenRoller.roll(
           labels.join(hinted(activeIds), Seq("id"), "left_anti"))
-        frozenParts += frz
-        frozenCounts += frz.count()
-        labels = roller.roll(labels.join(hinted(activeIds), Seq("id"), "left_semi"))
+        frozenParts += frz.df
+        frozenCounts += frz.rows
+        val active = roller.roll(
+          labels.join(hinted(activeIds), Seq("id"), "left_semi"), Label)
         roller.advance()
+        labels = active.df
         // the label sum is now over a SHRUNK frame: rebaseline so the
         // next round's fixpoint compare is frame-consistent (a shrink
         // can only postpone convergence by one compare, never fake it)
-        prev = labelSum(labels)
+        prev = active.sum
       }
     }
-    if (curEdges eq edges0) edges0.unpersist()
-    // the final edge checkpoint (small-loop relayout or last
-    // contraction) is dead once the loop converges — the label frames
-    // are materialized checkpoints; two advances release every
-    // generation the edge roller still holds (CacheHygieneSpec: live
-    // caches must be referenced by the returned plan)
+    // the final edge checkpoint (the first edge frame, the small-loop
+    // relayout or the last contraction) is dead once the loop converges
+    // — the label frames are materialized checkpoints; two advances
+    // release every generation the edge roller still holds
+    // (CacheHygieneSpec: live caches must be referenced by the returned
+    // plan)
     edgeRoller.advance(); edgeRoller.advance()
     // Unconverged labels are MID-MERGE (multiple "keepers" inside one
     // true cluster) — silently returning them would ship duplicates.
@@ -867,25 +870,25 @@ object Dedup {
       // event adds at most one hop, so pointer jumping needs
       // O(log events) rounds over the reunited frame — paid once,
       // instead of every propagation round touching all |V| rows.
-      var all = roller.roll(labels.unionByName(
-        frozenParts.reduce(_ unionByName _)))
+      val reunited = roller.roll(labels.unionByName(
+        frozenParts.reduce(_ unionByName _)), Label)
       roller.advance()
       // the frozen part checkpoints are dead now (the union checkpoint
       // holds their rows); two advances walk them through the roller's
       // cur -> prev -> released lifecycle
       frozenRoller.advance(); frozenRoller.advance()
-      var p = labelSum(all)
+      var all = reunited.df
+      var p = reunited.sum
       var done = false
       var rIter = 0
       while (!done && rIter < maxIter) {
         val jumped = roller.roll(all.as("a")
           .join(hinted(all.select(col("id").as("label"), col("label").as("__ll")).as("b")),
             Seq("label"), "left")
-          .select(col("id"), coalesce(col("__ll"), col("label")).as("label")))
-        val cur2 = labelSum(jumped)
-        done = cur2.compareTo(p) == 0
-        p = cur2
-        all = jumped
+          .select(col("id"), coalesce(col("__ll"), col("label")).as("label")), Label)
+        done = jumped.sum == p
+        p = jumped.sum
+        all = jumped.df
         rIter += 1
         roller.advance()
       }
@@ -1144,30 +1147,28 @@ object Dedup {
       valueCols: Seq[String], labelId: String = "id"): DataFrame = {
     require(valueCols.nonEmpty, "goldenRecord needs value columns")
     // Broadcast the labels side while both frames are honestly small
-    // (the leaf-row estimate, not the join-inflated byte one). A labels
-    // frame is gated on its own estimate, so an unrelated or larger one
-    // is never broadcast unconditionally — except a checkpoint scan (a
-    // connectedComponents/dedupClusters result): its stats are the
-    // origin plan's join-inflated ones (q192's 403-row label frame
-    // estimates 2.95 M rows at sf0.01), and such a frame is
-    // record-bounded by the survivorship contract (one row per pair-
-    // graph vertex, vertices drawn from the record ids). This removes
-    // the sort-merge join's two exchanges AND keeps `labeled` on the
-    // records scan's (few-partition) layout — the persisted frame the
-    // base + per-column election branches re-read was previously laid
-    // out across a full shuffle width, so every branch paid a
-    // shuffle-width map stage over a tiny cache (round-14 profile:
-    // 0.5-1.2 s per branch of pure stage orchestration at sf0.1).
-    // Past the row bar the planner keeps its own (exchange) pick.
+    // (the leaf-row estimate, not the join-inflated byte one; a
+    // connectedComponents/dedupClusters result is a counted checkpoint
+    // scan, so its estimate is its true row count — q192's 403 rows at
+    // sf0.01). This removes the sort-merge join's two exchanges AND
+    // keeps `labeled` on the records scan's (few-partition) layout —
+    // the persisted frame the base + per-column election branches
+    // re-read was previously laid out across a full shuffle width, so
+    // every branch paid a shuffle-width map stage over a tiny cache
+    // (round-14 profile: 0.5-1.2 s per branch of pure stage
+    // orchestration at sf0.1). Past the row bar the planner keeps its
+    // own (exchange) pick.
+    val bcast = !RangeRank.manyLeafRows(records) && !RangeRank.manyLeafRows(labels)
     val labelsSel = labels.select(col(labelId).as("__gid"), col("cluster"))
-    val labelsSide =
-      if (!RangeRank.manyLeafRows(records) &&
-          (RangeRank.checkpointScan(labels) || !RangeRank.manyLeafRows(labels)))
-        broadcast(labelsSel)
-      else labelsSel
+    // The persisted join is keyed on the broadcast decision (the
+    // `__gbc` literal): Spark's cache lookup ignores join hints, so
+    // without it a second call on the same inputs would scan the first
+    // call's cached join whatever this call's gate decided.
     val labeled = records
-      .join(labelsSide, records(id) === col("__gid"), "left")
+      .join(if (bcast) broadcast(labelsSel) else labelsSel,
+        records(id) === col("__gid"), "left")
       .withColumn("cluster", coalesce(col("cluster"), col(id)))
+      .withColumn("__gbc", lit(bcast))
       .drop("__gid")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the union's column layout: (cluster, n_members, keeper_id,

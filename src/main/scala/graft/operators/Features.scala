@@ -1286,7 +1286,7 @@ object Features {
       // releases each superseded weight generation (CacheHygieneSpec)
       wdf = roller.roll(wdf.crossJoin(broadcast(g)).select(
         (0 to k).map(j =>
-          (col(s"__gw$j") - lit(lr) * col(s"__gg$j")).as(s"__gw$j")): _*))
+          (col(s"__gw$j") - lit(lr) * col(s"__gg$j")).as(s"__gw$j")): _*)).df
       roller.advance()
     }
     // the eager localCheckpoint above materialized the final weights;

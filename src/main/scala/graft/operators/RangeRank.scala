@@ -78,9 +78,10 @@ object RangeRank {
    *  still fires the gate on its true combined volume. Parquet leaves
    *  report COMPRESSED bytes, so this still under-counts true rows by
    *  the compression ratio — a conservative floor, never an
-   *  over-fire. Also the row estimate behind [[Par.widthFor]] and the
-   *  SSJoin-family row gate. */
-  private[operators] def estLeafRows(df: DataFrame): BigInt = {
+   *  over-fire. A checkpoint scan ([[graft.Caches.checkpoint]]) is a
+   *  leaf that carries its exact row count. Also the row estimate
+   *  behind [[Par.widthFor]] and the SSJoin-family row gate. */
+  private[graft] def estLeafRows(df: DataFrame): BigInt = {
     val plan = df.queryExecution.optimizedPlan
     plan.stats.rowCount.getOrElse(estRowsOf(plan))
   }
@@ -144,18 +145,10 @@ object RangeRank {
    *  multi-consumption guards (persist-before-probe) skip it. Anything
    *  with a join/aggregate/window upstream replays the whole pipeline
    *  per consumption and must be materialized instead. */
-  private[operators] def scanShaped(df: DataFrame): Boolean = overLeaf(df, _ => true)
-
-  /** Is this frame just (Project|Filter)* over a checkpointed RDD? Its
-   *  leaf stats are then the origin plan's, not the checkpoint's. */
-  private[operators] def checkpointScan(df: DataFrame): Boolean =
-    overLeaf(df, _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-
-  private def overLeaf(df: DataFrame,
-      leaf: org.apache.spark.sql.catalyst.plans.logical.LeafNode => Boolean): Boolean = {
+  private[operators] def scanShaped(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project}
     def walk(p: LogicalPlan): Boolean = p match {
-      case l: LeafNode => leaf(l)
+      case _: LeafNode => true
       case pr: Project => walk(pr.child)
       case f: Filter => walk(f.child)
       case _ => false
@@ -265,7 +258,8 @@ object RangeRank {
    * strictly-earlier partitions — strict because the caller's order is
    * total), and within a partition the id follows the local sort.
    *
-   * The result is EAGERLY local-checkpointed before returning: range
+   * The result is EAGERLY checkpointed ([[graft.Caches.checkpoint]],
+   * so its scan carries the true row count) before returning: range
    * boundaries come from sampling, so two plan branches re-executing
    * this subtree could assign DIFFERENT (still valid) ids — any
    * consumer that compares the ids across branches (the SSJoin's
@@ -280,7 +274,7 @@ object RangeRank {
     df.repartitionByRange(ord: _*)
       .sortWithinPartitions(ord: _*)
       .withColumn(idAs, monotonically_increasing_id())
-      .localCheckpoint()
+      .transform(graft.Caches.checkpoint(_).df)
 
   /** The exact single-window plan (today's shape) — kept for small
    *  inputs and high-cardinality keys, and as the semantics oracle the

@@ -735,10 +735,10 @@ object Relational {
     // planned checkpoint job; the norm frame is re-laid hash(src) at
     // the loop width once so the per-iteration join streams it with no
     // exchange, and the vertex-sized sums side carries an explicit
-    // SHUFFLE_HASH hint (checkpoint-scan stats are unknown to the
-    // static planner). Values are bit-identical: the checkpoint only
-    // materializes the same expression tree, and the per-target sums
-    // are order-free DECIMAL(38,30) string images.
+    // SHUFFLE_HASH hint (see Sessions.withLoopPartitions). Values are
+    // bit-identical: the checkpoint only materializes the same
+    // expression tree, and the per-target sums are order-free
+    // DECIMAL(38,30) string images.
     val edgeRows = norm0.count()
     val narrow = edgeRows < Gates.read(Gates.LoopAqeOffEdges, spark)
     def hinted(dfh: DataFrame): DataFrame =
@@ -747,11 +747,10 @@ object Relational {
       val roller = new graft.Caches.CheckpointRoller(spark)
       val edgeRoller = new graft.Caches.CheckpointRoller(spark)
       val norm =
-        if (narrow) {
-          val relaid = edgeRoller.roll(norm0.repartition(
-            graft.Sessions.loopShufflePartitions(spark, edgeRows), col(src)))
-          relaid
-        } else norm0
+        if (narrow)
+          edgeRoller.roll(norm0.repartition(
+            graft.Sessions.loopShufflePartitions(spark, edgeRows), col(src))).df
+        else norm0
       var sums: Option[DataFrame] = None
       (1 to iterations).foreach { _ =>
         val contrib = sums match {
@@ -767,7 +766,7 @@ object Relational {
                   col("__gW").cast("double"), "decimal(38,30)").as("__gc"))
         }
         sums = Some(roller.roll(
-          contrib.groupBy(col("__gdst")).agg(sum(col("__gc")).as("__gs"))))
+          contrib.groupBy(col("__gdst")).agg(sum(col("__gc")).as("__gs"))).df)
         roller.advance()
       }
       // iterations are materialized checkpoints now: the relaid edge

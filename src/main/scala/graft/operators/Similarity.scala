@@ -822,9 +822,9 @@ object Similarity {
       // exponential in the iteration count even over a cached cov
       val u = roller.roll(cov.join(v, cov("__gj") === v("pos"))
         .groupBy(col("__gi"))
-        .agg(toD(sum(absorb(col("__gcov") * col("__gval")))).as("__gu")))
+        .agg(toD(sum(absorb(col("__gcov") * col("__gval")))).as("__gu"))).df
       val norm = roller.roll(u.agg(
-        sqrt(toD(sum(absorb(col("__gu") * col("__gu"))))).as("__gnorm")))
+        sqrt(toD(sum(absorb(col("__gu") * col("__gu"))))).as("__gnorm"))).df
       roller.advance()
       v = u.crossJoin(broadcast(norm))
         .select(col("__gi").as("pos"),
@@ -954,7 +954,7 @@ object Similarity {
         // chain replays every earlier assignment per consumer
         cents = roller.roll(assigned.join(x, "__gvid")
           .groupBy(col("__gcid"), col("pos"))
-          .agg(decMean(col("__gvf")).as("__gc")))
+          .agg(decMean(col("__gvf")).as("__gc"))).df
         roller.advance()
       }
     }

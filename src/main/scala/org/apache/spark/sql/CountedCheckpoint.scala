@@ -1,0 +1,62 @@
+package org.apache.spark.sql
+
+import java.math.BigInteger
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.types.LongType
+
+/**
+ * An eager local checkpoint that keeps what its job counted. Spark's
+ * `Dataset.localCheckpoint` counts every partition and discards the
+ * counts, and gives the checkpoint scan the origin plan's statistics;
+ * `Dataset.ofRows` and the `LogicalRDD` statistics argument are private
+ * to this package, hence this bridge. graft calls it only from
+ * `graft.Caches`, so the job's call site reads
+ * `localCheckpoint at Caches.scala`.
+ */
+object CountedCheckpoint {
+
+  /**
+   * Checkpoint `df` in ONE job. Returns the checkpoint frame, the id of
+   * its RDD, the exact row count and the exact sum of the long column
+   * `sumOf` (nulls skipped; 0 for no column, no rows or only nulls).
+   * The frame's plan statistics are the true row count and rows × row
+   * width; its partitioning, ordering and constraints are the origin
+   * plan's. The job stores every block, so `LocalRDDCheckpointData`
+   * finds nothing left to compute when it marks the RDD checkpointed.
+   */
+  def localCheckpoint(df: DataFrame, sumOf: Option[String]): (DataFrame, Int, Long, BigInt) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val out = qe.executedPlan.output
+      val ord = sumOf.fold(-1) { c =>
+        val i = out.indexWhere(_.name == c)
+        require(i >= 0 && out(i).dataType == LongType, s"no long column $c to sum")
+        i
+      }
+      val rdd = qe.executedPlan.execute().map(_.copy()).localCheckpoint()
+      val parts = session.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+        var n = 0L
+        var sum = BigInteger.ZERO // exact past Long.MaxValue
+        it.foreach { r =>
+          n += 1
+          if (ord >= 0 && !r.isNullAt(ord)) sum = sum.add(BigInteger.valueOf(r.getLong(ord)))
+        }
+        (n, sum)
+      })
+      val rows = parts.map(_._1).sum
+      val sum = BigInt(parts.map(_._2).foldLeft(BigInteger.ZERO)(_ add _))
+      val origin = LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)
+      val stats = Statistics(
+        sizeInBytes = EstimationUtils.getSizePerRow(origin.output) * rows,
+        rowCount = Some(BigInt(rows)))
+      val counted = origin.copy()(session, Some(stats), Some(origin.constraints))
+      (classic.Dataset.ofRows(session, counted), rdd.id, rows, sum)
+    }
+  }
+}

@@ -1,0 +1,146 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+
+/**
+ * The counted-checkpoint contract ([[Caches.checkpoint]],
+ * [[Caches.CheckpointRoller.roll]]): one job per checkpoint, an exact
+ * row count and long-column sum from that job, true row statistics on
+ * the returned frame, and the origin plan's partitioning kept.
+ */
+class CachesSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  private def rolled[T](body: Caches.CheckpointRoller => T): T =
+    try body(new Caches.CheckpointRoller(spark)) finally Caches.releaseAll(spark)
+
+  /** Spark's own exact sum, the reference the roll must match. */
+  private def decimalSum(df: DataFrame): BigInt = {
+    val r = df.agg(sum(col("label").cast("decimal(38,0)"))).head()
+    if (r.isNullAt(0)) BigInt(0) else BigInt(r.getDecimal(0).toBigIntegerExact)
+  }
+
+  private def labels(vs: Option[Long]*): DataFrame =
+    vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "label")
+
+  test("the roll's sum equals the decimal(38,0) sum: nulls, negatives, totals past Long range") {
+    val M = Long.MaxValue
+    val frames = Seq(
+      "nulls and negatives" -> labels(Some(5L), None, Some(-12L), Some(40L), None, Some(-1L)),
+      "past Long.MaxValue" -> labels(Some(M), Some(M), Some(7L), None, Some(-3L), Some(M)),
+      "below Long.MinValue" -> labels(Some(Long.MinValue), Some(-M), None, Some(2L)),
+      "past the range and back" -> labels(Some(M), Some(10L), Some(-M), Some(-20L), Some(M - 1)))
+    rolled { roller =>
+      frames.foreach { case (what, df) =>
+        Seq(1, 3).foreach { n =>
+          val f = df.repartition(n)
+          val c = roller.roll(f, Some("label"))
+          assert(c.sum == decimalSum(f), s"$what over $n partitions")
+          assert(c.rows == df.count(), s"$what rows")
+          roller.advance()
+        }
+      }
+    }
+    assert(decimalSum(frames(1)._2) > BigInt(M), "the fixture must overflow a long")
+  }
+
+  test("an all-null or empty frame sums to 0; no sum column sums to 0") {
+    rolled { roller =>
+      val nulls = roller.roll(labels(None, None, None).repartition(2), Some("label"))
+      assert(nulls.sum == 0 && nulls.rows == 3)
+      val empty = roller.roll(labels(Some(3L)).filter(col("id") < 0), Some("label"))
+      assert(empty.sum == 0 && empty.rows == 0)
+      val unsummed = roller.roll(labels(Some(3L), Some(4L)))
+      assert(unsummed.sum == 0 && unsummed.rows == 2)
+    }
+  }
+
+  test("one job per roll: the count and the sum come from the checkpoint job") {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      // a multi-stage frame (an aggregation) under the narrow-loop
+      // regime: statically planned, so the whole plan is ONE job
+      withConf("spark.sql.adaptive.enabled" -> "false") {
+        rolled { roller =>
+          val df = spark.range(0, 5000, 1, 4)
+            .groupBy((col("id") % 97).as("id")).agg(min(col("id")).as("label"))
+          (1 to 3).foreach { i =>
+            sc.setJobGroup(s"caches-roll-$i", "one counted roll")
+            val c = roller.roll(df, Some("label"))
+            assert(c.rows == 97 && c.sum == (0L until 97L).sum)
+            roller.advance()
+          }
+        }
+      }
+      // fence: the listener queue is FIFO, so once the fence job's start
+      // is delivered every earlier event is too
+      sc.setJobGroup("caches-fence", "fence")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("caches-fence") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("caches-fence"), "listener bus never delivered the fence")
+      (1 to 3).foreach { i =>
+        val n = groups.toArray.count(_ == s"caches-roll-$i")
+        assert(n == 1, s"roll $i ran $n jobs")
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a frame rolled after repartition(n, src) joins on src with no exchange on its side") {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      rolled { roller =>
+        val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+        val edges = roller.roll(spark.range(0, 400, 1, 3)
+          .select(col("id").as("src"), (col("id") + 1).as("dst"))
+          .repartition(n, col("src"))).df
+        val other = spark.range(0, 400, 1, 5).select(col("id").as("src"), lit(1L).as("w"))
+        val joined = edges.join(other, "src")
+        val plan = joined.queryExecution.executedPlan
+        val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+        assert(exchanges.size == 1, s"expected one exchange (the other side):\n$plan")
+        assert(!exchanges.head.child.toString.contains("Scan ExistingRDD"),
+          s"the checkpoint side was re-shuffled:\n$plan")
+        assert(joined.count() == 400)
+      }
+    }
+  }
+
+  test("the rolled frame carries its exact row count, not the origin plan's estimate") {
+    rolled { roller =>
+      // a join: the origin estimate multiplies its children's sizes
+      val a = spark.range(0, 1000, 1, 2).select(col("id"), (col("id") % 10).as("label"))
+      val b = spark.range(0, 1000, 1, 2).filter(col("id") % 4 === 0).select(col("id"))
+      val origin = a.join(b, "id")
+      assert(origin.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
+      val c = roller.roll(origin)
+      val stats = c.df.queryExecution.optimizedPlan.stats
+      assert(c.rows == 250)
+      assert(stats.rowCount.contains(BigInt(250)))
+      // rows × row width (8 bytes of row overhead + two longs)
+      assert(stats.sizeInBytes == BigInt(250 * 24))
+      assert(c.df.count() == 250)
+    }
+  }
+}

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
@@ -586,32 +587,64 @@ class DedupSpec extends SparkSpec {
 
   test("goldenRecord broadcasts labels only while labels is under the row gate too") {
     // small records, labels frames of ~1000 rows (exact Range rowCount);
-    // auto-broadcast off, so any BroadcastHashJoin is goldenRecord's own.
-    // Each case gets its own labels size: the persisted join of one
-    // call would otherwise serve the other (cache lookup ignores hints).
+    // auto-broadcast off, so any BroadcastHashJoin is goldenRecord's own
     val records = Seq((1L, "A"), (2L, "A"), (3L, "B")).toDF("id", "brand")
-    def broadcasts(labelRows: Long, checkpointed: Boolean = false): Boolean = {
-      val labels0 = spark.range(labelRows)
-        .select(col("id"), (col("id") % 3).as("cluster"))
-      val labels = if (checkpointed) labels0.localCheckpoint() else labels0
+    def rangeLabels(n: Long): DataFrame =
+      spark.range(n).select(col("id"), (col("id") % 3).as("cluster"))
+    def broadcasts(labels: DataFrame): Boolean =
       Dedup.goldenRecord(records, labels, "id", Seq("brand"))
         .queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
-    }
     val autoKey = "spark.sql.autoBroadcastJoinThreshold"
     spark.conf.set(autoKey, "-1")
     try {
       spark.conf.set("graft.rank.rangeRows", "100000")
-      try assert(broadcasts(1000), "both frames under the bar: labels broadcasts")
+      try assert(broadcasts(rangeLabels(1000)), "both frames under the bar: labels broadcasts")
       finally spark.conf.unset("graft.rank.rangeRows")
       spark.conf.set("graft.rank.rangeRows", "100")
       try {
-        assert(!broadcasts(1001), "labels above the bar must not broadcast")
-        // a checkpointed label frame (a connectedComponents result)
-        // carries origin-plan stats; the records bound decides
-        assert(broadcasts(1002, checkpointed = true),
-          "a checkpoint-scan labels frame is record-bounded")
+        assert(!broadcasts(rangeLabels(1001)), "labels above the bar must not broadcast")
+        // 60 labels out of a join: the origin plan's estimate multiplies
+        // the join's children. Spark's own checkpoint scan reports that
+        // estimate; a counted checkpoint (a connectedComponents result)
+        // reports its true rows, under the bar
+        val joined = rangeLabels(60).join(spark.range(60), "id")
+        assert(!broadcasts(joined.localCheckpoint()),
+          "an origin-estimate checkpoint reads as large")
+        assert(broadcasts(Caches.checkpoint(joined).df),
+          "a counted checkpoint labels frame is gated on its true rows")
       } finally spark.conf.unset("graft.rank.rangeRows")
-    } finally spark.conf.unset(autoKey)
+    } finally {
+      spark.conf.unset(autoKey)
+      Caches.releaseAll(spark)
+    }
+  }
+
+  test("goldenRecord twice on the same inputs: each call plans its own join") {
+    // the persisted records-labels join must not serve a later call whose
+    // gate decided otherwise (Spark's cache lookup ignores join hints)
+    val records = Seq((1L, "A"), (2L, "A"), (3L, "B")).toDF("id", "brand")
+    val labels = spark.range(1000).select(col("id"), (col("id") % 3).as("cluster"))
+    def plan(rangeRows: String): String = {
+      spark.conf.set("graft.rank.rangeRows", rangeRows)
+      try Dedup.goldenRecord(records, labels, "id", Seq("brand"))
+        .queryExecution.executedPlan.toString
+      finally spark.conf.unset("graft.rank.rangeRows")
+    }
+    val autoKey = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(autoKey, "-1")
+    try {
+      val small = plan("100000")
+      val large = plan("100")
+      val smallAgain = plan("100000")
+      assert(small.contains("BroadcastHashJoin"), s"under the bar labels broadcasts:\n$small")
+      assert(!large.contains("BroadcastHashJoin"),
+        s"over the bar the call must not reuse the broadcast join:\n$large")
+      assert(smallAgain.contains("BroadcastHashJoin"),
+        s"back under the bar labels broadcasts again:\n$smallAgain")
+    } finally {
+      spark.conf.unset(autoKey)
+      Caches.releaseAll(spark)
+    }
   }
 
   test("clusterSizeHistogram: twins vs a template family") {

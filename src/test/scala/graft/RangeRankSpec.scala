@@ -368,4 +368,16 @@ class RangeRankSpec extends SparkSpec {
       assert(byId == byOrder, "id order must equal the (df, t) total order")
     } finally spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   }
+
+  test("estLeafRows reads a connected-components label frame's true row count") {
+    // q98's fuzzy part clusters at sf0.01: 403 labelled parts. The
+    // checkpoint scan used to report the origin plan's join-inflated
+    // estimate (2.95 M rows), firing every row gate on a tiny frame.
+    val sf001 = "/root/testdata/sf0.01"
+    try {
+      val labels = SparkEntry.queries("q98_fuzzy_clusters")(spark, sf001)
+      assert(RangeRank.estLeafRows(labels) == BigInt(403))
+      assert(labels.count() == 403)
+    } finally Caches.releaseAll(spark)
+  }
 }

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * Source-layout rules that no compiler enforces, checked by reading the
  * files (no session): the shortest-string decimal encoding is spelled
- * only in `graft.functions.Exact`, and the environment is read only
- * through the gate table.
+ * only in `graft.functions.Exact`, the environment is read only
+ * through the gate table, and every checkpoint is a counted one.
  */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -51,5 +51,19 @@ class SourceRulesSpec extends AnyFunSuite {
     val found = hits(operatorFiles :+ new File(root, "Sessions.scala"), """sys\.env""")
     assert(found.nonEmpty, "the gate table must still read the env")
     assert(found.forall(_.startsWith("Gates.scala:")), s"sys.env read at ${found.mkString(", ")}")
+  }
+
+  test("under src/main, only Caches.scala and its Spark bridge call localCheckpoint") {
+    val main = new File("src/main/scala")
+    def scalaFiles(d: File): Seq[File] =
+      d.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
+        if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val files = scalaFiles(main)
+    assert(files.exists(_.getName == "CountedCheckpoint.scala"), "the bridge moved")
+    val found = hits(files, """\.localCheckpoint\b""")
+    assert(found.exists(_.startsWith("Caches.scala:")), "Caches must still call the bridge")
+    assert(found.forall(h => h.startsWith("Caches.scala:") || h.startsWith("CountedCheckpoint.scala:")),
+      s"localCheckpoint called at ${found.mkString(", ")}")
   }
 }
