@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{CountedCheckpoint, DataFrame, SparkSession}
 
 /**
  * The caller-owned-cache contract, in one place.
@@ -53,8 +53,7 @@ object Caches {
    * Blocks live until [[releaseAll]] (or a roller's [[CheckpointRoller.advance]]).
    */
   def checkpoint(df: DataFrame, sumOf: Option[String] = None): Counted = {
-    val (cp, rddId, rows, sum) =
-      org.apache.spark.sql.CountedCheckpoint.localCheckpoint(df, sumOf)
+    val (cp, rddId, rows, sum) = CountedCheckpoint.localCheckpoint(df, sumOf)
     Counted(cp, rows, sum)(rddId)
   }
 
@@ -92,7 +91,7 @@ object Caches {
     /** Seal the current generation; release the superseded one. */
     def advance(): Unit = {
       val reg = spark.sparkContext.getPersistentRDDs
-      prev.foreach(id => reg.get(id).foreach(_.unpersist(true)))
+      prev.foreach(id => reg.get(id).foreach(CountedCheckpoint.release))
       prev = cur
       cur = Set.empty
     }
@@ -105,11 +104,11 @@ object Caches {
    * `localCheckpoint` blocks (iteration frames in
    * connectedComponents/pcaPower/kmeansFit/logisticWeights), which
    * otherwise sit in the context until the ContextCleaner GCs them.
-   * Blocking unpersist: a caller benchmarking the NEXT query must not
+   * Blocking release: a caller benchmarking the NEXT query must not
    * race block eviction.
    */
   def releaseAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    spark.sparkContext.getPersistentRDDs.values.foreach(CountedCheckpoint.release)
   }
 }

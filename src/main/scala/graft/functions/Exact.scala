@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
  * DECIMAL(18,s) cast ([[decSum]], [[decAvg]], [[decCorr]], the moment
  * builders) for values of known decimal precision, and the
  * shortest-string DECIMAL(28,18) encoding ([[toDec]], [[absorb]],
- * [[toD]], [[decMean]]) for arbitrary doubles and floats.
+ * [[toD]], [[decMean]]) for arbitrary doubles and floats. One kernel,
+ * [[Moments]], spells the Pearson, OLS and variance closed forms over
+ * those exact sums; operators call its finishers instead.
  *
  * Cost: the per-row double→decimal cast goes through BigDecimal and is
  * the dominant cost of these aggregates (measured ~4.6× a plain double
@@ -77,28 +79,98 @@ object Exact {
   /** DECIMAL(28,18) zero: the [[toDec]]-typed default of a coalesce. */
   def decZero: Column = lit(0).cast("decimal(28,18)")
 
+  // ---- the moment-statistics kernel ----
+
+  /**
+   * The second moments of an (x, y) sample — n, Σx, Σy, Σxy, Σx², Σy² —
+   * and the one spelling of the closed forms graft finishes them with
+   * (Pearson, OLS, population variance). The fields may be aggregate
+   * expressions ([[Moments.sums]]), window aggregates, or references to
+   * aggregated columns ([[Moments.named]]). The finishers take them as
+   * doubles and combine them in one fixed IEEE sequence, which every
+   * oracle spells verbatim over the same exact sums; a value still
+   * holding the exact decimal sums is only for [[columns]] to alias.
+   *
+   * Two things stay with the caller, because each oracle mirrors its own
+   * site's: how the exact decimal sums become doubles (a direct
+   * `.cast("double")` and [[toD]]'s string detour can differ in the last
+   * bit), and the degenerate-sample guard (`when(varX > 0, …)`, exact
+   * min == max flags, `n > 0`).
+   *
+   * Caveat: a decimal→double read is only engine-identical while the sum
+   * stays below 2^53 scaled units — beyond that the cast itself rounds,
+   * and engines may round differently. Pick scales and input magnitudes
+   * accordingly.
+   */
+  final case class Moments(
+      n: Column, sx: Column, sy: Column, sxy: Column, sxx: Column, syy: Column) {
+    /** n·Σxy − Σx·Σy: n² times the population covariance. */
+    def cov: Column = n * sxy - sx * sy
+    /** n·Σx² − (Σx)²: n² times the population variance of x. A
+     *  zero-variance sample leaves a ±few-ulp residue of EITHER sign
+     *  after the decimal→double reads (n identical 0.1 values). */
+    def varX: Column = n * sxx - sx * sx
+    /** n·Σy² − (Σy)², as [[varX]]. */
+    def varY: Column = n * syy - sy * sy
+    /** Pearson correlation (unlike `corr`, whose streaming merge formula
+     *  is engine-specific). */
+    def corr: Column = cov / (sqrt(varX) * sqrt(varY))
+    /** OLS slope of y on x. */
+    def slope: Column = cov / varX
+    /** OLS intercept through the means, for the caller's `slope` (its
+     *  guarded expression, or the slope column it already added). */
+    def intercept(slope: Column): Column = (sy - slope * sx) / n
+    /** Population standard deviation of x. The radicand is clamped at 0:
+     *  sqrt of [[varX]]'s negative residue would be NaN here and an
+     *  ERROR in DuckDB, and `greatest(v, 0)` is bit-neutral for every
+     *  non-degenerate sample, so oracles mirror it verbatim. */
+    def stddevPop: Column = sqrt(greatest(varX, lit(0d))) / n
+
+    /** The aggregate columns as `nAs`, `__gsx`, `__gsy`, `__gsxy`,
+     *  `__gsxx` and `__gsyy` ([[Moments.named]] reads them back); a site
+     *  that never uses Σy² leaves it out with `withYY = false`. */
+    def columns(nAs: String, withYY: Boolean = true): Seq[Column] =
+      Seq(n.as(nAs), sx.as("__gsx"), sy.as("__gsy"), sxy.as("__gsxy"), sxx.as("__gsxx")) ++
+        (if (withYY) Seq(syy.as("__gsyy")) else Nil)
+  }
+
+  object Moments {
+    /** One variable: x paired with itself, for the x finishers. */
+    def univariate(n: Column, sx: Column, sxx: Column): Moments =
+      Moments(n, sx, sx, sxx, sxx, sxx)
+
+    /**
+     * The exact moment aggregates of (x, y): n = count(*) and Σ of every
+     * moment term. `x` and `y` are decimal factors, so the products are
+     * exact (`term` = identity), or doubles whose terms each take the
+     * DECIMAL(28,18) encoding before summing (`term` = [[toDec]]).
+     * `read` applies to every aggregate — `_.cast("double")` to finish
+     * in the same projection, identity to alias the exact sums and read
+     * them after the aggregation.
+     */
+    def sums(
+        x: Column, y: Column, term: Column => Column = identity,
+        read: Column => Column = identity): Moments =
+      Moments(read(count(lit(1))), read(sum(term(x))), read(sum(term(y))),
+        read(sum(term(x * y))), read(sum(term(x * x))), read(sum(term(y * y))))
+
+    /** The moments aggregated under [[Moments.columns]]' names, each sum
+     *  through `read`; `n` is the caller's read of its count column. */
+    def named(n: Column, read: Column => Column = identity): Moments = {
+      def r(name: String) = read(col(name))
+      Moments(n, r("__gsx"), r("__gsy"), r("__gsxy"), r("__gsxx"), r("__gsyy"))
+    }
+  }
+
   /**
    * Order-independent Pearson correlation: every moment (Σx, Σy, Σxy,
-   * Σx², Σy²) is an exact decimal sum, and only the final closed-form
-   * combination runs in double — so the result is bit-stable across
+   * Σx², Σy²) is an exact decimal sum, and only the final
+   * [[Moments.corr]] runs in double — so the result is bit-stable across
    * partitionings AND reproducible by any engine that writes the same
-   * closed form over the same exact sums (unlike `corr`, whose streaming
-   * merge formula is engine-specific).
-   *
-   * Caveat: the final decimal→double casts are only engine-identical
-   * while each sum stays below 2^53 scaled units — beyond that the cast
-   * itself rounds, and engines may round differently. Pick `scale` (and
-   * input magnitudes) accordingly.
+   * closed form over the same exact sums.
    */
-  def decCorr(x: Column, y: Column, scale: Int = 4): Column = {
-    val n = count(lit(1)).cast("double")
-    val sx = sum(dec(x, scale)).cast("double")
-    val sy = sum(dec(y, scale)).cast("double")
-    val sxy = sum(dec(x, scale) * dec(y, scale)).cast("double")
-    val sxx = sum(dec(x, scale) * dec(x, scale)).cast("double")
-    val syy = sum(dec(y, scale) * dec(y, scale)).cast("double")
-    (n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))
-  }
+  def decCorr(x: Column, y: Column, scale: Int = 4): Column =
+    Moments.sums(dec(x, scale), dec(y, scale), read = _.cast("double")).corr
 
   /**
    * Order-independent population skewness: m₃ / m₂^1.5 from exact raw
@@ -148,17 +220,8 @@ object Exact {
       sum(d2 * d2).cast("double"))
   }
 
-  /** Order-independent population standard deviation (same construction).
-   *  The radicand is clamped at 0: for a zero-variance group the exact
-   *  sums cancel only up to the decimal→double casts, and the residual
-   *  can land a few ulps NEGATIVE (e.g. n identical 0.1 values) — sqrt
-   *  would then return NaN here and ERROR in DuckDB. `greatest(x, 0)`
-   *  is bit-neutral for every non-degenerate group, so oracles mirror
-   *  it verbatim. */
-  def decStddevPop(x: Column, scale: Int = 4): Column = {
-    val n = count(lit(1)).cast("double")
-    val sx = sum(dec(x, scale)).cast("double")
-    val sxx = sum(dec(x, scale) * dec(x, scale)).cast("double")
-    sqrt(greatest(n * sxx - sx * sx, lit(0d))) / n
-  }
+  /** Order-independent population standard deviation (same construction,
+   *  [[Moments.stddevPop]]'s clamped radicand). */
+  def decStddevPop(x: Column, scale: Int = 4): Column =
+    Moments.sums(dec(x, scale), dec(x, scale), read = _.cast("double")).stddevPop
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.functions.Exact.{absorb, toD, toDec}
 import graft.functions.TextFns
 
@@ -729,9 +730,10 @@ object Curation {
       sum(col("__gc") * col("__gc")).as("__gcc"))
       .filter(col("df") >= minDf)
     val dfD = col("df").cast("double")
-    val mean = col("n_total").cast("double") / dfD
-    val variance = (dfD * col("__gcc").cast("double") -
-      col("n_total").cast("double") * col("n_total").cast("double")) / (dfD * dfD)
+    val total = col("n_total").cast("double")
+    val mean = total / dfD
+    val variance =
+      Exact.Moments.univariate(dfD, total, col("__gcc").cast("double")).varX / (dfD * dfD)
     m.select(col("token"), col("df"), col("n_total"),
       (variance / mean).as("burstiness"))
   }
@@ -831,19 +833,12 @@ object Curation {
     val v = ranked.select(
       fl(log(col("__gr").cast("double"))).as("__gx"),
       fl(log(col("__gc").cast("double"))).as("__gy"))
-    val m = v.agg(
-      count(lit(1)).as("n"),
-      sum(toDec(col("__gx"))).as("__gsx"),
-      sum(toDec(col("__gy"))).as("__gsy"),
-      sum(toDec(col("__gx") * col("__gy"))).as("__gsxy"),
-      sum(toDec(col("__gx") * col("__gx"))).as("__gsxx"))
-    val nD = col("n").cast("double")
-    val Seq(sx, sy, sxy, sxx) =
-      Seq("__gsx", "__gsy", "__gsxy", "__gsxx").map(c => toD(col(c)))
-    val den = nD * sxx - sx * sx
-    val slope = (nD * sxy - sx * sy) / den
-    m.withColumn("slope", when(den > 0, slope))
-      .withColumn("intercept", when(den > 0, (sy - col("slope") * sx) / nD))
+    val sums = Exact.Moments.sums(col("__gx"), col("__gy"), term = toDec(_))
+      .columns("n", withYY = false)
+    val mm = Exact.Moments.named(col("n").cast("double"), toD)
+    v.agg(sums.head, sums.tail: _*)
+      .withColumn("slope", when(mm.varX > 0, mm.slope))
+      .withColumn("intercept", when(mm.varX > 0, mm.intercept(col("slope"))))
       .select(col("n"), col("slope"), col("intercept"))
   }
 

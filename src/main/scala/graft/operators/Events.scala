@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.functions.Exact.{absorb, toD}
 
 /**
@@ -631,17 +632,19 @@ object Events {
   }
 
   /**
-   * The full ACF table: [[autocorr]] at every lag 1..`maxLag` in ONE
-   * pass — the correlogram a seasonality hunt reads (a weekly cycle in
-   * daily data spikes lag 7), where calling [[autocorr]] per lag would
-   * re-sort the series `maxLag` times. All lag columns ride one window
-   * (one sort, one shuffle on the keys); the per-lag pair rows then
-   * stack via an explode of a `maxLag`-element struct array (a bounded
-   * per-row fan-out, the barrier that keeps the lag window evaluated
-   * once) and aggregate by (keys, lag) with the same exact-decimal
-   * moment recipe as [[autocorr]] — map-side combinable, keyed a
-   * superset of the window partitioning. NULL pairs drop per lag
-   * independently (the ACF-with-gaps convention).
+   * The full ACF table: the Pearson correlation of each key's series
+   * with its own h-step lag, at every lag 1..`maxLag` in ONE pass — the
+   * correlogram a seasonality hunt reads (a weekly cycle in daily data
+   * spikes lag 7), where a pass per lag would re-sort the series
+   * `maxLag` times. All lag columns ride one window (one sort, one
+   * shuffle on the keys); the per-lag pair rows then stack via an
+   * explode of a `maxLag`-element struct array (a bounded per-row
+   * fan-out, the barrier that keeps the lag window evaluated once) and
+   * aggregate by (keys, lag) into exact decimal moments
+   * ([[graft.functions.Exact.Moments]], read back through `toD`) —
+   * map-side combinable, keyed a superset of the window partitioning.
+   * NULL pairs drop per lag independently (the ACF-with-gaps
+   * convention); zero-variance sides → NULL.
    *
    * Magnitude bound (the q194/[[autocorr]] decimal route): values are
    * summed as `decimal(precision,4)` — the default 14 keeps products
@@ -677,66 +680,26 @@ object Events {
       .filter(col("__gv").isNotNull && col("__gprev").isNotNull)
     val dx = col("__gv").cast(s"decimal($precision,4)")
     val dy = col("__gprev").cast(s"decimal($precision,4)")
-    val m = stacked.groupBy(keys.map(col) :+ col("lag"): _*).agg(
-      count(lit(1)).as("n_pairs"),
-      sum(dx).as("__gsx"), sum(dy).as("__gsy"),
-      sum(dx * dy).as("__gsxy"),
-      sum(dx * dx).as("__gsxx"),
-      sum(dy * dy).as("__gsyy"))
-    val nD = col("n_pairs").cast("double")
-    val Seq(sx, sy, sxy, sxx, syy) =
-      Seq("__gsx", "__gsy", "__gsxy", "__gsxx", "__gsyy").map(c => toD(col(c)))
-    val num = nD * sxy - sx * sy
-    val den1 = nD * sxx - sx * sx
-    val den2 = nD * syy - sy * sy
-    m.select(keys.map(col) ++ Seq(col("lag"), col("n_pairs"),
-      when(den1 > 0 && den2 > 0, num / (sqrt(den1) * sqrt(den2)))
-        .as("acf")): _*)
+    val sums = Exact.Moments.sums(dx, dy).columns("n_pairs")
+    val mm = Exact.Moments.named(col("n_pairs").cast("double"), toD)
+    stacked.groupBy(keys.map(col) :+ col("lag"): _*).agg(sums.head, sums.tail: _*)
+      .select(keys.map(col) ++ Seq(col("lag"), col("n_pairs"),
+        when(mm.varX > 0 && mm.varY > 0, mm.corr).as("acf")): _*)
   }
 
   /**
-   * Lag-h autocorrelation per key: Pearson correlation of the series
-   * with its own h-step lag over a total per-key order — the
+   * Lag-1 autocorrelation per key: Pearson correlation of the series
+   * with its previous value over a total per-key order — the
    * mean-reversion-vs-trending audit (ACF≈0: independent draws; high
    * ACF: sticky level, a drifting sensor or a burst-driven metric).
-   * One lag window per key, then the [[graft.functions.Exact.decCorr]]
-   * recipe on the (v, v_lag) pair frame: exact decimal moments, closed
-   * form in one fixed IEEE sequence, zero-variance sides → NULL.
-   * Rows whose value or lagged value is NULL drop from the pair frame
-   * (the standard ACF-with-gaps convention). `precision` widens the
-   * moment decimals for large-magnitude series ([[acfMulti]]'s bound:
-   * default 14 ↔ 10 integer digits, max 18 ↔ 14).
+   * [[acfMulti]]'s lag-1 row without the `lag` column: rows whose value
+   * or previous value is NULL drop from the pair frame, zero-variance
+   * sides → NULL, and `precision` bounds the magnitudes the same way.
    */
   def autocorr(
       df: DataFrame, keys: Seq[String], order: Seq[Column], valueCol: String,
-      lagSteps: Int = 1, precision: Int = 14): DataFrame = {
-    require(keys.nonEmpty,
-      "autocorr needs partition keys: an unkeyed window is a global single-partition funnel")
-    require(lagSteps >= 1, "autocorr needs lag >= 1")
-    require(precision >= 5 && precision <= 18,
-      "autocorr precision must be in [5, 18]: products of two (p,4) decimals need 2p+1 <= 38")
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    val paired = df
-      .withColumn("__gprev", lag(col(valueCol), lagSteps).over(w))
-      .filter(col(valueCol).isNotNull && col("__gprev").isNotNull)
-    val dx = col(valueCol).cast(s"decimal($precision,4)")
-    val dy = col("__gprev").cast(s"decimal($precision,4)")
-    val m = paired.groupBy(keys.map(col): _*).agg(
-      count(lit(1)).as("n_pairs"),
-      sum(dx).as("__gsx"), sum(dy).as("__gsy"),
-      sum(dx * dy).as("__gsxy"),
-      sum(dx * dx).as("__gsxx"),
-      sum(dy * dy).as("__gsyy"))
-    val nD = col("n_pairs").cast("double")
-    val Seq(sx, sy, sxy, sxx, syy) =
-      Seq("__gsx", "__gsy", "__gsxy", "__gsxx", "__gsyy").map(c => toD(col(c)))
-    val num = nD * sxy - sx * sy
-    val den1 = nD * sxx - sx * sx
-    val den2 = nD * syy - sy * sy
-    m.select(keys.map(col) ++ Seq(col("n_pairs"),
-      when(den1 > 0 && den2 > 0, num / (sqrt(den1) * sqrt(den2)))
-        .as("acf")): _*)
-  }
+      precision: Int = 14): DataFrame =
+    acfMulti(df, keys, order, valueCol, maxLag = 1, precision).drop("lag")
 
   /**
    * Offline changepoint localization per key (the batch argmax the
@@ -809,19 +772,11 @@ object Events {
     val centered = base.join(broadcast(bounds), keys)
       .withColumn("__gcx", (col("__gx") - col("__gx0")).cast("decimal(12,0)"))
     val dy = col("__gy").cast("decimal(14,4)")
-    val m = centered.groupBy(keys.map(col): _*).agg(
-      count(lit(1)).as("n"),
-      sum(col("__gcx")).as("__gsx"),
-      sum(dy).as("__gsy"),
-      sum(col("__gcx") * dy).as("__gsxy"),
-      sum(col("__gcx") * col("__gcx")).as("__gsxx"))
-    val nD = col("n").cast("double")
-    val Seq(sx, sy, sxy, sxx) =
-      Seq("__gsx", "__gsy", "__gsxy", "__gsxx").map(c => toD(col(c)))
-    val den = nD * sxx - sx * sx
-    val slope = (nD * sxy - sx * sy) / den
-    m.withColumn("slope", when(den > 0, slope))
-      .withColumn("intercept", when(den > 0, (sy - col("slope") * sx) / nD))
+    val sums = Exact.Moments.sums(col("__gcx"), dy).columns("n", withYY = false)
+    val mm = Exact.Moments.named(col("n").cast("double"), toD)
+    centered.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+      .withColumn("slope", when(mm.varX > 0, mm.slope))
+      .withColumn("intercept", when(mm.varX > 0, mm.intercept(col("slope"))))
       .select(keys.map(col) ++ Seq(col("n"), col("slope"), col("intercept")): _*)
   }
 

@@ -897,21 +897,10 @@ object Features {
       .join(rankMap("__gy", "__gr2y"), "__gy")
     val dx = col("__gr2x").cast("decimal(18,0)")
     val dy = col("__gr2y").cast("decimal(18,0)")
-    val m = ranked.agg(
-      count(lit(1)).as("n"),
-      sum(dx).as("__gsx"), sum(dy).as("__gsy"),
-      sum(dx * dy).as("__gsxy"),
-      sum(dx * dx).as("__gsxx"),
-      sum(dy * dy).as("__gsyy"))
-    val nD = col("n").cast("double")
-    val Seq(sx, sy, sxy, sxx, syy) =
-      Seq("__gsx", "__gsy", "__gsxy", "__gsxx", "__gsyy").map(c => toD(col(c)))
-    val num = nD * sxy - sx * sy
-    val den1 = nD * sxx - sx * sx
-    val den2 = nD * syy - sy * sy
-    m.select(col("n"),
-      when(den1 > 0 && den2 > 0, num / (sqrt(den1) * sqrt(den2)))
-        .as("rho"))
+    val sums = Exact.Moments.sums(dx, dy).columns("n")
+    val mm = Exact.Moments.named(col("n").cast("double"), toD)
+    ranked.agg(sums.head, sums.tail: _*)
+      .select(col("n"), when(mm.varX > 0 && mm.varY > 0, mm.corr).as("rho"))
   }
 
   /**
@@ -982,8 +971,8 @@ object Features {
     val mb = sb / nb
     // sample variance via the moment form, clamped at 0 (the q75
     // constant-group ulp-residue contract)
-    val vva = greatest(na * saa - sa * sa, lit(0d)) / (na * (na - 1))
-    val vvb = greatest(nb * sbb - sb * sb, lit(0d)) / (nb * (nb - 1))
+    val vva = greatest(Exact.Moments.univariate(na, sa, saa).varX, lit(0d)) / (na * (na - 1))
+    val vvb = greatest(Exact.Moments.univariate(nb, sb, sbb).varX, lit(0d)) / (nb * (nb - 1))
     val se = sqrt(vva / na + vvb / nb)
     m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
       when(col("n_a") >= 2 && col("n_b") >= 2,

@@ -29,6 +29,10 @@ object Gates {
    *  rows). At sf1 the largest narrow-frame estimate is 1.84 M (under),
    *  at sf0.1 0.19 M. Also the bar of [[RangeRank.manyLeafRows]]. */
   val RankRangeRows = Gate("graft.rank.rangeRows", 2L << 20)
+  /** rankFamily's value-aggregated path broadcasts its ranked value
+   *  frame while the probed distinct count × row width fits this many
+   *  bytes, and hash-joins it above. */
+  val RankBroadcastBytes = Gate("graft.rank.broadcastBytes", 64L << 20)
   /** SSJoin-family verify joins hash-build the sets side, and the
    *  vocabulary takes the order-iso range id, from this input row
    *  estimate on. */
@@ -44,8 +48,8 @@ object Gates {
    *  up to this many probed cells, the sparse join above. */
   val NbGridCells = Gate("graft.nb.gridCells", 1000000L)
 
-  val all: Seq[Gate] = Seq(RankRangeBytes, RankRangeRows, SsjoinHashRows,
-    CcContractMinEdges, LoopAqeOffEdges, NbGridCells)
+  val all: Seq[Gate] = Seq(RankRangeBytes, RankRangeRows, RankBroadcastBytes,
+    SsjoinHashRows, CcContractMinEdges, LoopAqeOffEdges, NbGridCells)
 
   /** `graft.a.bcDe` → `SPARK_GRAFT_A_BC_DE`: dots become underscores and
    *  every camel-case hump starts a new word. */

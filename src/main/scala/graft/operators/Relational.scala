@@ -465,11 +465,9 @@ object Relational {
         sum(d18(cols(i)) * d18(cols(j))).cast("double").as(s"__gp_${i}_$j") }
     val m = clean.agg(count(lit(1)).cast("double").as("__gn"), moments: _*)
     val rows = pairs.map { case (i, j) =>
-      val num = col("__gn") * col(s"__gp_${i}_$j") - col(s"__gs_$i") * col(s"__gs_$j")
-      val den =
-        sqrt(col("__gn") * col(s"__gq_$i") - col(s"__gs_$i") * col(s"__gs_$i")) *
-        sqrt(col("__gn") * col(s"__gq_$j") - col(s"__gs_$j") * col(s"__gs_$j"))
-      struct(lit(cols(i)).as("col_a"), lit(cols(j)).as("col_b"), (num / den).as("corr"))
+      val pair = Exact.Moments(col("__gn"), col(s"__gs_$i"), col(s"__gs_$j"),
+        col(s"__gp_${i}_$j"), col(s"__gq_$i"), col(s"__gq_$j"))
+      struct(lit(cols(i)).as("col_a"), lit(cols(j)).as("col_b"), pair.corr.as("corr"))
     }
     m.select(explode(array(rows: _*)).as("__gr"))
       .select(col("__gr.col_a").as("col_a"), col("__gr.col_b").as("col_b"),
@@ -497,30 +495,22 @@ object Relational {
       df: DataFrame, keys: Seq[String], xCol: String, yCol: String,
       scale: Int = 4): DataFrame = {
     def d18(c: String) = col(c).cast(s"decimal(18,$scale)")
-    val aggs = Seq(
-      count(lit(1)).cast("double").as("__gn"),
-      sum(d18(xCol)).cast("double").as("__gsx"),
-      sum(d18(yCol)).cast("double").as("__gsy"),
-      sum(d18(xCol) * d18(yCol)).cast("double").as("__gsxy"),
-      sum(d18(xCol) * d18(xCol)).cast("double").as("__gsxx"),
-      sum(d18(yCol) * d18(yCol)).cast("double").as("__gsyy"),
-      (min(d18(xCol)) === max(d18(xCol))).as("__gcx"),
-      (min(d18(yCol)) === max(d18(yCol))).as("__gcy"))
+    val aggs =
+      Exact.Moments.sums(d18(xCol), d18(yCol), read = _.cast("double")).columns("__gn") ++ Seq(
+        (min(d18(xCol)) === max(d18(xCol))).as("__gcx"),
+        (min(d18(yCol)) === max(d18(yCol))).as("__gcy"))
     val m =
       if (keys.isEmpty) df.na.drop("any", Seq(xCol, yCol)).agg(aggs.head, aggs.tail: _*)
       else df.na.drop("any", Seq(xCol, yCol))
         .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    val num = col("__gn") * col("__gsxy") - col("__gsx") * col("__gsy")
-    val denx = col("__gn") * col("__gsxx") - col("__gsx") * col("__gsx")
-    val deny = col("__gn") * col("__gsyy") - col("__gsy") * col("__gsy")
-    val slope = when(!col("__gcx"), num / denx)
+    val mm = Exact.Moments.named(col("__gn"))
+    val slope = when(!col("__gcx"), mm.slope)
     m.select(keys.map(col) ++ Seq(
         col("__gn").cast("long").as("n"),
         slope.as("slope"),
-        when(!col("__gcx"),
-          (col("__gsy") - slope * col("__gsx")) / col("__gn")).as("intercept"),
+        when(!col("__gcx"), mm.intercept(slope)).as("intercept"),
         when(!col("__gcx") && !col("__gcy"),
-          (num * num) / (denx * deny)).as("r2")): _*)
+          mm.cov * mm.cov / (mm.varX * mm.varY)).as("r2")): _*)
   }
 
   /**
@@ -977,14 +967,14 @@ object Relational {
    * exclusive running count + 1 IS rank, and the inclusive running
    * count over the key total IS cume_dist), and map the ranks back
    * onto the fact rows by (keys, value) — broadcast when the probed
-   * distinct count × schema row width fits `graft.rank.broadcastBytes`
-   * (default 64 MB; a `graft.rank.broadcastVals` row bar overrides),
-   * else a hash join that still never sorts the fact side. Above
-   * the gate one bounded probe (the groupQuantiles shrink probe)
-   * routes: shrink ≥ 2 takes the value-aggregated path (q166's sf10
-   * prices shrink 101×: 60 M rows → 594 k distinct, turning a 60 M-row
-   * exchange+sort into scan + tiny rank + broadcast join), near-unique
-   * values keep the direct bucketed rank.
+   * distinct count × schema row width fits
+   * [[Gates.RankBroadcastBytes]] (default 64 MiB), else a hash join
+   * that still never sorts the fact side. Above the gate one bounded
+   * probe (the groupQuantiles shrink probe) routes: shrink ≥ 2 takes
+   * the value-aggregated path (q166's sf10 prices shrink 101×: 60 M
+   * rows → 594 k distinct, turning a 60 M-row exchange+sort into scan
+   * + tiny rank + broadcast join), near-unique values keep the direct
+   * bucketed rank.
    */
   def rankFamily(
       df: DataFrame, column: String, keys: Seq[String],
@@ -1048,24 +1038,13 @@ object Relational {
       // still never sorts. The gate is BYTE-aware: the probe is an
       // HLL++ estimate (±~2-4% at default rsd), so it is inflated by
       // that margin and multiplied by the schema's default per-row
-      // width against `graft.rank.broadcastBytes` (default 64 MB) — a
-      // row-count bar alone would let a near-bar under-estimate
-      // broadcast a wide multi-key frame measured in hundreds of MB.
-      // An explicitly-set `graft.rank.broadcastVals` row bar overrides
-      // (the measured-tuning escape hatch).
-      val rowBar = fact.sparkSession.conf
-        .getOption("graft.rank.broadcastVals").flatMap(_.toLongOption)
-      val byteBar = fact.sparkSession.conf
-        .getOption("graft.rank.broadcastBytes").flatMap(_.toLongOption)
-        .getOrElse(64L << 20)
+      // width against `Gates.RankBroadcastBytes` — a row-count bar
+      // alone would let a near-bar under-estimate broadcast a wide
+      // multi-key frame measured in hundreds of MB.
+      val byteBar = Gates.read(Gates.RankBroadcastBytes, fact.sparkSession)
       val rowBytes = math.max(1L,
         vals.schema.fields.map(_.dataType.defaultSize.toLong).sum)
-      val fits = shrinkProbe.exists { case (d, _) =>
-        rowBar match {
-          case Some(b) => d <= b
-          case None => (d * 104L) / 100L * rowBytes <= byteBar
-        }
-      }
+      val fits = shrinkProbe.exists { case (d, _) => (d * 104L) / 100L * rowBytes <= byteBar }
       val rhs = if (fits) broadcast(vals) else vals.hint("shuffle_hash")
       // null-safe map-back: a null key or value groups as its own peer
       // set and must rejoin its own rank row
@@ -1389,7 +1368,7 @@ object Relational {
     // Window node — chaining planned a second Window pass re-running
     // the frame aggregates over the sorted rows.
     val mean = when(n > 0, sx / n)
-    val std = when(n > 0, sqrt(greatest(n * sxx - sx * sx, lit(0d))) / n)
+    val std = when(n > 0, Exact.Moments.univariate(n, sx, sxx).stddevPop)
     df.select(col("*"), mean.as("roll_mean"), std.as("roll_std"),
       coalesce(abs(v - mean) > lit(k) * std, lit(false)).as("is_anomaly"))
   }

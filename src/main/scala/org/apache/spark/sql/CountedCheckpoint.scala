@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import java.math.BigInteger
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
@@ -13,7 +14,8 @@ import org.apache.spark.sql.types.LongType
  * `Dataset.localCheckpoint` counts every partition and discards the
  * counts, and gives the checkpoint scan the origin plan's statistics;
  * `Dataset.ofRows` and the `LogicalRDD` statistics argument are private
- * to this package, hence this bridge. graft calls it only from
+ * to this package, hence this bridge; it also releases checkpoint
+ * blocks without `RDD.unpersist`'s warning. graft calls it only from
  * `graft.Caches`, so the job's call site reads
  * `localCheckpoint at Caches.scala`.
  */
@@ -59,4 +61,17 @@ object CountedCheckpoint {
       (classic.Dataset.ofRows(session, counted), rdd.id, rows, sum)
     }
   }
+
+  /**
+   * Release a persisted RDD's blocks, blocking until they are removed.
+   * A local checkpoint's blocks go through `SparkContext.unpersistRDD`
+   * (private to Spark), the block removal `RDD.unpersist` runs minus its
+   * WARN that the lineage is truncated — true of every checkpoint graft
+   * releases, and one log line per release. Other RDDs keep
+   * `unpersist`.
+   */
+  def release(rdd: RDD[_]): Unit =
+    if (rdd.isCheckpointed && rdd.getCheckpointFile.isEmpty) // local: no file
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = true)
+    else rdd.unpersist(blocking = true)
 }

@@ -2,6 +2,10 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -11,7 +15,8 @@ import org.apache.spark.sql.functions._
  * The counted-checkpoint contract ([[Caches.checkpoint]],
  * [[Caches.CheckpointRoller.roll]]): one job per checkpoint, an exact
  * row count and long-column sum from that job, true row statistics on
- * the returned frame, and the origin plan's partitioning kept.
+ * the returned frame, the origin plan's partitioning kept, and blocks
+ * released without Spark's lineage-truncated warning.
  */
 class CachesSpec extends SparkSpec {
   import spark.implicits._
@@ -141,6 +146,58 @@ class CachesSpec extends SparkSpec {
       // rows × row width (8 bytes of row overhead + two longs)
       assert(stats.sizeInBytes == BigInt(250 * 24))
       assert(c.df.count() == 250)
+    }
+  }
+
+  /** Collects the messages of WARN-or-worse events logged under the
+   *  `org.apache.spark.rdd` logger while `body` runs (the shared session
+   *  logs at ERROR, so the logger is lowered to WARN for the duration). */
+  private def rddWarnings[T](body: ConcurrentLinkedQueue[String] => T): T = {
+    spark.sparkContext // a session created inside would reset the level
+    val name = "org.apache.spark.rdd"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("caches-spec-rdd", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val config = ctx.getConfiguration
+    val hadLogger = config.getLoggers.containsKey(name)
+    val oldLevel = config.getLoggerConfig(name).getLevel
+    Configurator.setLevel(name, Level.WARN)
+    config.getLoggerConfig(name).addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try body(seen) finally {
+      config.getLoggerConfig(name).removeAppender(appender.getName)
+      if (hadLogger) Configurator.setLevel(name, oldLevel) else config.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  test("releasing checkpoints logs no lineage-truncated WARN and leaves no persistent RDD") {
+    rddWarnings { seen =>
+      rolled { roller =>
+        // every frame stays referenced, so no ContextCleaner sweep
+        // (which releases silently) can stand in for the roller
+        val gens = (1 to 3).map { i =>
+          val c = roller.roll(labels(Some(i.toLong), Some(2L), None).repartition(2), Some("label"))
+          assert(c.rows == 3 && c.sum == i + 2)
+          roller.advance() // releases the roll before this one
+          c
+        } :+ roller.roll(labels(Some(7L)))
+        val live = spark.sparkContext.getPersistentRDDs.keySet
+        assert(gens.map(c => live.contains(c.rddId)) == Seq(false, false, true, true))
+      } // releaseAll: the last two generations
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      val truncated = seen.toArray.map(_.toString).filter(_.contains("locally checkpointed"))
+      assert(truncated.isEmpty, truncated.mkString("\n"))
+      // the appender does see the warning when an RDD API unpersist logs it
+      val rdd = spark.sparkContext.parallelize(1 to 3, 2).localCheckpoint()
+      assert(rdd.count() == 3)
+      rdd.unpersist(blocking = true)
+      assert(seen.toArray.exists(_.toString.contains("locally checkpointed")))
     }
   }
 }

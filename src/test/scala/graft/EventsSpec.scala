@@ -593,7 +593,7 @@ class EventsSpec extends SparkSpec {
     }
     assert(exNarrow.getMessage.contains("Decimal(14, 4)"))
     val wide = Events.autocorr(big, Seq("key"), Seq(col("i")), "v",
-      lagSteps = 1, precision = 18).collect().head
+      precision = 18).collect().head
     assert(math.abs(wide.getAs[Double]("acf") - 1.0) < 1e-12)
     val wideMulti = Events.acfMulti(big, Seq("key"), Seq(col("i")), "v",
       maxLag = 2, precision = 18)
@@ -602,7 +602,7 @@ class EventsSpec extends SparkSpec {
       math.abs(wideMulti(2) - 1.0) < 1e-12)
     val exBad = intercept[IllegalArgumentException] {
       Events.autocorr(big, Seq("key"), Seq(col("i")), "v",
-        lagSteps = 1, precision = 19)
+        precision = 19)
     }
     assert(exBad.getMessage.contains("18"))
   }

@@ -116,4 +116,42 @@ class ExactSpec extends SparkSpec {
       .agg(Exact.toD(sum(Exact.absorb(col("v"))))).head.getDouble(0)
     assert(total(1) == total(8))
   }
+
+  /** Evaluate `cs` over one row of literal moments (no aggregation). */
+  private def eval(cs: org.apache.spark.sql.Column*): Seq[Any] =
+    spark.range(1).select(cs: _*).head.toSeq
+
+  private def moments(n: Double, sx: Double, sy: Double, sxy: Double,
+      sxx: Double, syy: Double): Exact.Moments =
+    Exact.Moments(lit(n), lit(sx), lit(sy), lit(sxy), lit(sxx), lit(syy))
+
+  test("Moments.corr is the fixed Pearson sequence over literal moments") {
+    // x = 1..5, y = 2x: the closed form lands one ulp below 1
+    val line = moments(5, 15, 30, 110, 55, 220)
+    assert(eval(line.cov, line.varX, line.varY) == Seq(100.0, 50.0, 200.0))
+    val r = eval(line.corr).head.asInstanceOf[Double]
+    assert(r == 100.0 / (math.sqrt(50.0) * math.sqrt(200.0)))
+    assert(r == 0.9999999999999999)
+    // x = (1, 2, 3), y = (3, 1, 2): r = -1/2 up to the sqrt rounding
+    val neg = moments(3, 6, 6, 11, 14, 14)
+    assert(eval(neg.corr).head == -3.0 / (math.sqrt(6.0) * math.sqrt(6.0)))
+  }
+
+  test("Moments.slope/intercept fit a two-point line exactly") {
+    // (1, 3) and (3, 7): y = 2x + 1
+    val two = moments(2, 4, 10, 24, 10, 58)
+    assert(eval(two.slope, two.intercept(two.slope)) == Seq(2.0, 1.0))
+    // the intercept takes the caller's slope column, not its own
+    assert(eval(two.intercept(lit(0.0))) == Seq(5.0))
+  }
+
+  test("Moments.stddevPop clamps a few-ulp negative radicand to 0") {
+    // three 0.1 values read back as doubles: 0.1+0.1+0.1 and 3 * 0.01
+    val flat = Exact.Moments.univariate(lit(3.0), lit(0.1 + 0.1 + 0.1), lit(0.01 + 0.01 + 0.01))
+    val Seq(radicand, sd) = eval(flat.varX, flat.stddevPop)
+    assert(radicand.asInstanceOf[Double] < 0 && radicand.asInstanceOf[Double] > -1e-15)
+    assert(sd == 0.0) // unclamped: sqrt of a negative, NaN
+    val spread = Exact.Moments.univariate(lit(5.0), lit(15.0), lit(55.0)) // 1..5
+    assert(eval(spread.stddevPop).head == math.sqrt(50.0) / 5)
+  }
 }

@@ -16,12 +16,13 @@ class GatesSpec extends AnyFunSuite {
   private val defaults = Seq(
     "graft.rank.rangeBytes" -> (256L << 20),
     "graft.rank.rangeRows" -> (2L << 20),
+    "graft.rank.broadcastBytes" -> (64L << 20),
     "graft.ssjoin.hashRows" -> 400000L,
     "graft.cc.contractMinEdges" -> 1000000L,
     "graft.loop.aqeOffEdges" -> 32000000L,
     "graft.nb.gridCells" -> 1000000L)
 
-  test("the table holds exactly the six gates, each at its default") {
+  test("the table holds exactly the seven gates, each at its default") {
     assert(Gates.all.map(g => g.key -> g.default) === defaults)
     Gates.all.foreach(g => assert(Gates.resolve(g, None, None) === g.default, g.key))
   }
@@ -35,6 +36,7 @@ class GatesSpec extends AnyFunSuite {
     established.foreach { case (k, e) => assert(Gates.envName(k) === e) }
     assert(Gates.LoopAqeOffEdges.env === "SPARK_GRAFT_LOOP_AQE_OFF_EDGES")
     assert(Gates.NbGridCells.env === "SPARK_GRAFT_NB_GRID_CELLS")
+    assert(Gates.RankBroadcastBytes.env === "SPARK_GRAFT_RANK_BROADCAST_BYTES")
     assert(Gates.all.map(_.env).distinct.size === Gates.all.size)
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cleaning, Features, RangeRank, Relational}
+import graft.operators.{Cleaning, Features, Gates, RangeRank, Relational}
 
 /**
  * The RangeRank contract: the bucketed distributed-rank path must
@@ -300,6 +300,18 @@ class RangeRankSpec extends SparkSpec {
     assert(plan.contains("__qc"),
       s"tied data above the gate must take the value-aggregated branch, got:\n$plan")
     assert(got == want, "value-aggregated rank family diverged from window path")
+    assert(!plan.contains("strategy=shuffle_hash"), s"expected the broadcast map-back:\n$plan")
+    // above the broadcast byte gate the ranked values hash-join back
+    val (gotH, planH) = forcedBucketed(forcedBigScan {
+      spark.conf.set(Gates.RankBroadcastBytes.key, "0")
+      try {
+        val q = run(tiedNulls)
+        (canon(q), q.queryExecution.optimizedPlan.toString)
+      } finally spark.conf.unset(Gates.RankBroadcastBytes.key)
+    })
+    assert(planH.contains("__qc") && planH.contains("strategy=shuffle_hash"),
+      s"expected the shuffle_hash map-back:\n$planH")
+    assert(gotH == want, "shuffle_hash map-back diverged from window path")
     // near-unique values keep the direct bucketed rank (no __qc)
     val uniq = spark.range(3000).select(
       (col("id") % 7).cast("string").as("k"),

@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Source-layout rules that no compiler enforces, checked by reading the
- * files (no session): the shortest-string decimal encoding is spelled
- * only in `graft.functions.Exact`, the environment is read only
- * through the gate table, and every checkpoint is a counted one.
+ * files (no session): the shortest-string decimal encoding and the
+ * moment closed forms are spelled only in `graft.functions.Exact`, the
+ * environment is read only through the gate table, and every
+ * checkpoint is a counted one.
  */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -43,6 +44,22 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(files.size > 10)
     rules.foreach { case (what, pattern) =>
       val found = hits(files, pattern)
+      assert(found.isEmpty, s"$what outside Exact: ${found.mkString(", ")}")
+    }
+  }
+
+  test("operators finish moment sums only through Exact.Moments") {
+    // an operand: a name, a call like col("__gsx"), optionally cast
+    val operand = """\w+(?:\([^()]*\))?(?:\.cast\([^()]*\))?"""
+    // one level of nested parentheses inside a sqrt(...)
+    val arg = """(?:[^()]|\([^()]*\))*"""
+    val rules = Seq(
+      // n·Σx² − (Σx)²: every variance, Pearson and OLS form has one
+      "variance difference" -> ("""-\s*(""" + operand + """)\s*\*\s*\1(?![\w.(])"""),
+      "product of difference radicands" ->
+        ("""sqrt\(""" + arg + "-" + arg + """\)\s*\*\s*sqrt\("""))
+    rules.foreach { case (what, pattern) =>
+      val found = hits(operatorFiles, pattern)
       assert(found.isEmpty, s"$what outside Exact: ${found.mkString(", ")}")
     }
   }
