@@ -2518,6 +2518,25 @@ object SparkEntry {
       t(s, dir).documents.withColumn("__gpayload", mp4Payload),
       "doc_id", "__gpayload", strideMs = 1000L, maxFrames = 12)
 
+  /** #245 q166's rank family over a TYING value: lineitem quantity
+   *  within return flag (50 distinct quantities per flag at sf0.01, a
+   *  ~400× shrink), so above the gate the ranks come from the distinct
+   *  (flag, quantity) frame and its null-safe map-back
+   *  ([[graft.operators.RangeRank.tieRank]]). */
+  private def q245RankFamilyTies(s: SparkSession, dir: String): DataFrame =
+    Relational.rankFamily(
+      t(s, dir).lineitem.select("l_orderkey", "l_linenumber",
+        "l_returnflag", "l_quantity"),
+      "l_quantity", Seq("l_returnflag"))
+
+  /** #246 q145's percent-rank transform over the same tying quantity
+   *  as #245 — the value-aggregated plan's second consumer. */
+  private def q246PercentRankTies(s: SparkSession, dir: String): DataFrame =
+    Features.percentRankScale(
+      t(s, dir).lineitem.select("l_orderkey", "l_linenumber", "l_returnflag",
+        "l_quantity"),
+      "l_quantity", Seq("l_returnflag"))
+
   // ------------------------------------------------------------ registry
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -2765,6 +2784,8 @@ object SparkEntry {
     "q242_hyperplane_md5"   -> (q242HyperplaneMd5 _),
     "q243_video_meta"       -> (q243VideoMeta _),
     "q244_frame_sample"     -> (q244FrameSample _),
+    "q245_rank_family_ties" -> (q245RankFamilyTies _),
+    "q246_percent_rank_ties" -> (q246PercentRankTies _),
   )
 
   /** Shared-stage variants of the trained-model pairs: each entry
@@ -5588,5 +5609,14 @@ object SparkEntry {
         "f AS (SELECT doc_id, unnest(generate_series(0, LEAST(dur_ms // 1000, 11))) AS frame_idx FROM d) " +
         "SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx, " +
         "CAST(frame_idx * 1000 AS BIGINT) AS ts_ms FROM f"),
+    "q245_rank_family_ties" ->
+      ("SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity, " +
+        "rank() OVER w AS rnk, dense_rank() OVER w AS drnk, " +
+        "cume_dist() OVER w AS cd FROM lineitem " +
+        "WINDOW w AS (PARTITION BY l_returnflag ORDER BY l_quantity)"),
+    "q246_percent_rank_ties" ->
+      ("SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity, " +
+        "percent_rank() OVER (PARTITION BY l_returnflag " +
+        "ORDER BY l_quantity ASC NULLS FIRST) AS pct_rank FROM lineitem"),
   )
 }

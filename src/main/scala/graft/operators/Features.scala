@@ -87,21 +87,15 @@ object Features {
    * keyless call nor a low-cardinality-key call funnels a large sort
    * into one task.
    *
-   * Above [[RangeRank.useBucketed]]'s threshold the FACT rows are never
-   * ranked at all (the q145/q150 value-aggregation rule): the value at a
-   * non-null rank is tie-invariant — a pure function of the distinct
-   * (keys, value) multiplicities — so the frame first aggregates to
-   * per-(keys, value) counts (map-side combinable), the peer-inclusive
-   * cumulative count in value order gives each distinct value its
-   * covered rank range (cum − cnt, cum], and a target rank r selects the
-   * one value whose range contains it. The rank problem shrinks from row
-   * count to value cardinality (101× at the measured sf10 step) and
-   * nothing joins back — the output was already one row per group. The
-   * aggregated frame itself rides [[RangeRank.ranked]], which keeps a
-   * plain window while it is small and distributes over
-   * (key, value-range) cells once web-scale value cardinality demands
-   * it. Both paths read the same exact values at the same exact ranks,
-   * so they are bit-identical by construction (RangeRankSpec pins it).
+   * When [[RangeRank.tieRank]] picks the value-aggregated plan the FACT
+   * rows are never ranked at all: the value at a non-null rank is
+   * tie-invariant, a pure function of the distinct (keys, value)
+   * multiplicities, so each distinct value covers the rank range
+   * (cum − cnt, cum] of its peer-inclusive cumulative count, and a
+   * target rank r selects the one value whose range contains it.
+   * Nothing joins back — the output was already one row per group.
+   * Both plans read the same exact values at the same exact ranks, so
+   * they are bit-identical by construction (RangeRankSpec pins it).
    *
    * Output columns: `keys ++ countAs ++ ps` names; quantiles are
    * DOUBLE. `countAs` co-emits each group's non-null value count for
@@ -114,34 +108,8 @@ object Features {
     require(ps.forall { case (p, _) => p >= 0 && p <= 1 },
       "percentiles must be in [0, 1]")
     val vd = col(column).cast("double")
-    val proj0 = df.select(keys.map(col) :+ vd.as("__qv"): _*)
-    // Above the gate the (keys, value) projection is consumed 2-3
-    // times (the shrink probe below, then the rank path's own boundary
-    // probe + main pass) — on a frame derived from an EXPENSIVE
-    // pipeline each consumption replays the whole upstream (q235's
-    // windowed funnel gaps: 4.1 → 14.2 s at sf10 when the gate first
-    // fired on it). Persist the narrow projection under the
-    // caller-owned-cache contract (graft.Caches; the setSimilarityJoin
-    // ordered-token precedent): the probe materializes it once, every
-    // later pass reads the cache, the returned plan still references
-    // it. Below the gate nothing persists and nothing probes.
-    // The persist (and the shrink probe below) key on the LEAF-rows
-    // clause alone, not the full gate: the byte clause false-fires on
-    // join-derived frames whose sizeInBytes estimate multiplied through
-    // the join (q236's 60-row theil-sen pairs estimate gigabytes) —
-    // harmless for picking the value-aggregated plan SHAPE, a pure
-    // regression if it triggers materialization work on a tiny frame.
-    // NOTE: above the gate, merely CONSTRUCTING this plan runs a full
-    // materialization job — the shrink probe's head() below writes the
-    // MEMORY_AND_DISK cache of this fact-sized projection. That is the
-    // agg-to-literal convention's price, but it means graft.Explain /
-    // plan inspection on a big frame pays one cache-building pass
-    // first (minutes at sf10) — not a hang.
-    val bigScan = RangeRank.manyLeafRows(proj0)
-    val proj =
-      if (bigScan && !RangeRank.scanShaped(proj0))
-        proj0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else proj0
+    val tr = RangeRank.tieRank(
+      df.select(keys.map(col) :+ vd.as("__qv"): _*), keys, "__qv")
 
     def pos(p: Double) = lit(p) * (col("__qn") - lit(1)).cast("double")
 
@@ -149,32 +117,16 @@ object Features {
     // per group interpolation can touch (plus one representative row for
     // all-null groups); `hit(r)` is true on the row holding the group's
     // value at non-null rank r. The shared tail below is path-blind.
-    // Above the gate, one bounded probe (the percentRankScale
-    // near-unique guard) decides whether value-aggregation pays:
-    // on near-unique doubles distinct (keys, value) is ~fact-sized and
-    // the groupBy is pure overhead — the direct branch below already
-    // distributes through ranked()'s bucketed cells when the gate
-    // fires, so shrink < 2 ranks the fact rows straight.
-    val useValueAgg = RangeRank.useBucketed(proj0) && (!bigScan || {
-      val p = proj.agg(
-        approx_count_distinct(struct((keys :+ "__qv").map(col): _*)).as("__gd"),
-        count(lit(1)).as("__gn")).head()
-      p.getLong(1).toDouble / math.max(1L, p.getLong(0)).toDouble >= 2.0
-    })
     val (picked, hit): (DataFrame, Column => Column) =
-      if (useValueAgg) {
-        // scale path: rank the distinct-value frame, not the fact rows.
+      if (tr.regime == RangeRank.TieRegime.Aggregated) {
         // __qhiR = peer-inclusive cumulative NON-NULL count in value
         // order (nulls first contribute 0), so a non-null row covers
         // ranks (__qhiR − __qc, __qhiR] and a null row covers none
         // (its __qhiR is 0 and target ranks are ≥ 1).
-        val cnted = proj.groupBy((keys :+ "__qv").map(col): _*)
-          .agg(count(lit(1)).as("__qc"))
         val nn = when(col("__qv").isNotNull, col("__qc")).otherwise(lit(0L))
-        val ranked = RangeRank.ranked(cnted, keys, "__qv",
-          extras = RangeRank.Extras(
-            rangeSums = Seq(nn -> "__qhiR"),
-            keyTotals = Seq(nn -> "__qn")))
+        val ranked = tr.counted(RangeRank.Extras(
+          rangeSums = Seq(nn -> "__qhiR"),
+          keyTotals = Seq(nn -> "__qn")))
         val h = (r: Column) =>
           r > col("__qhiR") - col("__qc") && r <= col("__qhiR")
         val needed = ps.map { case (p, _) =>
@@ -189,7 +141,7 @@ object Features {
         // ascending). Nulls rank first, so the non-null rank is the row
         // number minus the group's null count.
         val ranked = RangeRank.ranked(
-          proj, keys, "__qv", rnAs = "__qrn0", ntAs = "__qt",
+          tr.input, keys, "__qv", rnAs = "__qrn0", ntAs = "__qt",
           extras = RangeRank.Extras(keyTotals = Seq(
             (when(col("__qv").isNotNull, 1L).otherwise(0L), "__qn"))))
           .withColumn("__qrnn", col("__qrn0") - (col("__qt") - col("__qn")))
@@ -310,85 +262,41 @@ object Features {
    * One window shuffle per group set below [[RangeRank.useBucketed]]'s
    * threshold.
    *
-   * Above the threshold the rank NEVER touches the fact rows: because
-   * ties share a rank, percent_rank is a pure function of
-   * (keys, value), so the frame aggregates to distinct (keys, value)
-   * counts first (map-side combinable — the aucExact rule: windows run
-   * over the value-aggregated frame, never the fact) and the shared
-   * minimum rank is recomposed from the value-order cumulative count,
-   * rankMin(v) = Σ_{v' ≤ v} cnt − cnt(v) + 1. The fact side then pays
-   * ONE hash join back on (keys, value) — null-safe on the value, so
-   * null inputs keep their nulls-first rank — instead of a global
-   * sort (measured at the sf10 step: 594 k distinct (flag, price) vs
-   * 60 M rows, a 101× smaller rank problem). When the aggregated
-   * frame is itself above the threshold (web-scale value cardinality),
-   * its cumulative count distributes through [[RangeRank.ranked]]'s
-   * range-bucketed cells — a low-cardinality key never funnels a
-   * 100 TB sort into \|keys\| tasks. All branches emit
-   * `PercentRank`'s own (rank−1)/(n−1) IEEE form on exact longs.
-   *
-   * NEAR-UNIQUE GUARD: when the values barely tie (continuous doubles),
-   * distinct (keys, value) is ~fact-sized and the aggregate + join-back
-   * is strictly more work than ranking the fact. A bounded
-   * `approx_count_distinct` probe measures the shrink; below 2× the
-   * rank runs DIRECTLY on the fact through the same bucketed cells
-   * (peer-min recomposition, identical outputs — ties still share the
-   * peer-minimum rank).
+   * Above it [[RangeRank.tieRank]] decides the plan: because ties share
+   * a rank, percent_rank is a pure function of (keys, value), so the
+   * value-aggregated plan recomposes the shared minimum rank from the
+   * value-order cumulative count, rankMin(v) = Σ_{v' ≤ v} cnt − cnt(v)
+   * + 1, and maps it back; near-unique values rank the input directly
+   * through [[RangeRank.ranked]]'s bucketed cells (peer-min
+   * recomposition). Every plan emits `PercentRank`'s own
+   * (rankMin − 1)/(n − 1) IEEE form on exact longs.
    */
   def percentRankScale(
       df: DataFrame, column: String, keys: Seq[String],
       out: String = "pct_rank"): DataFrame = {
     require(keys.nonEmpty,
       "percentRankScale needs partition keys: an unkeyed rank window is a global single-partition funnel")
-    if (!RangeRank.useBucketed(df)) {
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(col(column).asc_nulls_first)
-      df.withColumn(out, percent_rank().over(w))
-    } else {
-      // One bounded probe (the RangeRank boundary-probe convention)
-      // decides between the two scale plans: when (keys, value) is
-      // near-unique — continuous doubles with few ties — the aggregate
-      // is ~fact-sized and the aggregate + join-back is strictly MORE
-      // work than ranking the fact directly (round-10 verdict item 3),
-      // so the rank runs straight on the fact through RangeRank's
-      // bucketed cells with a peer-min recomposition. At shrink ≥ 2 the
-      // aggregated path wins: the rank problem halves (measured 101×
-      // smaller on sf10 prices) and the join-back is one hash join.
-      val probe = df.agg(
-        approx_count_distinct(struct((keys :+ column).map(col): _*)).as("__gd"),
-        count(lit(1)).as("__gn")).head()
-      val shrink =
-        probe.getLong(1).toDouble / math.max(1L, probe.getLong(0)).toDouble
-      if (shrink < 2.0) {
-        val ranked = RangeRank.ranked(df, keys, column,
+    val tr = RangeRank.tieRank(df, keys, column)
+    val ranks = tr.regime match {
+      case RangeRank.TieRegime.Window =>
+        val w = Window.partitionBy(keys.map(col): _*)
+          .orderBy(col(column).asc_nulls_first)
+        return df.withColumn(out, percent_rank().over(w))
+      case RangeRank.TieRegime.Direct =>
+        RangeRank.ranked(tr.input, keys, column,
           extras = RangeRank.Extras(peerMinAs = Some("__gpmin")))
-        return ranked.select(df.columns.map(col) :+
-          when(col("__gnt") > 1,
-            (col("__gpmin") - 1).cast("double") / (col("__gnt") - 1).cast("double"))
-            .otherwise(lit(0.0d)).as(out): _*)
-      }
-      val agg = df.groupBy((keys :+ column).map(col): _*)
-        .agg(count(lit(1)).cast("long").as("__gvc"))
-      // ranked picks its own plan for the aggregated frame: a plain
-      // per-key window while it stays small, range-bucketed cells once
-      // the value cardinality itself is web-scale — same Extras either
-      // way (peer-inclusive range sum + key total)
-      val ranked = RangeRank.ranked(agg, keys, column,
-        extras = RangeRank.Extras(
-          rangeSums = Seq(col("__gvc") -> "__gcum"),
-          keyTotals = Seq(col("__gvc") -> "__gtot")))
-      val lookup = ranked.select(
-        keys.map(k => col(k).as(s"__gk_$k")) ++ Seq(col(column).as("__gval"),
-          (col("__gcum") - col("__gvc") + lit(1L)).as("__gpmin"),
-          col("__gtot")): _*)
-      df.join(lookup,
-          keys.map(k => df(k) <=> col(s"__gk_$k"))
-            .reduce(_ && _) && df(column) <=> col("__gval"))
-        .select(df.columns.map(df(_)) :+
-          when(col("__gtot") > 1,
-            (col("__gpmin") - 1).cast("double") / (col("__gtot") - 1).cast("double"))
-            .otherwise(lit(0.0d)).as(out): _*)
+      case RangeRank.TieRegime.Aggregated =>
+        tr.mapBack(tr.counted(RangeRank.Extras(
+            rangeSums = Seq(col("__qc") -> "__gcum"),
+            keyTotals = Seq(col("__qc") -> "__gtot")))
+          .select((keys :+ column).map(col) ++ Seq(
+            (col("__gcum") - col("__qc") + lit(1L)).as("__gpmin"),
+            col("__gtot").as("__gnt")): _*))
     }
+    ranks.select(df.columns.map(col) :+
+      when(col("__gnt") > 1,
+        (col("__gpmin") - 1).cast("double") / (col("__gnt") - 1).cast("double"))
+        .otherwise(lit(0.0d)).as(out): _*)
   }
 
   /**

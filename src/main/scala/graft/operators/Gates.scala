@@ -29,9 +29,10 @@ object Gates {
    *  rows). At sf1 the largest narrow-frame estimate is 1.84 M (under),
    *  at sf0.1 0.19 M. Also the bar of [[RangeRank.manyLeafRows]]. */
   val RankRangeRows = Gate("graft.rank.rangeRows", 2L << 20)
-  /** rankFamily's value-aggregated path broadcasts its ranked value
-   *  frame while the probed distinct count × row width fits this many
-   *  bytes, and hash-joins it above. */
+  /** The tie-invariant rank map-back ([[RangeRank.TieRank.mapBack]],
+   *  for rankFamily and percentRankScale) broadcasts its ranked value
+   *  frame while the distinct bound × row width fits this many bytes,
+   *  and hash-joins it above. */
   val RankBroadcastBytes = Gate("graft.rank.broadcastBytes", 64L << 20)
   /** SSJoin-family verify joins hash-build the sets side, and the
    *  vocabulary takes the order-iso range id, from this input row

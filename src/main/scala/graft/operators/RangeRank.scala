@@ -123,8 +123,8 @@ object RangeRank {
    *  BLANKET: neutral at one-box scale, and the bucketed plan is the
    *  only one whose per-task state stays bounded on a real cluster.
    *  The one real keyed loss (q134 +24%) was the value-aggregation
-   *  above, not the rank path — fixed by groupQuantiles' shrink
-   *  probe, not by suppressing the gate. */
+   *  above, not the rank path — fixed by [[tieRank]]'s shrink probe,
+   *  not by suppressing the gate. */
   def useBucketed(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.stats.sizeInBytes >=
       BigInt(Gates.read(Gates.RankRangeBytes, df.sparkSession)) ||
@@ -142,10 +142,10 @@ object RangeRank {
 
   /** Is this frame just (Project|Filter)* over one scan? Replaying it
    *  costs one columnar read — cheaper than writing it to cache — so
-   *  multi-consumption guards (persist-before-probe) skip it. Anything
+   *  the persist-before-probe guard of [[tieRank]] skips it. Anything
    *  with a join/aggregate/window upstream replays the whole pipeline
    *  per consumption and must be materialized instead. */
-  private[operators] def scanShaped(df: DataFrame): Boolean = {
+  private def scanShaped(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project}
     def walk(p: LogicalPlan): Boolean = p match {
       case _: LeafNode => true
@@ -154,6 +154,111 @@ object RangeRank {
       case _ => false
     }
     walk(df.queryExecution.optimizedPlan)
+  }
+
+  /** The plan a tie-invariant rank consumer runs ([[tieRank]]). */
+  sealed trait TieRegime
+  object TieRegime {
+    /** Below [[useBucketed]]: the caller's own single window. */
+    case object Window extends TieRegime
+    /** Genuinely large and near-unique: [[ranked]] on the input rows. */
+    case object Direct extends TieRegime
+    /** Rank the distinct (keys, value) frame ([[TieRank.counted]]). */
+    case object Aggregated extends TieRegime
+  }
+
+  /** One decided tie-invariant rank plan over (`keys`, `value`) of
+   *  `input` — the frame every branch must read (persisted when
+   *  [[tieRank]] chose to). `distinctBound` bounds the distinct
+   *  (keys, value) rows and sizes the map-back. */
+  final case class TieRank(
+      input: DataFrame, keys: Seq[String], value: String,
+      regime: TieRegime, distinctBound: BigInt) {
+
+    /** The distinct-value rank: one row per (keys, value) with its row
+     *  count as `__qc`, ranked by value within keys through [[ranked]]
+     *  (a plain window while small, bucketed cells once the value
+     *  cardinality itself is web-scale). `extras` read `col("__qc")`:
+     *  its peer-inclusive range sum is the cumulative row count through
+     *  the value, its key total the key's row count, and the row number
+     *  `__grn` over this frame IS dense_rank. */
+    def counted(extras: Extras): DataFrame = {
+      val gk = (keys :+ value).map(col)
+      ranked(input.groupBy(gk: _*).agg(count(lit(1)).as("__qc")), keys, value, extras = extras)
+    }
+
+    /** Join `vals` — one row per (keys, value) plus the caller's rank
+     *  columns — back onto the input rows, NULL-SAFE on (keys, value):
+     *  a null key or value groups as its own peer set and must rejoin
+     *  its own rank row. The value frame broadcasts while
+     *  `distinctBound` × its schema's default row width fits
+     *  [[Gates.RankBroadcastBytes]] — a row bar alone would let a
+     *  near-bar bound broadcast a wide multi-key frame of hundreds of
+     *  MB — and hash-builds above it, so the fact side never sorts.
+     *  Output: the input's columns, then `vals`' non-key columns. */
+    def mapBack(vals: DataFrame): DataFrame = {
+      val gk = keys :+ value
+      val rowBytes = math.max(1L, vals.schema.fields.map(_.dataType.defaultSize.toLong).sum)
+      val fits = distinctBound * rowBytes <=
+        BigInt(Gates.read(Gates.RankBroadcastBytes, input.sparkSession))
+      val renamed = gk.foldLeft(vals)((v, c) => v.withColumnRenamed(c, s"__qk_$c"))
+      val rhs = if (fits) broadcast(renamed) else renamed.hint("shuffle_hash")
+      input.join(rhs, gk.map(c => col(c) <=> col(s"__qk_$c")).reduce(_ && _))
+        .drop(gk.map(c => s"__qk_$c"): _*)
+    }
+  }
+
+  /**
+   * THE entry for tie-invariant rank consumers — outputs that are a
+   * pure function of (keys, value) multiplicities, never of the order
+   * among ties: quantile values, percent_rank, rank / dense_rank /
+   * cume_dist (NOT row_number or ntile). Such a consumer may rank the
+   * distinct (keys, value) frame instead of the fact rows (the
+   * q145/q150/q166 value-aggregation rule: sf10 prices shrink 101×,
+   * 60 M rows → 594 k) and map the ranks back; this decides whether
+   * that pays, once for every consumer:
+   *
+   *  - below [[useBucketed]]: [[TieRegime.Window]] — nothing persists
+   *    or probes, and the caller runs its plain window;
+   *  - above it but not [[manyLeafRows]]: [[TieRegime.Aggregated]]
+   *    with no persist and no probe. The byte clause false-fires on
+   *    join-derived frames whose size estimate multiplied through the
+   *    join (q236's 60-row theil-sen pairs estimate gigabytes) —
+   *    harmless for picking a plan SHAPE, a pure regression if it
+   *    triggered materialization work on a tiny frame — so the honest
+   *    leaf estimate ([[estLeafRows]]) bounds the aggregate;
+   *  - above [[manyLeafRows]]: persist `df` (MEMORY_AND_DISK, under the
+   *    caller-owned-cache contract of [[graft.Caches]]) unless it is
+   *    [[scanShaped]] — the probe, the aggregate and the map-back each
+   *    replay the upstream otherwise (q235's windowed funnel gaps:
+   *    4.1 → 14.2 s at sf10 when the gate first fired on it) — then run
+   *    ONE bounded `approx_count_distinct` probe over (keys, value):
+   *    [[TieRegime.Aggregated]] iff rows / distinct ≥ 2, else
+   *    [[TieRegime.Direct]]. On near-unique doubles the distinct frame
+   *    is ~fact-sized and the aggregate plus map-back is pure overhead
+   *    (q134 +24% at sf10), while [[ranked]]'s bucketed cells
+   *    distribute the direct rank just as well. The distinct bound is
+   *    the probe's HLL++ figure inflated by its ~4% error margin.
+   *
+   * Above [[manyLeafRows]], merely CONSTRUCTING the consumer's plan
+   * runs the probe job, which also writes the persisted cache of a
+   * fact-sized input — the agg-to-literal convention's price, so
+   * `graft.Explain` on a big frame pays one cache-building pass first
+   * (minutes at sf10), not a hang.
+   */
+  def tieRank(df: DataFrame, keys: Seq[String], value: String): TieRank = {
+    if (!useBucketed(df)) return TieRank(df, keys, value, TieRegime.Window, 0)
+    if (!manyLeafRows(df)) return TieRank(df, keys, value, TieRegime.Aggregated, estLeafRows(df))
+    val input =
+      if (scanShaped(df)) df
+      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = input.agg(
+      approx_count_distinct(struct((keys :+ value).map(col): _*)).as("__gd"),
+      count(lit(1)).as("__gn")).head()
+    val d = math.max(1L, p.getLong(0))
+    val regime =
+      if (p.getLong(1).toDouble / d.toDouble >= 2.0) TieRegime.Aggregated else TieRegime.Direct
+    TieRank(input, keys, value, regime, BigInt(d * 104L / 100L))
   }
 
   /**

@@ -960,20 +960,14 @@ object Relational {
    * division, `dense_rank` = distinct values at or below). Output
    * types match the window functions' (int ranks, double cume_dist).
    *
-   * Because every output is TIE-INVARIANT, a tying value column admits
-   * a formulation where the fact rows never sort at all: aggregate to
-   * the distinct (keys, value) frame with counts, rank THAT (on the
-   * per-(keys, value) frame the row number IS dense_rank, the
-   * exclusive running count + 1 IS rank, and the inclusive running
-   * count over the key total IS cume_dist), and map the ranks back
-   * onto the fact rows by (keys, value) — broadcast when the probed
-   * distinct count × schema row width fits
-   * [[Gates.RankBroadcastBytes]] (default 64 MiB), else a hash join
-   * that still never sorts the fact side. Above the gate one bounded
-   * probe (the groupQuantiles shrink probe) routes: shrink ≥ 2 takes
-   * the value-aggregated path (q166's sf10 prices shrink 101×: 60 M
-   * rows → 594 k distinct, turning a 60 M-row exchange+sort into scan
-   * + tiny rank + broadcast join), near-unique values keep the direct
+   * Because every output is TIE-INVARIANT, [[RangeRank.tieRank]]
+   * decides the plan above the threshold: its value-aggregated plan
+   * never sorts the fact rows — on the per-(keys, value) frame the row
+   * number IS dense_rank, the exclusive running count + 1 IS rank and
+   * the inclusive running count over the key total IS cume_dist — and
+   * maps the three back (q166's sf10 prices shrink 101×: 60 M rows →
+   * 594 k distinct, turning a 60 M-row exchange+sort into scan + tiny
+   * rank + broadcast join); near-unique values keep the direct
    * bucketed rank.
    */
   def rankFamily(
@@ -982,74 +976,30 @@ object Relational {
       cumeAs: String = "cd"): DataFrame = {
     require(keys.nonEmpty,
       "rankFamily needs partition keys: an unkeyed rank window is a global single-partition funnel")
-    if (!RangeRank.useBucketed(df)) {
-      val w = Window.partitionBy(keys.map(col): _*).orderBy(col(column))
-      return df.select(col("*"), rank().over(w).as(rankAs),
-        dense_rank().over(w).as(denseAs), cume_dist().over(w).as(cumeAs))
-    }
-    // persist non-scan-shaped inputs before probing: the probe, the
-    // value aggregate and the map-back each replay the upstream
-    // otherwise (the groupQuantiles multi-consumption rule). The
-    // direct branch consumes df twice (window pass + cell counts), so
-    // the persist is not new cost on either branch.
-    val bigScan = RangeRank.manyLeafRows(df)
-    val fact =
-      if (bigScan && !RangeRank.scanShaped(df))
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    val gk = keys :+ column
-    val shrinkProbe: Option[(Long, Long)] =
-      if (!bigScan) None
-      else {
-        val p = fact.agg(
-          approx_count_distinct(struct(gk.map(col): _*)).as("__gd"),
-          count(lit(1)).as("__gn")).head()
-        Some((math.max(1L, p.getLong(0)), p.getLong(1)))
-      }
-    val useValueAgg = shrinkProbe.exists { case (d, n) =>
-      n.toDouble / d.toDouble >= 2.0
-    }
-    if (!useValueAgg) {
-      RangeRank.ranked(fact, keys, column,
-        extras = RangeRank.Extras(peerMinAs = Some("__gpmin"),
-          peerMaxAs = Some("__gpmax"), denseAs = Some("__gpdn")))
-        .withColumn(rankAs, col("__gpmin").cast("int"))
-        .withColumn(denseAs, col("__gpdn").cast("int"))
-        .withColumn(cumeAs,
-          col("__gpmax").cast("double") / col("__gnt").cast("double"))
-        .drop("__grn", "__gnt", "__gpmin", "__gpmax", "__gpdn")
-    } else {
-      val cnted = fact.select(gk.map(col): _*)
-        .groupBy(gk.map(col): _*).agg(count(lit(1)).as("__qc"))
-      val ranked = RangeRank.ranked(cnted, keys, column,
-        rnAs = "__qdn", ntAs = "__qng",
-        extras = RangeRank.Extras(
+    val tr = RangeRank.tieRank(df, keys, column)
+    tr.regime match {
+      case RangeRank.TieRegime.Window =>
+        val w = Window.partitionBy(keys.map(col): _*).orderBy(col(column))
+        df.select(col("*"), rank().over(w).as(rankAs),
+          dense_rank().over(w).as(denseAs), cume_dist().over(w).as(cumeAs))
+      case RangeRank.TieRegime.Direct =>
+        RangeRank.ranked(tr.input, keys, column,
+          extras = RangeRank.Extras(peerMinAs = Some("__gpmin"),
+            peerMaxAs = Some("__gpmax"), denseAs = Some("__gpdn")))
+          .withColumn(rankAs, col("__gpmin").cast("int"))
+          .withColumn(denseAs, col("__gpdn").cast("int"))
+          .withColumn(cumeAs,
+            col("__gpmax").cast("double") / col("__gnt").cast("double"))
+          .drop("__grn", "__gnt", "__gpmin", "__gpmax", "__gpdn")
+      case RangeRank.TieRegime.Aggregated =>
+        val ranked = tr.counted(RangeRank.Extras(
           rangeSums = Seq(col("__qc") -> "__qhi"),
-          keyTotals = Seq((col("__qc"), "__qnt"))))
-      val vals = ranked.select(
-        gk.map(c => col(c).as(s"__qk_$c")) ++ Seq(
+          keyTotals = Seq(col("__qc") -> "__qnt")))
+        tr.mapBack(ranked.select((keys :+ column).map(col) ++ Seq(
           (col("__qhi") - col("__qc") + 1).cast("int").as(rankAs),
-          col("__qdn").cast("int").as(denseAs),
+          col("__grn").cast("int").as(denseAs),
           (col("__qhi").cast("double") / col("__qnt").cast("double"))
-            .as(cumeAs)): _*)
-      // broadcast the ranked value frame when the PROBED distinct count
-      // is bounded — the fact side then never shuffles at all; above
-      // the bar, hash-build on the (small) value side so the fact side
-      // still never sorts. The gate is BYTE-aware: the probe is an
-      // HLL++ estimate (±~2-4% at default rsd), so it is inflated by
-      // that margin and multiplied by the schema's default per-row
-      // width against `Gates.RankBroadcastBytes` — a row-count bar
-      // alone would let a near-bar under-estimate broadcast a wide
-      // multi-key frame measured in hundreds of MB.
-      val byteBar = Gates.read(Gates.RankBroadcastBytes, fact.sparkSession)
-      val rowBytes = math.max(1L,
-        vals.schema.fields.map(_.dataType.defaultSize.toLong).sum)
-      val fits = shrinkProbe.exists { case (d, _) => (d * 104L) / 100L * rowBytes <= byteBar }
-      val rhs = if (fits) broadcast(vals) else vals.hint("shuffle_hash")
-      // null-safe map-back: a null key or value groups as its own peer
-      // set and must rejoin its own rank row
-      val cond = gk.map(c => col(c) <=> col(s"__qk_$c")).reduce(_ && _)
-      fact.join(rhs, cond).drop(gk.map(c => s"__qk_$c"): _*)
+            .as(cumeAs)): _*))
     }
   }
 

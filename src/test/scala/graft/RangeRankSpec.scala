@@ -139,9 +139,11 @@ class RangeRankSpec extends SparkSpec {
 
   test("percentRankScale picks the regime by distinct shrink: aggregated vs direct") {
     // tie-heavy (shrink ~43): the rank must run over the value-aggregated
-    // frame (__gvc counts) and join back; near-unique (shrink ~1): the
+    // frame (__qc counts) and join back; near-unique (shrink ~1): the
     // aggregate + join-back is strictly more work than ranking the fact,
-    // so the plan must rank DIRECTLY (no __gvc, peer-min recomposition)
+    // so the plan must rank DIRECTLY (no __qc, peer-min recomposition).
+    // The shrink probe runs only on a genuinely large input, so both
+    // plans force the leaf-rows clause down too.
     val tieHeavy = spark.range(3000).select(
       (col("id") % 7).cast("string").as("k"),
       (col("id") % 10).cast("double").as("v"), col("id"))
@@ -151,15 +153,15 @@ class RangeRankSpec extends SparkSpec {
     def run(df: DataFrame) = Features.percentRankScale(df, "v", Seq("k"))
     assertSame(run(tieHeavy), run(tieHeavy))
     assertSame(run(nearUnique), run(nearUnique))
-    val aggPlan = forcedBucketed(
-      run(tieHeavy).queryExecution.optimizedPlan.toString)
-    assert(aggPlan.contains("__gvc"),
+    val aggPlan = forcedBucketed(forcedBigScan(
+      run(tieHeavy).queryExecution.optimizedPlan.toString))
+    assert(aggPlan.contains("__qc"),
       s"tie-heavy input must take the value-aggregated path, got:\n$aggPlan")
-    val directPlan = forcedBucketed(
-      run(nearUnique).queryExecution.optimizedPlan.toString)
+    val directPlan = forcedBucketed(forcedBigScan(
+      run(nearUnique).queryExecution.optimizedPlan.toString))
     // the __gpmin alias inlines under projection collapse; the cell-local
     // peer-min (__glpmin) is the surviving marker of the direct rank
-    assert(!directPlan.contains("__gvc") && directPlan.contains("__glpmin"),
+    assert(!directPlan.contains("__qc") && directPlan.contains("__glpmin"),
       s"near-unique input must rank the fact directly, got:\n$directPlan")
   }
 
@@ -217,39 +219,6 @@ class RangeRankSpec extends SparkSpec {
     assertSame(runMad(dense), runMad(dense))
     assertSame(runMad(messy), runMad(messy))
     assertSame(runTm(dense), runTm(dense))
-    // and the scale path really IS value-aggregated — on data that
-    // actually ties: the forced plan carries the per-(keys, value)
-    // count column when the shrink probe sees ≥ 2x
-    // the probe (and the persist it reads through) keys on the
-    // LEAF-rows clause — forcedBigScan forces it down so spec-sized
-    // frames count as genuinely large and the shrink probe actually
-    // runs (its finally clears the persisted projection, pass or fail)
-    val tied = spark.range(3000).select(
-      (col("id") % 7).cast("string").as("k"),
-      (col("id") % 5).cast("double").as("v"))
-    val planTied = forcedBucketed(forcedBigScan(
-      Features.groupQuantiles(tied, Seq("k"), "v", Seq(0.5 -> "p50"))
-        .queryExecution.optimizedPlan.toString))
-    assert(planTied.contains("__qc"),
-      s"expected the value-aggregated plan on tied data, got:\n$planTied")
-    // ...and on near-unique values the probe routes the rank DIRECTLY
-    // onto the fact rows (the percentRankScale near-unique guard): the
-    // value-aggregation would be ~fact-sized pure overhead (measured
-    // +24% on sf10 prices), and ranked()'s bucketed cells distribute
-    // the direct rank just as well
-    val planDense = forcedBucketed(forcedBigScan(
-      Features.groupQuantiles(dense, Seq("k"), "v", Seq(0.5 -> "p50"))
-        .queryExecution.optimizedPlan.toString))
-    assert(!planDense.contains("__qc"),
-      s"expected the direct (non-aggregated) plan on near-unique data, got:\n$planDense")
-    // byte-clause fire WITHOUT a big scan (the q236 join-product
-    // false-fire shape): the value-aggregated plan without probe or
-    // persist — exactly the pre-probe behavior on tiny frames
-    val planSmall = forcedBucketed(
-      Features.groupQuantiles(dense, Seq("k"), "v", Seq(0.5 -> "p50"))
-        .queryExecution.optimizedPlan.toString)
-    assert(planSmall.contains("__qc"),
-      s"expected the value-aggregated plan on a byte-fired small frame, got:\n$planSmall")
   }
 
   test("groupQuantiles direct branch: bit-parity with the window path, keyed and keyless") {
@@ -293,13 +262,10 @@ class RangeRankSpec extends SparkSpec {
       .repartition(9)
     def run(df: DataFrame) = Relational.rankFamily(df, "v", Seq("k"))
     val want = canon(run(tiedNulls))
-    val (got, plan) = forcedBucketed(forcedBigScan {
-      val q = run(tiedNulls)
-      (canon(q), q.queryExecution.optimizedPlan.toString)
-    })
-    assert(plan.contains("__qc"),
-      s"tied data above the gate must take the value-aggregated branch, got:\n$plan")
-    assert(got == want, "value-aggregated rank family diverged from window path")
+    // the regime and the broadcast map-back's values are pinned by the
+    // shared tie-invariant case below; here only the join strategy
+    val plan = forcedBucketed(forcedBigScan(
+      run(tiedNulls).queryExecution.optimizedPlan.toString))
     assert(!plan.contains("strategy=shuffle_hash"), s"expected the broadcast map-back:\n$plan")
     // above the broadcast byte gate the ranked values hash-join back
     val (gotH, planH) = forcedBucketed(forcedBigScan {
@@ -312,17 +278,63 @@ class RangeRankSpec extends SparkSpec {
     assert(planH.contains("__qc") && planH.contains("strategy=shuffle_hash"),
       s"expected the shuffle_hash map-back:\n$planH")
     assert(gotH == want, "shuffle_hash map-back diverged from window path")
-    // near-unique values keep the direct bucketed rank (no __qc)
-    val uniq = spark.range(3000).select(
+  }
+
+  test("tie-invariant consumers share one regime rule: bit-parity with the window path") {
+    // tying values with nulls in both key and value (shrink ~4), and
+    // near-unique values (shrink ~1)
+    val tied = spark.range(3000).select(
+      when(col("id") % 13 === 0, lit(null).cast("string"))
+        .otherwise((col("id") % 7).cast("string")).as("k"),
+      when(col("id") % 11 === 0, lit(null).cast("double"))
+        .otherwise((col("id") % 5).cast("double")).as("v"),
+      col("id"))
+      .repartition(9)
+    val nearUnique = spark.range(3000).select(
       (col("id") % 7).cast("string").as("k"),
-      (sin(col("id").cast("double")) * 50).as("v"), col("id"))
-    val (gotU, planU) = forcedBucketed(forcedBigScan {
-      val q = run(uniq)
-      (canon(q), q.queryExecution.optimizedPlan.toString)
+      when(col("id") % 97 === 0, lit(null).cast("double"))
+        .otherwise(sin(col("id").cast("double")) * 50).as("v"),
+      col("id"))
+      .repartition(11)
+    val qps = Seq(0.0 -> "p0", 0.25 -> "p25", 0.5 -> "p50", 0.9 -> "p90", 1.0 -> "p100")
+    val consumers: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "groupQuantiles" ->
+        (df => Features.groupQuantiles(df, Seq("k"), "v", qps, countAs = Some("n"))),
+      "percentRankScale" -> (df => Features.percentRankScale(df, "v", Seq("k"))),
+      "rankFamily" -> (df => Relational.rankFamily(df, "v", Seq("k"))))
+    // (regime, input, leaf rows forced large, expected plan). The
+    // byte-only fire is the join-product shape: no probe, so it
+    // value-aggregates whatever the shrink.
+    val regimes = Seq(
+      ("byte-only fire", tied, false, "aggregated"),
+      ("big + tied", tied, true, "aggregated"),
+      ("big + near-unique", nearUnique, true, "direct"))
+    def result(q: DataFrame) =
+      (q.schema.map(f => (f.name, f.dataType)).sortBy(_._1), canon(q))
+    // the per-(keys, value) count marks the value-aggregated plan, the
+    // cell column a direct bucketed rank of the input rows
+    def planOf(plan: String) =
+      if (plan.contains("__qc")) "aggregated" else if (plan.contains("__gbkt")) "direct" else "window"
+    for ((name, run) <- consumers; (regime, in, big, expected) <- regimes) {
+      val want = result(run(in))
+      val (got, plan) = forcedBucketed {
+        def body = { val q = run(in); (result(q), q.queryExecution.optimizedPlan.toString) }
+        if (big) forcedBigScan(body) else body
+      }
+      assert(planOf(plan) == expected, s"$name, $regime: expected the $expected plan, got:\n$plan")
+      assert(got == want, s"$name, $regime: diverged from the window path")
+    }
+    // a non-scan-shaped input is persisted before the probe, so the
+    // probe, the rank and the map-back read it once
+    val aggregatedIn = tied.groupBy("k", "v").agg(max(col("id")).as("id"))
+    val run = consumers.find(_._1 == "percentRankScale").get._2
+    val want = result(run(aggregatedIn))
+    forcedBucketed(forcedBigScan {
+      val q = run(aggregatedIn)
+      assert(aggregatedIn.storageLevel.useMemory,
+        "percentRankScale must persist a non-scan-shaped input before probing it")
+      assert(result(q) == want, "persisted input diverged from the window path")
     })
-    assert(!planU.contains("__qc"),
-      s"near-unique data must keep the direct rank, got:\n$planU")
-    assert(gotU == canon(run(uniq)))
   }
 
   test("rows clause sums leaf estimates through unions") {

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * Source-layout rules that no compiler enforces, checked by reading the
  * files (no session): the shortest-string decimal encoding and the
  * moment closed forms are spelled only in `graft.functions.Exact`, the
- * environment is read only through the gate table, and every
- * checkpoint is a counted one.
+ * environment is read only through the gate table, every checkpoint is
+ * a counted one, and the tie-invariant rank decision lives only in
+ * `RangeRank`.
  */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -61,6 +62,17 @@ class SourceRulesSpec extends AnyFunSuite {
     rules.foreach { case (what, pattern) =>
       val found = hits(operatorFiles, pattern)
       assert(found.isEmpty, s"$what outside Exact: ${found.mkString(", ")}")
+    }
+  }
+
+  test("under operators/, only RangeRank.scala spells the shrink probe and the persist guard") {
+    val rules = Seq(
+      "distinct-count probe" -> """approx_count_distinct\(struct\(""",
+      "scanShaped call" -> """scanShaped\(""")
+    rules.foreach { case (what, pattern) =>
+      val found = hits(operatorFiles, pattern)
+      assert(found.exists(_.startsWith("RangeRank.scala:")), s"RangeRank must still hold the $what")
+      assert(found.forall(_.startsWith("RangeRank.scala:")), s"$what outside RangeRank: ${found.mkString(", ")}")
     }
   }
 
