@@ -71,9 +71,10 @@ object Caches {
    * checkpoints a vector AND its norm per iteration); `advance()`
    * seals the generation and releases the blocks of the one BEFORE it,
    * which the just-materialized generation no longer reads. The final
-   * generation is never released here — the returned plan still scans
-   * it; the caller sweeps it via [[releaseAll]] per the caller-owned
-   * contract above.
+   * generation is never released by `advance` — the returned plan
+   * still scans it; the caller sweeps it via [[releaseAll]] per the
+   * caller-owned contract above. `release()` drops every generation
+   * at once, for frames no returned plan reads.
    */
   final class CheckpointRoller(spark: SparkSession) {
     private var prev: Set[Int] = Set.empty
@@ -95,6 +96,9 @@ object Caches {
       prev = cur
       cur = Set.empty
     }
+
+    /** Release every generation this roller still holds. */
+    def release(): Unit = { advance(); advance() }
   }
 
   /**

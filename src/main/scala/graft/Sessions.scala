@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.operators.Gates
 
 /**
@@ -8,7 +9,9 @@ import graft.operators.Gates
  * (Verify / Bench / Profile / Explain): one place for the master, shuffle
  * parallelism, AQE, UTC, UI, and catalog-required confs — so a
  * single-query profile (Profile) always measures exactly the session Bench
- * benchmarks, and a new required conf lands everywhere at once.
+ * benchmarks, and a new required conf lands everywhere at once. The
+ * iterative graph loops take their scoped session confs from the one
+ * loop entry here, [[withLoop]].
  */
 object Sessions {
 
@@ -45,79 +48,116 @@ object Sessions {
     if (f.exists()) walk(f) else 0L
   }
 
-  /** Static shuffle width for a NARROW loop (see below): one partition
-   *  per ~250k narrow loop rows, floored at 1 — a loop under 500k rows
-   *  runs one task per stage, and loops of at least 1 M rows keep the
-   *  width the old floor of 4 gave them. Below that every extra task
-   *  is per-round scheduling over a few hundred KB: on q62 at sf0.1
-   *  (8,000 directed edges, 4 cores, perfbench `curation_loops`, 5
-   *  alternating pairs, counted checkpoints on both sides) floor 1 ran
-   *  a pass in 1.06 s median against 1.48 s at floor 4, lower in every
-   *  pair. */
-  def loopShufflePartitions(spark: SparkSession, rows: Long): Int =
-    Gates.width(spark.sparkContext.defaultParallelism, rows, 250000L, 1)
+  /**
+   * The regime of one iterative graph loop, decided by [[withLoop]]:
+   * the loop's exact edge row count, whether it runs narrow, the
+   * loop's current edge frame and its join hints.
+   *
+   * Edges roll in their OWN generation sequence, advanced only when a
+   * new edge frame supersedes the old one: a label roller's fixed
+   * two-generation cadence would release the last contracted frame
+   * while later rounds still join it once contraction stops early.
+   */
+  final class Loop private[Sessions] (
+      val rows: Long, val narrow: Boolean, roller: Caches.CheckpointRoller,
+      private var current: DataFrame) {
+
+    /** The loop's edge frame: the counted checkpoint, re-laid on the
+     *  loop key when narrow, or the last [[rollEdges]]. */
+    def edges: DataFrame = current
+
+    /** `df` with a SHUFFLE_HASH hint when narrow, as it is otherwise. */
+    def hinted(df: DataFrame): DataFrame =
+      if (narrow) df.hint("shuffle_hash") else df
+
+    /** Checkpoint `df` as the next edge generation and make it
+     *  [[edges]]; the generation before it is released. */
+    def rollEdges(df: DataFrame): Caches.Counted = {
+      val c = roller.roll(df)
+      roller.advance()
+      current = c.df
+      c
+    }
+  }
 
   /**
-   * Scoped AQE initial-partition override for ITERATIVE operators.
+   * The one entry of the iterative graph loops (connected components,
+   * pageRank): it counts the loop's edge frame, decides the loop's
+   * execution regime from that count, scopes the session confs of that
+   * regime around `body`, and owns every edge generation the loop
+   * checkpoints.
    *
-   * The input-sized ceiling above is right for one-pass scan-heavy
-   * plans and WRONG inside iteration loops over small frames: a
-   * connected-components round at sf10 shuffles ~10⁵-10⁶-row label and
-   * edge frames through 3-4 exchanges, and each exchange pays the
-   * per-partition scheduling/block overhead at the INPUT-sized ceiling
-   * (192 at sf10) once per round — measured 39.8 s → 8.7 s on q62's
-   * 4-round loop when the ceiling is dropped to cores. This helper
-   * sizes the ceiling by the LOOP frame instead: one initial partition
-   * per ~1M loop rows (loop rows are narrow — two longs — so 1M rows
-   * ≈ 16-30 MB, Spark's advisory size), floored at cores like the input
-   * rule. The conf is restored on exit; everything the loop
-   * materializes (checkpoints) runs under the override, and
-   * the returned frame is a checkpoint scan that plans no shuffles, so
-   * the restore cannot race the result.
+   *  1. `edges` rolls into one counted checkpoint ([[Caches.checkpoint]])
+   *     BEFORE the scope, under the caller's input-sized AQE ceiling:
+   *     the frame's own generation (a pair-generation distinct, a
+   *     weight join) is data-sized and must stay wide. Its exact row
+   *     count is [[Loop.rows]].
+   *  2. Loop shuffles are sized by the LOOP frame, not the input. The
+   *     input-sized ceiling ([[initialPartitions]]) is right for
+   *     one-pass scan-heavy plans and wrong inside iteration loops over
+   *     small frames: a connected-components round at sf10 shuffles
+   *     ~10⁵-10⁶-row label and edge frames through 3-4 exchanges, and
+   *     each exchange paid the per-partition scheduling/block overhead
+   *     at the input-sized ceiling (192 at sf10) once per round —
+   *     q62's 4-round loop measured 39.8 s → 8.7 s with the ceiling at
+   *     cores. Inside the scope the ceiling is one initial partition
+   *     per ~1 M loop rows (two longs a row: ~16-30 MB, Spark's
+   *     advisory size), floored at cores.
+   *  3. NARROW regime below `graft.loop.aqeOffEdges` rows
+   *     ([[graft.operators.Gates.LoopAqeOffEdges]]; 0 forces the AQE
+   *     regime at any size): adaptive execution OFF and a static
+   *     shuffle width of one partition per ~250 k loop rows, floored
+   *     at 1. Under AQE every exchange of every round materializes as
+   *     its OWN job with a replanning pass — a connected-components
+   *     round was ~8 jobs of 10-100 ms orchestration over frames of a
+   *     few MB (q62 3.1 → 1.7 s, q98 3.7 → 1.7 s at sf0.1, same labels);
+   *     with AQE off a round is ONE statically planned job. The floor
+   *     of 1 runs a loop under 500 k rows as one task per stage: on
+   *     q62 at sf0.1 (8,000 directed edges, 4 cores, perfbench
+   *     `curation_loops`, 5 alternating pairs) floor 1 ran a pass in
+   *     1.06 s median against 1.48 s at floor 4, lower in every pair.
+   *     Above the bar the loop keeps AQE: runtime skew handling
+   *     matters once loop frames are cluster-sized.
+   *  4. When narrow, the edge frame is re-laid hash(`key`) at the loop
+   *     width and rolled once, so each round's join on `key` streams
+   *     the checkpointed layout with no edge exchange.
+   *  5. [[Loop.hinted]] adds SHUFFLE_HASH when narrow. The hints
+   *     predate checkpoint scans carrying their true row counts, and
+   *     stay until an sf10 A/B shows the static planner's own picks
+   *     match them.
+   *  6. On exit, returned or thrown, every edge generation is released
+   *     and the three confs (`…adaptive.enabled`,
+   *     `…shuffle.partitions`, `…coalescePartitions.initialPartitionNum`)
+   *     are restored. `body` must return a frame that reads no edge
+   *     generation: the loops return checkpoint scans, which plan no
+   *     shuffle, so the restore cannot race the result.
    *
-   * `narrow = true` additionally pins the loop's execution regime for
-   * SMALL iteration frames (the caller gates on its measured loop row
-   * count): adaptive execution OFF and a static shuffle width from
-   * [[loopShufflePartitions]]. Rationale (round-14 profiling): under
-   * AQE every exchange of every round materializes as its OWN job with
-   * a replanning pass — a connected-components round was ~8 jobs of
-   * 10-100 ms orchestration over frames of a few MB. With AQE off the
-   * whole round is ONE statically-planned job; the loop frames are
-   * orders of magnitude below the sizes where AQE's coalescing/skew
-   * machinery earns its planning cost. Callers pair this with explicit
-   * join-strategy hints, which predate checkpoint scans carrying their
-   * true row counts ([[Caches.checkpoint]]) and stay until an sf10 A/B
-   * shows the static planner's own picks match them. Callers take the
-   * AQE regime instead when their `graft.loop.aqeOffEdges` gate is set
-   * to 0.
-   *
-   * Session-conf scoping caveat: Spark has no per-plan conf, so a
-   * CONCURRENT planner in the same session would see the override for
-   * the duration of `body` — the driver mains (Verify/Bench/Profile)
-   * are serial by construction.
+   * Spark has no per-plan conf, so a CONCURRENT planner in the same
+   * session would see the scoped confs while `body` runs; the driver
+   * mains are serial by construction.
    */
-  def withLoopPartitions[T](spark: SparkSession, rows: Long, narrow: Boolean)(body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+  def withLoop[T](edges: DataFrame, key: String)(body: Loop => T): T = {
+    val spark = edges.sparkSession
+    val roller = new Caches.CheckpointRoller(spark)
+    val counted = roller.roll(edges)
+    roller.advance()
+    val rows = counted.rows
+    val narrow = rows < Gates.read(Gates.LoopAqeOffEdges, spark)
     val cores = spark.sparkContext.defaultParallelism
-    val want = Gates.width(cores, rows, 1000000L, cores)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    val prevAqe = spark.conf.getOption(aqeKey)
-    val prevSp = spark.conf.getOption(spKey)
-    spark.conf.set(key, want.toString)
-    if (narrow) {
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(spKey, loopShufflePartitions(spark, rows).toString)
-    }
-    def restore(k: String, v: Option[String]): Unit = v match {
-      case Some(s) => spark.conf.set(k, s)
-      case None => spark.conf.unset(k)
-    }
-    try body
-    finally {
-      restore(key, prev)
-      if (narrow) { restore(aqeKey, prevAqe); restore(spKey, prevSp) }
+    val width = Gates.width(cores, rows, 250000L, 1)
+    val scoped = Seq("spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        Gates.width(cores, rows, 1000000L, cores).toString) ++
+      (if (narrow) Seq("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> width.toString) else Nil)
+    val saved = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    val loop = new Loop(rows, narrow, roller, counted.df)
+    try {
+      if (narrow) loop.rollEdges(counted.df.repartition(width, col(key)))
+      body(loop)
+    } finally {
+      roller.release()
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
   }
 

@@ -656,45 +656,22 @@ object Dedup {
     // previous one; the roller releases the dead generation instead of
     // letting maxIter generations of blocks pile up (CacheHygieneSpec)
     val roller = new graft.Caches.CheckpointRoller(spark)
-    // edges roll in their OWN generation sequence, advanced only when a
-    // new edge frame supersedes the old one: the label roller's fixed
-    // two-generation cadence would release the last contracted frame
-    // while later rounds still join it if contraction stops early (the
-    // count can fall below the gate mid-run)
-    val edgeRoller = new graft.Caches.CheckpointRoller(spark)
     // ONE scan of `pairs`, exploded into both directions — a self-union
     // would be two plan branches, i.e. the (possibly expensive: a whole
-    // LSH pipeline) pair generation evaluated twice. The edge
-    // checkpoint happens FIRST, under the caller's input-sized AQE
-    // ceiling — the pair-generation distinct is data-sized and must
-    // stay wide. Its exact row count then (a) gates contraction, (b)
-    // sizes the loop ceiling and (c) picks the loop execution regime.
-    val edges0 = edgeRoller.roll(pairs
+    // LSH pipeline) pair generation evaluated twice. The loop entry
+    // counts it in its edge checkpoint; that exact count gates
+    // contraction and picks the loop regime (Sessions.withLoop).
+    val directed = pairs
       .select(explode(array(
         struct(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst")),
         struct(col(idB).cast("long").as("src"), col(idA).cast("long").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= col("dst") && col("src").isNotNull && col("dst").isNotNull)
-      .distinct())
-    edgeRoller.advance()
-    val edgeCount0: Long = edges0.rows
+      .distinct()
+    graft.Sessions.withLoop(directed, "src") { loop =>
+    import loop.hinted
+    val edgeCount0: Long = loop.rows
     val contractMin: Long = Gates.read(Gates.CcContractMinEdges, spark)
-    // NARROW-LOOP regime (round-14): below `graft.loop.aqeOffEdges`
-    // directed edges (default 32 M, env SPARK_GRAFT_LOOP_AQE_OFF_EDGES)
-    // the loop runs with adaptive execution OFF at a static
-    // loop-row-sized shuffle width, every loop join carries an explicit
-    // SHUFFLE_HASH hint, and the edge frame is re-laid hash(src) at the
-    // loop width so the per-round propagate join reuses the cached
-    // layout with NO edge exchange. Measured at sf0.1 (min-of-3, same
-    // labels bit-for-bit): q62 3.1→1.7 s, q98 3.7→1.7 s — the per-round
-    // cost was ~8 AQE stage-materialization jobs of 10-100 ms
-    // orchestration each, not data. Above the bar everything keeps the
-    // round-13 AQE path (runtime skew handling matters once loop frames
-    // are cluster-sized); the bar is conf/env-overridable for A/B runs
-    // (0 forces the AQE path).
-    val smallLoop = edgeCount0 < Gates.read(Gates.LoopAqeOffEdges, spark)
-    def hinted(df: DataFrame): DataFrame =
-      if (smallLoop) df.hint("shuffle_hash") else df
     var iter = 0
     var edgeCount: Long = edgeCount0
     val edgeCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -717,24 +694,6 @@ object Dedup {
     val frozenParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val frozenCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
     val frozenRoller = new graft.Caches.CheckpointRoller(spark)
-    // Loop shuffles are sized by the LOOP frames, not the input: at the
-    // input-sized AQE ceiling every round paid per-partition overhead
-    // across 3-4 exchanges (q62 at sf10: 39.8 s → 8.7 s under the
-    // loop-sized ceiling — the round cost was partition count, not
-    // rows; see Sessions.withLoopPartitions). The first round is a
-    // loop-frame stage too, so it sits inside.
-    graft.Sessions.withLoopPartitions(spark,
-        math.max(1L, edgeCount0), narrow = smallLoop) {
-    var curEdges =
-      if (smallLoop) {
-        // loop-layout edges: one deterministic hash(src) relayout at
-        // the loop width — every round's propagate join then streams
-        // the cached layout with no per-round edge exchange
-        val relaid = edgeRoller.roll(edges0.df.repartition(
-          graft.Sessions.loopShufflePartitions(spark, edgeCount0), col("src"))).df
-        edgeRoller.advance()
-        relaid
-      } else edges0.df
     // FUSED first round: propagating from the identity labeling needs
     // no label frame at all — min(self, min(neighbors)) is ONE
     // aggregation over the edge frame (the separate labels-init
@@ -744,7 +703,7 @@ object Dedup {
     // materialization. Convergence can only be DETECTED from round 2
     // on (with any edge present, round 1 strictly lowers some label),
     // so the first comparable sum is this round's.
-    val first = curEdges.groupBy(col("src"))
+    val first = loop.edges.groupBy(col("src"))
       .agg(min(col("dst")).as("__gm"))
       .select(col("src").as("id"), least(col("src"), col("__gm")).as("label"))
     val firstRound = roller.roll({
@@ -762,7 +721,7 @@ object Dedup {
     var prev = firstRound.sum
     var converged = edgeCount0 == 0L
     while (!converged && iter < maxIter) {
-      val viaNeighbors = curEdges
+      val viaNeighbors = loop.edges
         .join(hinted(labels.withColumnRenamed("id", "src")), "src")
         .select(col("dst").as("id"), col("label").as("label"))
       // Fresh aliases on both union children: they share attribute ids
@@ -802,14 +761,12 @@ object Dedup {
         // drop self-loops (settled edges). Two relabel joins + a distinct
         // over the current (shrinking) edge frame; its checkpoint job
         // counts the new edge frame.
-        val contracted = edgeRoller.roll(curEdges
+        val contracted = loop.rollEdges(loop.edges
           .join(hinted(labels.select(col("id").as("src"), col("label").as("__ls"))), "src")
           .join(hinted(labels.select(col("id").as("dst"), col("label").as("__ld"))), "dst")
           .filter(col("__ls") =!= col("__ld"))
           .select(col("__ls").as("src"), col("__ld").as("dst"))
           .distinct())
-        edgeRoller.advance()
-        curEdges = contracted.df
         edgeCount = contracted.rows
         edgeCounts += edgeCount
         // Settled exit: the active vertex set is exactly the contracted
@@ -818,8 +775,8 @@ object Dedup {
         // id the active frame keeps evolving; the end resolution joins
         // it forward. activeIds is small post-shrink, so both splits
         // broadcast against the label frame.
-        val activeIds = curEdges.select(col("src").as("id"))
-          .union(curEdges.select(col("dst").as("id"))).distinct()
+        val activeIds = loop.edges.select(col("src").as("id"))
+          .union(loop.edges.select(col("dst").as("id"))).distinct()
         val frz = frozenRoller.roll(
           labels.join(hinted(activeIds), Seq("id"), "left_anti"))
         frozenParts += frz.df
@@ -834,13 +791,6 @@ object Dedup {
         prev = active.sum
       }
     }
-    // the final edge checkpoint (the first edge frame, the small-loop
-    // relayout or the last contraction) is dead once the loop converges
-    // — the label frames are materialized checkpoints; two advances
-    // release every generation the edge roller still holds
-    // (CacheHygieneSpec: live caches must be referenced by the returned
-    // plan)
-    edgeRoller.advance(); edgeRoller.advance()
     // Unconverged labels are MID-MERGE (multiple "keepers" inside one
     // true cluster) — silently returning them would ship duplicates.
     // With pointer jumping, maxIter rounds cover diameters past
@@ -874,9 +824,8 @@ object Dedup {
         frozenParts.reduce(_ unionByName _)), Label)
       roller.advance()
       // the frozen part checkpoints are dead now (the union checkpoint
-      // holds their rows); two advances walk them through the roller's
-      // cur -> prev -> released lifecycle
-      frozenRoller.advance(); frozenRoller.advance()
+      // holds their rows)
+      frozenRoller.release()
       var all = reunited.df
       var p = reunited.sum
       var done = false
@@ -898,7 +847,7 @@ object Dedup {
             s"fixpoint in $maxIter pointer-jump rounds")
       published(all.select(col("id"), col("label").as("component")), rIter)
     }
-    } // withLoopPartitions
+    } // withLoop
   }
 
   /**

@@ -42,8 +42,10 @@ object Gates {
    *  directed edges. */
   val CcContractMinEdges = Gate("graft.cc.contractMinEdges", 1000000L)
   /** Iterative graph loops run their narrow regime (AQE off, static
-   *  loop width, hash hints) below this many loop edge rows: connected
-   *  components counts directed edges, pageRank normalized edges. */
+   *  loop width, edges re-laid on the loop key, hash hints) below this
+   *  many counted loop edge rows: connected components counts directed
+   *  edges, pageRank normalized edges. Read only by the loop entry,
+   *  [[graft.Sessions.withLoop]]; 0 forces the AQE regime. */
   val LoopAqeOffEdges = Gate("graft.loop.aqeOffEdges", 32000000L)
   /** Naive Bayes scores through the dense broadcast (class, token) grid
    *  up to this many probed cells, the sparse join above. */

@@ -601,13 +601,17 @@ object Relational {
    * (single row or column: min dof = 0) yield NULL, never 0/0.
    *
    * Scale: input is the |a|×|b| cells frame — everything here is one
-   * bounded aggregation; the fact-table pass happened upstream.
+   * bounded aggregation; the fact-table pass happened upstream. The
+   * row and column counts are collect_set sizes over that bounded
+   * frame (null-skipping, 0 on empty input, like countDistinct): two
+   * countDistincts would plan an Expand whose grouping-set order
+   * depends on what the session planned before.
    */
   def cramersV(cells: DataFrame, aCol: String, bCol: String): DataFrame = {
     val m = cells.agg(
       sum(col("n")).as("n_obs"),
-      countDistinct(col(aCol)).as("__gr"),
-      countDistinct(col(bCol)).as("__gc"),
+      size(collect_set(col(aCol))).cast("long").as("__gr"),
+      size(collect_set(col(bCol))).cast("long").as("__gc"),
       sum(toDec(col("contribution"), "decimal(38,12)")).as("__gchi"))
     val dof = least(col("__gr") - 1, col("__gc") - 1)
     val chi2 = toD(col("__gchi"))
@@ -671,13 +675,15 @@ object Relational {
    * here rather than hidden.
    *
    * Scale: the normalized edge frame (src, dst, w, W) is built ONCE
-   * and persisted — it feeds every iteration, and without the persist
-   * the upstream (possibly fact-join-derived) plan would re-execute
-   * per iteration (the q151 lesson). The node set derives from the
-   * CACHED norm frame (an inner join of the edges with their own
-   * per-src aggregate carries exactly the edge rows), so the upstream
-   * is never replayed for it; \|V\| collects as one bounded
-   * agg-to-literal scalar (the k-means-centroid convention).
+   * and checkpointed by the loop entry ([[graft.Sessions.withLoop]]),
+   * which also picks the iteration regime from its exact row count —
+   * it feeds every iteration, and without the checkpoint the upstream
+   * (possibly fact-join-derived) plan would re-execute per iteration
+   * (the q151 lesson). The node set derives from the CHECKPOINTED
+   * norm frame (an inner join of the edges with their own per-src
+   * aggregate carries exactly the edge rows), so the upstream is never
+   * replayed for it; \|V\| is the node checkpoint's counted rows, a
+   * bounded scalar read with no job of its own.
    *
    * The recurrence iterates on the SPARSE per-target sums frame, not a
    * dense rank vector: rank(u) = (1−d)/N + d·coalesce(sums(u), 0) is
@@ -688,59 +694,40 @@ object Relational {
    * sf0.1 as pure per-job overhead: 44 jobs none above 0.45 s). The
    * inlined expression is the bit-identical tree the dense rank column
    * held, so every iterate — and the oracle hash — is unchanged.
-   * Iterations are materialized as rolled checkpoints (round 14 — see
-   * the loop-regime comment in the body), so the norm cache is
-   * released in-operator; the node frame and the final sums checkpoint
-   * feed the returned plan and are swept by the caller
-   * ([[graft.Caches.releaseAll]]). At 100 TB pass a pre-aggregated
-   * edge table.
+   * Iterations are materialized as rolled checkpoints, so the edge
+   * checkpoints are released in the loop entry; the node checkpoint
+   * and the final sums checkpoint feed the returned plan and are swept
+   * by the caller ([[graft.Caches.releaseAll]]). At 100 TB pass a
+   * pre-aggregated edge table.
    */
   def pageRank(
       edges: DataFrame, src: String, dst: String, weight: String,
       iterations: Int, damping: Double): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
     require(damping > 0 && damping < 1, "pageRank needs damping in (0,1)")
-    val spark = edges.sparkSession
     val outW = edges.groupBy(col(src)).agg(sum(col(weight)).as("__gW"))
-    val norm0 = edges.select(col(src), col(dst), col(weight))
-      .join(outW, src).persist()
-    val nodes = norm0.select(col(src).as("node"))
-      .union(norm0.select(col(dst).as("node"))).distinct().persist()
-    // |V| as a literal: one long off a counted cache scan — the same
-    // value the old dense path carried as a crossed-in __gN column
-    val gN = lit(nodes.count()).cast("double")
-    val d = lit(damping)
-    // rank(u) given u's incoming-contribution sum (NULL = no in-links):
-    // the exact expression the dense path materialized per node
-    def rankOf(sumCol: Column): Column =
-      (lit(1.0d) - d) / gN +
-        d * coalesce(toD(sumCol), lit(0.0d))
-    // EAGER iteration under the narrow loop regime (round-14, the CC
-    // recipe): the lazy `iterations`-deep plan paid AQE stage
-    // materialization + replanning per exchange per iteration plus a
-    // ~1.2 s deep-plan planning gap at the one action (profiled at
-    // sf0.1: 31 jobs for 5 iterations). Below
-    // `graft.loop.aqeOffEdges` normalized edges (default 32 M;
-    // 0 forces the AQE path) each iteration is ONE statically
-    // planned checkpoint job; the norm frame is re-laid hash(src) at
-    // the loop width once so the per-iteration join streams it with no
-    // exchange, and the vertex-sized sums side carries an explicit
-    // SHUFFLE_HASH hint (see Sessions.withLoopPartitions). Values are
-    // bit-identical: the checkpoint only materializes the same
-    // expression tree, and the per-target sums are order-free
-    // DECIMAL(38,30) string images.
-    val edgeRows = norm0.count()
-    val narrow = edgeRows < Gates.read(Gates.LoopAqeOffEdges, spark)
-    def hinted(dfh: DataFrame): DataFrame =
-      if (narrow) dfh.hint("shuffle_hash") else dfh
-    graft.Sessions.withLoopPartitions(spark, math.max(1L, edgeRows), narrow) {
-      val roller = new graft.Caches.CheckpointRoller(spark)
-      val edgeRoller = new graft.Caches.CheckpointRoller(spark)
-      val norm =
-        if (narrow)
-          edgeRoller.roll(norm0.repartition(
-            graft.Sessions.loopShufflePartitions(spark, edgeRows), col(src))).df
-        else norm0
+    val normalized = edges.select(col(src), col(dst), col(weight)).join(outW, src)
+    // EAGER iteration under the loop entry's regime (Sessions.withLoop):
+    // the lazy `iterations`-deep plan paid AQE stage materialization +
+    // replanning per exchange per iteration plus a ~1.2 s deep-plan
+    // planning gap at the one action (profiled at sf0.1: 31 jobs for 5
+    // iterations). Values are bit-identical: the checkpoints only
+    // materialize the same expression trees, and the per-target sums
+    // are order-free DECIMAL(38,30) string images.
+    graft.Sessions.withLoop(normalized, src) { loop =>
+      val norm = loop.edges
+      // |V| as a literal: the node checkpoint's own row count — the same
+      // value the old dense path carried as a crossed-in __gN column
+      val nodes = graft.Caches.checkpoint(norm.select(col(src).as("node"))
+        .union(norm.select(col(dst).as("node"))).distinct())
+      val gN = lit(nodes.rows).cast("double")
+      val d = lit(damping)
+      // rank(u) given u's incoming-contribution sum (NULL = no in-links):
+      // the exact expression the dense path materialized per node
+      def rankOf(sumCol: Column): Column =
+        (lit(1.0d) - d) / gN +
+          d * coalesce(toD(sumCol), lit(0.0d))
+      val roller = new graft.Caches.CheckpointRoller(edges.sparkSession)
       var sums: Option[DataFrame] = None
       (1 to iterations).foreach { _ =>
         val contrib = sums match {
@@ -749,7 +736,7 @@ object Relational {
               toDec((lit(1.0d) / gN) * col(weight).cast("double") /
                 col("__gW").cast("double"), "decimal(38,30)").as("__gc"))
           case Some(s0) =>
-            norm.join(hinted(s0.select(col("__gdst").as("__gsrc"), col("__gs"))),
+            norm.join(loop.hinted(s0.select(col("__gdst").as("__gsrc"), col("__gs"))),
                 col(src) === col("__gsrc"), "left")
               .select(col(dst).as("__gdst"),
                 toDec(rankOf(col("__gs")) * col(weight).cast("double") /
@@ -759,12 +746,9 @@ object Relational {
           contrib.groupBy(col("__gdst")).agg(sum(col("__gc")).as("__gs"))).df)
         roller.advance()
       }
-      // iterations are materialized checkpoints now: the relaid edge
-      // frame and the persisted norm are dead — only nodes and the
-      // final sums checkpoint feed the returned plan (cache hygiene)
-      edgeRoller.advance(); edgeRoller.advance()
-      norm0.unpersist()
-      nodes.join(sums.get, col("node") === col("__gdst"), "left")
+      // only the node checkpoint and the final sums checkpoint feed the
+      // returned plan; the loop entry releases the edge generations
+      nodes.df.join(sums.get, col("node") === col("__gdst"), "left")
         .select(col("node"), rankOf(col("__gs")).as("rank"))
     }
   }

@@ -82,11 +82,10 @@ class CacheHygieneSpec extends SparkSpec {
       "q223_minhash_estimate" -> 1,
       "q232_naive_bayes" -> 2, // doc-token frame + vocab-sized counts
       "q233_bm25" -> 2, // df + score support frames
-      // iterative training: persisted base frames every iteration joins
-      // (pagerank norm+base, label-prop edges+seeds) — referenced by the
-      // returned rank/label lineage
-      "q209_pagerank" -> 2,
-      "q210_label_prop" -> 2,
+      // iterative training: frames the returned rank/label lineage
+      // reads
+      "q209_pagerank" -> 2, // node checkpoint + final sums
+      "q210_label_prop" -> 2, // persisted edges + seeds
       // trained-model frames: the final checkpointed generation the
       // returned plan scans (power-iteration u+norm, last centroids +
       // feature cache, final GD weights)

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * files (no session): the shortest-string decimal encoding and the
  * moment closed forms are spelled only in `graft.functions.Exact`, the
  * environment is read only through the gate table, every checkpoint is
- * a counted one, and the tie-invariant rank decision lives only in
- * `RangeRank`.
+ * a counted one, the tie-invariant rank decision lives only in
+ * `RangeRank`, and the iterative loops' regime only in `Sessions.withLoop`.
  */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -74,6 +74,19 @@ class SourceRulesSpec extends AnyFunSuite {
       assert(found.exists(_.startsWith("RangeRank.scala:")), s"RangeRank must still hold the $what")
       assert(found.forall(_.startsWith("RangeRank.scala:")), s"$what outside RangeRank: ${found.mkString(", ")}")
     }
+  }
+
+  test("under operators/, no file reads the loop gate or sets a spark.sql conf") {
+    val rules = Seq(
+      "loop-regime gate read" -> """Gates\.LoopAqeOffEdges""",
+      "session conf write" -> """\bconf\.(?:set|unset)\(""",
+      "spark.sql conf key" -> "\"spark\\.sql\\.")
+    rules.foreach { case (what, pattern) =>
+      val found = hits(operatorFiles, pattern)
+      assert(found.isEmpty, s"$what outside Sessions.withLoop: ${found.mkString(", ")}")
+    }
+    assert(hits(Seq(new File(root, "Sessions.scala")), """Gates\.LoopAqeOffEdges""").nonEmpty,
+      "the loop entry must still read the gate")
   }
 
   test("under operators/ and in Sessions, only Gates.scala reads sys.env") {
