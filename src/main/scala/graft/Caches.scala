@@ -1,37 +1,47 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{CountedCheckpoint, DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /**
- * The caller-owned-cache contract, in one place.
+ * Every cache graft makes, in one place: the storage level, the counted
+ * checkpoint, and the two lifetimes a cached frame can have. No other
+ * file names a storage level or calls the Spark cache API
+ * (`SourceRulesSpec`).
  *
- * Several operators persist an intermediate frame that the RETURNED
- * (lazy) DataFrame still reads — multi-branch frames like
- * `Dedup.goldenRecord`'s records⋈labels join, `setSimilarityJoin`'s
- * ordered-token frame, the md5 sketch twins' signature frames, or
- * `Similarity.hyperplaneLshPairs`' bucket frame. Those operators CANNOT
- * eagerly unpersist (the result has not run yet); the cache lifetime
- * belongs to the caller:
+ *  - CALLER-OWNED ([[persist]], [[checkpoint]]): the RETURNED lazy
+ *    frame still reads the cache, so the operator cannot release it —
+ *    `Dedup.goldenRecord`'s records⋈labels join, `setSimilarityJoin`'s
+ *    ordered-token frame, the md5 sketch twins' signature frames,
+ *    `Similarity.hyperplaneLshPairs`' bucket frame. It lives until
+ *    [[releaseAll]]: run-once callers (Verify, Bench, one-shot jobs)
+ *    call it after materializing each query; interactive callers keep
+ *    the cache while re-querying and release when done.
+ *  - SCOPED ([[scoped]]): a frame DEAD before the operator returns — a
+ *    training pass that ends in a checkpointed model (`pcaPower`,
+ *    `logisticWeights`), a sample the driver loop collects from
+ *    (`kmeansCentroids`), a micro-batch read by two actions. The scope
+ *    releases it on return and on throw. Rollers made in a scope keep
+ *    their final generation for the caller on return (the returned
+ *    plan scans it) and hold nothing after a throw.
  *
- *  - run-once callers (Verify, Bench, one-shot jobs): call
- *    [[releaseAll]] after materializing each query;
- *  - interactive/repeated callers: keep the cache while re-querying,
- *    release when done.
- *
- * Operators whose persisted frame is DEAD before return (training
- * passes that end in a checkpointed model frame: `pcaPower`,
- * `logisticWeights`, `kmeansFit`'s feature frame) must instead
- * eager-unpersist inside the operator — `CacheHygieneSpec` audits every
- * persisting query entry for exactly that distinction: after
- * materialization, every live cache entry must be referenced by the
- * returned plan, and after [[releaseAll]] the session must be clean.
+ * `CacheHygieneSpec` audits the distinction: after materialization
+ * every live cache entry is one the returned plan references, and
+ * after [[releaseAll]] the session is clean.
  */
 object Caches {
 
+  /** Persist `df` for the caller at graft's one storage level: it
+   *  lives until [[release]] or [[releaseAll]]. */
+  def persist(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Release one [[persist]]ed frame. */
+  def release(df: DataFrame): Unit = df.unpersist()
+
   /** A checkpoint frame and what its one job counted: the exact row
    *  count and, when asked, the exact sum of one long column. */
-  final case class Counted(df: DataFrame, rows: Long, sum: BigInt)(
-      private[graft] val rddId: Int)
+  final case class Counted(df: DataFrame, rows: Long, sum: BigInt)(private[graft] val rdd: RDD[_])
 
   /**
    * The counted checkpoint, the one way graft checkpoints a frame.
@@ -50,12 +60,12 @@ object Caches {
    * a count or a fixpoint sum of a frame it checkpoints reads it here
    * instead of paying a second job.
    *
-   * Blocks live until [[releaseAll]] (or a roller's [[CheckpointRoller.advance]]).
+   * Caller-owned: blocks live until [[releaseAll]]. A scope's
+   * [[Scope.checkpoint]] and [[CheckpointRoller.roll]] release theirs
+   * sooner.
    */
-  def checkpoint(df: DataFrame, sumOf: Option[String] = None): Counted = {
-    val (cp, rddId, rows, sum) = CountedCheckpoint.localCheckpoint(df, sumOf)
-    Counted(cp, rows, sum)(rddId)
-  }
+  def checkpoint(df: DataFrame, sumOf: Option[String] = None): Counted =
+    CountedCheckpoint.localCheckpoint(df, sumOf)
 
   /**
    * Rolling counted checkpoints for iterative operators (pointer-jumping
@@ -70,31 +80,32 @@ object Caches {
    * generation (a generation may hold several frames — pcaPower
    * checkpoints a vector AND its norm per iteration); `advance()`
    * seals the generation and releases the blocks of the one BEFORE it,
-   * which the just-materialized generation no longer reads. The final
-   * generation is never released by `advance` — the returned plan
-   * still scans it; the caller sweeps it via [[releaseAll]] per the
-   * caller-owned contract above. `release()` drops every generation
-   * at once, for frames no returned plan reads.
+   * which the just-materialized generation no longer reads. What the
+   * roller still holds when its scope returns stays for the caller —
+   * the returned plan scans it — until [[releaseAll]]; a throw releases
+   * it. `release()` drops every generation at once, for frames no
+   * returned plan reads. Made only by [[Scope.roller]], in the scope
+   * it registers with.
    */
-  final class CheckpointRoller(spark: SparkSession) {
-    private var prev: Set[Int] = Set.empty
-    private var cur: Set[Int] = Set.empty
+  final class CheckpointRoller private[Caches] (scope: Scope) {
+    scope.rollers ::= this
+    private var prev = Seq.empty[Counted]
+    private var cur = Seq.empty[Counted]
 
     /** [[checkpoint]] `df` into the current generation. A roller owns
      *  exactly the checkpoint RDDs it made, never a caller-owned Dataset
      *  cache the checkpoint job happened to materialize first. */
     def roll(df: DataFrame, sumOf: Option[String] = None): Counted = {
       val c = checkpoint(df, sumOf)
-      cur += c.rddId
+      cur :+= c
       c
     }
 
     /** Seal the current generation; release the superseded one. */
     def advance(): Unit = {
-      val reg = spark.sparkContext.getPersistentRDDs
-      prev.foreach(id => reg.get(id).foreach(CountedCheckpoint.release))
+      prev.foreach(c => CountedCheckpoint.release(c.rdd))
       prev = cur
-      cur = Set.empty
+      cur = Nil
     }
 
     /** Release every generation this roller still holds. */
@@ -102,14 +113,44 @@ object Caches {
   }
 
   /**
+   * What one [[scoped]] call owns: the frames it persisted and
+   * checkpointed, released when the scope exits, returned or thrown,
+   * and the rollers made in it, released only on a throw.
+   */
+  final class Scope private[Caches] () {
+    private[Caches] var frames = List.empty[DataFrame]
+    private[Caches] var rollers = List.empty[CheckpointRoller] // before dead: it registers
+    private[Caches] val dead = new CheckpointRoller(this)
+
+    /** Persist `df` until the scope exits. */
+    def persist(df: DataFrame): DataFrame = {
+      frames ::= df
+      Caches.persist(df)
+    }
+
+    /** [[Caches.checkpoint]] `df` until the scope exits. */
+    def checkpoint(df: DataFrame): Counted = dead.roll(df)
+
+    /** A roller whose final generation outlives a returning scope. */
+    def roller(): CheckpointRoller = new CheckpointRoller(this)
+  }
+
+  /** Run `body` with a [[Scope]]; on exit release what the scope owns. */
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    try body(scope)
+    catch { case t: Throwable => scope.rollers.foreach(_.release()); throw t }
+    finally { scope.frames.foreach(release); scope.dead.release() }
+  }
+
+  /**
    * Release every Dataset cache and persistent RDD owned by the
    * session. `clearCache()` drops the CacheManager entries;
-   * `getPersistentRDDs` sweeps what clearCache cannot see —
-   * `localCheckpoint` blocks (iteration frames in
-   * connectedComponents/pcaPower/kmeansFit/logisticWeights), which
-   * otherwise sit in the context until the ContextCleaner GCs them.
-   * Blocking release: a caller benchmarking the NEXT query must not
-   * race block eviction.
+   * `getPersistentRDDs` sweeps what clearCache cannot see — the
+   * caller-owned checkpoint blocks ([[checkpoint]] and every roller's
+   * final generation), which otherwise sit in the context until the
+   * ContextCleaner GCs them. Blocking release: a caller benchmarking
+   * the NEXT query must not race block eviction.
    */
   def releaseAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

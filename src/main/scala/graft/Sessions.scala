@@ -57,10 +57,11 @@ object Sessions {
    * new edge frame supersedes the old one: a label roller's fixed
    * two-generation cadence would release the last contracted frame
    * while later rounds still join it once contraction stops early.
+   * The body's own iteration frames roll in rollers of [[scope]].
    */
   final class Loop private[Sessions] (
       val rows: Long, val narrow: Boolean, roller: Caches.CheckpointRoller,
-      private var current: DataFrame) {
+      private var current: DataFrame, val scope: Caches.Scope) {
 
     /** The loop's edge frame: the counted checkpoint, re-laid on the
      *  loop key when narrow, or the last [[rollEdges]]. */
@@ -131,34 +132,36 @@ object Sessions {
    *     are restored. `body` must return a frame that reads no edge
    *     generation: the loops return checkpoint scans, which plan no
    *     shuffle, so the restore cannot race the result.
+   *  7. The loop runs in one [[Caches.scoped]] scope, [[Loop.scope]]:
+   *     the body's rollers keep their final generation for the caller
+   *     on return, and a throw releases them with the edges.
    *
    * Spark has no per-plan conf, so a CONCURRENT planner in the same
    * session would see the scoped confs while `body` runs; the driver
    * mains are serial by construction.
    */
-  def withLoop[T](edges: DataFrame, key: String)(body: Loop => T): T = {
+  def withLoop[T](edges: DataFrame, key: String)(body: Loop => T): T = Caches.scoped { scope =>
     val spark = edges.sparkSession
-    val roller = new Caches.CheckpointRoller(spark)
+    val roller = scope.roller()
     val counted = roller.roll(edges)
     roller.advance()
     val rows = counted.rows
     val narrow = rows < Gates.read(Gates.LoopAqeOffEdges, spark)
     val cores = spark.sparkContext.defaultParallelism
     val width = Gates.width(cores, rows, 250000L, 1)
-    val scoped = Seq("spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+    val confs = Seq("spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
         Gates.width(cores, rows, 1000000L, cores).toString) ++
       (if (narrow) Seq("spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> width.toString) else Nil)
-    val saved = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    val loop = new Loop(rows, narrow, roller, counted.df)
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val loop = new Loop(rows, narrow, roller, counted.df, scope)
     try {
       if (narrow) loop.rollEdges(counted.df.repartition(width, col(key)))
-      body(loop)
-    } finally {
-      roller.release()
-      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
+      val out = body(loop)
+      roller.release() // the returned frame reads no edge generation
+      out
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   def local(cpus: String, dataDir: Option[String] = None): SparkSession = {

@@ -2837,9 +2837,8 @@ object SparkEntry {
       val pairs = Dedup.setSimilarityJoin(t(s, dir).documents, "doc_id",
           TextFns.wordShingles(s, col("text"), 3), num = num, den = den,
           cacheSets = true)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val clusters = Dedup.dedupClusters(pairs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(Caches.persist)
+      val clusters = Caches.persist(Dedup.dedupClusters(pairs))
       Seq(
         pairs,                                                        // q135
         clusters,                                                     // q140

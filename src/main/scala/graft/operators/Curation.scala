@@ -779,7 +779,7 @@ object Curation {
     val counts = docs
       .select(col(sourceCol).as("source"), explode(split(col(textCol), " ")).as("__gw"))
       .groupBy(col("source"), col("__gw")).agg(count(lit(1)).as("__gc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     val corpus = counts.groupBy(col("__gw")).agg(sum(col("__gc")).as("__gg"))
     val srcTotals = counts.groupBy(col("source")).agg(sum(col("__gc")).as("__gns"))
     val grand = counts.agg(sum(col("__gc")).as("__gn"))
@@ -883,7 +883,7 @@ object Curation {
       .groupBy(col("__gw")).agg(count(lit(1)).as("__gf"))
     val spectrum = freqs.groupBy(col("__gf").as("r"))
       .agg(count(lit(1)).as("n_r"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     val totals = spectrum.agg(
       sum(col("r") * col("n_r")).as("__gn"),
       sum(when(col("r") === 1, col("n_r"))).as("__gn1"))
@@ -1090,7 +1090,7 @@ object Curation {
         explode(split(col("__gtxt"), " ")).as("__gtok"))
       .groupBy(col(id), col("__gtrue"), col("__gtok"))
       .agg(count(lit(1)).as("__gk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     // counts is PERSISTED (vocabulary × classes — bounded far below the
     // corpus): it feeds classTotals, vocab, seenTerms, the grid build
     // and the grid probe, and each of those runs inside its OWN
@@ -1101,7 +1101,7 @@ object Curation {
     // reduce stages for ONE logical aggregation).
     val counts = docTok.groupBy(col("__gtrue").as("__gcls"), col("__gtok"))
       .agg(sum(col("__gk")).as("__gc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     // bounded probe FIRST (the medians/centroids agg-to-literal
     // convention): vocab × class cardinalities route the scoring path,
     // size the cache reads below, and |vocab| becomes the __gV literal
@@ -1211,7 +1211,7 @@ object Curation {
       nTerms: Int, k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(nTerms >= 1 && k >= 1, "bm25TopK needs nTerms >= 1 and k >= 1")
     val toks = docs.select(col(id), explode(split(col(textCol), " ")).as("__gtok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     val dl = toks.groupBy(col(id)).agg(count(lit(1)).as("__gdl"))
     val stats = dl.agg(sum(col("__gdl")).as("__gtotal"), count(lit(1)).as("__gn"))
     val terms = toks.groupBy(col("__gtok")).agg(count(lit(1)).as("__gtc"))
@@ -1219,7 +1219,7 @@ object Curation {
       .select(col("__gtok"))
     val tf = toks.join(broadcast(terms), "__gtok")
       .groupBy(col(id), col("__gtok")).agg(count(lit(1)).as("__gtf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     // df = rows per token of the (doc, term) frame — no second corpus pass
     val df_ = tf.groupBy(col("__gtok")).agg(count(lit(1)).as("__gdf"))
     val withIdf = df_.crossJoin(broadcast(stats))

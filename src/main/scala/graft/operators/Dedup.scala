@@ -212,18 +212,17 @@ object Dedup {
    * projected down to (id, set) only — so the sets are computed once
    * instead of three times: at corpus scale that is two saved
    * scans-with-shingling for |corpus| × set-size of spillable cache.
-   * The cache is NOT unpersisted here (the returned frame still reads
-   * it); callers own the lifetime — unpersist via
-   * `spark.catalog.clearCache()` or keep the default `false` when the
-   * query runs once.
+   * The cache is NOT released here (the returned frame still reads
+   * it); callers own the lifetime ([[graft.Caches.persist]]) — release
+   * via [[graft.Caches.releaseAll]] or keep the default `false` when
+   * the query runs once.
    */
   def minhashNearDups(
       df: DataFrame, id: String, setCol: Column,
       threshold: Double, numHashes: Int = 120, bands: Int = 20,
       cacheSets: Boolean = false, maxBucketSize: Int = 10000): DataFrame = {
     var withSet = df.select(col(id), setCol.as("__gset_src"))
-    if (cacheSets)
-      withSet = withSet.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (cacheSets) withSet = graft.Caches.persist(withSet)
     val cands = minhashCandidates(withSet, id, col("__gset_src"), numHashes, bands,
       maxBucketSize)
     jaccardVerify(cands, withSet, id, col("__gset_src"), threshold)
@@ -409,9 +408,8 @@ object Dedup {
     // the ordered frame feeds FOUR plan branches (both candidate sides
     // + both verify joins) — persist it or the vocab join and sort
     // aggregate run four times ([[minhashNearDups]]' cacheSets
-    // contract: caller owns the lifetime via clearCache)
-    if (cacheSets)
-      ordered = ordered.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // contract: caller owns the lifetime via Caches.releaseAll)
+    if (cacheSets) ordered = graft.Caches.persist(ordered)
     // positional filter (PPJoin proper): carry each prefix token's
     // 1-based position in the record's rare-first order. For a pair's
     // FIRST shared prefix token at positions (pa, pb), every OTHER
@@ -526,7 +524,7 @@ object Dedup {
     val e = pairs
       .select(least(col(idA), col(idB)).as("a"), greatest(col(idA), col(idB)).as("b"))
       .filter(col("a") < col("b")).distinct()
-      .persist()
+      .transform(graft.Caches.persist)
     val ab = e.select(col("a").as("id_a"), col("b").as("id_b"))
     val bc = e.select(col("a").as("id_b"), col("b").as("id_c"))
     val ac = e.select(col("a").as("id_a"), col("b").as("id_c"))
@@ -652,10 +650,6 @@ object Dedup {
     // counts, frozen counts and fixpoint sums below cost no job of
     // their own.
     val Label = Some("label")
-    // rolling checkpoints: each round's label frame supersedes the
-    // previous one; the roller releases the dead generation instead of
-    // letting maxIter generations of blocks pile up (CacheHygieneSpec)
-    val roller = new graft.Caches.CheckpointRoller(spark)
     // ONE scan of `pairs`, exploded into both directions — a self-union
     // would be two plan branches, i.e. the (possibly expensive: a whole
     // LSH pipeline) pair generation evaluated twice. The loop entry
@@ -670,6 +664,11 @@ object Dedup {
       .distinct()
     graft.Sessions.withLoop(directed, "src") { loop =>
     import loop.hinted
+    // rolling checkpoints: each round's label frame supersedes the
+    // previous one; the roller releases the dead generation instead of
+    // letting maxIter generations of blocks pile up (CacheHygieneSpec).
+    // Made in the loop's scope, it holds nothing after a throw.
+    val roller = loop.scope.roller()
     val edgeCount0: Long = loop.rows
     val contractMin: Long = Gates.read(Gates.CcContractMinEdges, spark)
     var iter = 0
@@ -693,7 +692,7 @@ object Dedup {
     // of every round.
     val frozenParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val frozenCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val frozenRoller = new graft.Caches.CheckpointRoller(spark)
+    val frozenRoller = loop.scope.roller()
     // FUSED first round: propagating from the identity labeling needs
     // no label frame at all — min(self, min(neighbors)) is ONE
     // aggregation over the edge frame (the separate labels-init
@@ -1119,7 +1118,7 @@ object Dedup {
       .withColumn("cluster", coalesce(col("cluster"), col(id)))
       .withColumn("__gbc", lit(bcast))
       .drop("__gid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     // the union's column layout: (cluster, n_members, keeper_id,
     // valueCols...) with typed nulls in every slot a branch doesn't fill
     val types: Map[String, org.apache.spark.sql.types.DataType] =
@@ -1194,9 +1193,7 @@ object Dedup {
     // SAME pair frame — persist it or the (possibly whole-SSJoin) pair
     // generation runs twice (q151's edge-list precedent; caller-owned
     // lifetime via Caches.releaseAll)
-    val kept = pairs
-      .select(col(idA), col(idB), col(scoreCol).as("__gs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kept = graft.Caches.persist(pairs.select(col(idA), col(idB), col(scoreCol).as("__gs")))
     val fanned = kept
       .select(col(idA), col(idB), col("__gs"),
         explode(array(thresholds.map(lit): _*)).as("threshold"))
@@ -1362,7 +1359,7 @@ object Dedup {
           .as("key"))
       }: _*)).as("__mb"))
       .select(col("__mid"), col("__mb.band").as("__band"), col("__mb.key").as("__key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     bandRows.select(col("__mid").as("id_a"), col("__band"), col("__key"))
       .join(bandRows.select(col("__mid").as("id_b"), col("__band"), col("__key")),
         Seq("__band", "__key"))
@@ -1391,8 +1388,7 @@ object Dedup {
       numHashes: Int = 6, bandSize: Int = 2, shingleK: Int = 3): DataFrame = {
     require(numHashes >= 2 && bandSize >= 1 && numHashes % bandSize == 0,
       "minHashEstimate needs numHashes a positive multiple of bandSize")
-    val sigs = minHashMd5Signatures(docs, id, textCol, numHashes, shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = graft.Caches.persist(minHashMd5Signatures(docs, id, textCol, numHashes, shingleK))
     val numBands = numHashes / bandSize
     val bandRows = sigs.select(col("__mid"), explode(array(
       (0 until numBands).map { b =>
@@ -1500,7 +1496,7 @@ object Dedup {
         .as("__sc"))
       .select(col("__sid"), col("__ssig"),
         col("__sc.chunk").as("__schunk"), col("__sc.val").as("__sval"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     val capped =
       Similarity.capBuckets(chunked, Seq("__schunk", "__sval"), maxBucketSize)
     capped.select(col("__sid").as("id_a"), col("__ssig").as("__sa"),

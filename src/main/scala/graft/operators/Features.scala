@@ -1161,37 +1161,36 @@ object Features {
     // an already-wider frame keeps its width.
     val cores = sel.sparkSession.sparkContext.defaultParallelism
     val parts = Gates.width(cores, sel.rdd.getNumPartitions, 1L, cores)
-    val data = sel.repartition(parts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var wdf = data.sparkSession.range(1)
-      .select((0 to k).map(j => lit(0.0).as(s"__gw$j")): _*)
-    val roller = new graft.Caches.CheckpointRoller(data.sparkSession)
-    (1 to iters).foreach { _ =>
-      val z = (1 to k).foldLeft(col("__gw0")) { (acc, j) =>
-        acc + col(s"__gw$j") * col(s"__gx$j")
+    // the pass frame is dead once the final weights are checkpointed:
+    // the scope releases it on return (callers like logisticEval
+    // re-project their own pass frame)
+    graft.Caches.scoped { scope =>
+      val data = scope.persist(sel.repartition(parts))
+      var wdf = data.sparkSession.range(1)
+        .select((0 to k).map(j => lit(0.0).as(s"__gw$j")): _*)
+      val roller = scope.roller()
+      (1 to iters).foreach { _ =>
+        val z = (1 to k).foldLeft(col("__gw0")) { (acc, j) =>
+          acc + col(s"__gw$j") * col(s"__gx$j")
+        }
+        val sig = (lit(1.0) / (lit(1.0) + exp(-z))).cast("float").cast("double")
+        val grads = (0 to k).map { j =>
+          val xj = if (j == 0) lit(1.0) else col(s"__gx$j")
+          (toD(sum(absorb((sig - col("__gy")) * xj))) /
+            count(lit(1)).cast("double")).as(s"__gg$j")
+        }
+        val g = data.crossJoin(broadcast(wdf)).agg(grads.head, grads.tail: _*)
+        // localCheckpoint truncates the iteration lineage (the q59/q62
+        // rule): an unpersisted weight chain would replay EVERY previous
+        // iteration's full-data gradient pass per consumer; the roller
+        // releases each superseded weight generation (CacheHygieneSpec)
+        wdf = roller.roll(wdf.crossJoin(broadcast(g)).select(
+          (0 to k).map(j =>
+            (col(s"__gw$j") - lit(lr) * col(s"__gg$j")).as(s"__gw$j")): _*)).df
+        roller.advance()
       }
-      val sig = (lit(1.0) / (lit(1.0) + exp(-z))).cast("float").cast("double")
-      val grads = (0 to k).map { j =>
-        val xj = if (j == 0) lit(1.0) else col(s"__gx$j")
-        (toD(sum(absorb((sig - col("__gy")) * xj))) /
-          count(lit(1)).cast("double")).as(s"__gg$j")
-      }
-      val g = data.crossJoin(broadcast(wdf)).agg(grads.head, grads.tail: _*)
-      // localCheckpoint truncates the iteration lineage (the q59/q62
-      // rule): an unpersisted weight chain would replay EVERY previous
-      // iteration's full-data gradient pass per consumer; the roller
-      // releases each superseded weight generation (CacheHygieneSpec)
-      wdf = roller.roll(wdf.crossJoin(broadcast(g)).select(
-        (0 to k).map(j =>
-          (col(s"__gw$j") - lit(lr) * col(s"__gg$j")).as(s"__gw$j")): _*)).df
-      roller.advance()
+      wdf
     }
-    // the eager localCheckpoint above materialized the final weights;
-    // the persisted pass frame is dead — eager unpersist caps the
-    // session cache footprint (callers like logisticEval re-project
-    // their own pass frame)
-    data.unpersist()
-    wdf
   }
 
   /**

@@ -249,9 +249,7 @@ object RangeRank {
   def tieRank(df: DataFrame, keys: Seq[String], value: String): TieRank = {
     if (!useBucketed(df)) return TieRank(df, keys, value, TieRegime.Window, 0)
     if (!manyLeafRows(df)) return TieRank(df, keys, value, TieRegime.Aggregated, estLeafRows(df))
-    val input =
-      if (scanShaped(df)) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val input = if (scanShaped(df)) df else graft.Caches.persist(df)
     val p = input.agg(
       approx_count_distinct(struct((keys :+ value).map(col): _*)).as("__gd"),
       count(lit(1)).as("__gn")).head()

@@ -727,7 +727,7 @@ object Relational {
       def rankOf(sumCol: Column): Column =
         (lit(1.0d) - d) / gN +
           d * coalesce(toD(sumCol), lit(0.0d))
-      val roller = new graft.Caches.CheckpointRoller(edges.sparkSession)
+      val roller = loop.scope.roller()
       var sums: Option[DataFrame] = None
       (1 to iterations).foreach { _ =>
         val contrib = sums match {
@@ -1120,8 +1120,7 @@ object Relational {
   def classMetrics(
       confusion: DataFrame, trueCol: String, predCol: String,
       nCol: String): DataFrame = {
-    val conf = confusion
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val conf = graft.Caches.persist(confusion)
     val byTrue = conf.groupBy(col(trueCol).as("label"))
       .agg(sum(col(nCol)).as("__gt"))
     val byPred = conf.groupBy(col(predCol).as("label"))
@@ -1152,7 +1151,7 @@ object Relational {
           (col("precision") + col("recall")) > 0,
         lit(2.0) * col("precision") * col("recall") /
           (col("precision") + col("recall"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     def meanOf(c: String) =
       (toD(sum(absorb(col(c)))) / count(col(c)).cast("double")).as(c)
     val macroRow = perClass.agg(

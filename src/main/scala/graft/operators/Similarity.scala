@@ -270,10 +270,9 @@ object Similarity {
       src: String, dst: String, weightCol: String,
       iterations: Int): DataFrame = {
     require(iterations >= 1, "labelPropagation needs at least one iteration")
-    val e = edges.select(col(src).as("__gsrc"), col(dst).as("__gdst"),
-      toDec(col(weightCol).cast("double")).as("__gw"))
-      .persist()
-    val sd = seeds.select(col(id).as("__gsid"), col(labelCol).as("__gslab")).persist()
+    val e = graft.Caches.persist(edges.select(col(src).as("__gsrc"), col(dst).as("__gdst"),
+      toDec(col(weightCol).cast("double")).as("__gw")))
+    val sd = graft.Caches.persist(seeds.select(col(id).as("__gsid"), col(labelCol).as("__gslab")))
     var labels = sd.select(col("__gsid").as("node"), col("__gslab").as("lab"))
     (1 to iterations).foreach { _ =>
       val cand = e.join(labels, col("__gsrc") === col("node"))
@@ -437,7 +436,7 @@ object Similarity {
       .agg(sum(when(col("__hdot") > 0,
         expr("shiftleft(CAST(1 AS BIGINT), __hj)")).otherwise(lit(0L)))
         .as("__hbucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     val capped = capBuckets(buckets, Seq("__ht", "__hbucket"), maxBucketSize)
     capped.select(col("__hid").as("id_a"), col("__ht"), col("__hbucket"))
       .join(capped.select(col("__hid").as("id_b"), col("__ht"), col("__hbucket")),
@@ -535,15 +534,13 @@ object Similarity {
     // Relational.stratifiedSample) so each Lloyd iteration scans
     // O(sample) rows instead of exploding 100 TB three times. The
     // sample is cached for the iteration loop and released after.
-    val sampled = trainSampleSize > 0
-    val train =
-      if (sampled)
-        df.select(col(id), col(vec))
-          .orderBy(xxhash64(col(id)).asc, col(id).asc)
-          .limit(trainSampleSize)
-          .cache()
-      else df
-    try {
+    graft.Caches.scoped { scope =>
+      val train =
+        if (trainSampleSize > 0)
+          scope.persist(df.select(col(id), col(vec))
+            .orderBy(xxhash64(col(id)).asc, col(id).asc)
+            .limit(trainSampleSize))
+        else df
       // Seed from the first k of the HASH order, not the k lowest ids:
       // low ids are often insertion-correlated (same-batch near-dups would
       // seed k near-identical centroids); the hash order is an unbiased
@@ -569,7 +566,7 @@ object Similarity {
         }
       }
       centroids
-    } finally if (sampled) train.unpersist()
+    }
   }
 
   /**
@@ -707,8 +704,9 @@ object Similarity {
    * term stage deterministically (never round-robin — SPARK-38388) and
    * is AQE-coalesce-proof; `parts` scales with the estimated term
    * count (~1M terms per task), clamped to [cores, 16× cores].
-   * Iterations run on the persisted d²-row cov frame with d-row vector
-   * frames — driver holds only the bounded dimension count.
+   * Iterations run on the checkpointed half grid with d-row vector
+   * frames — driver holds only the bounded dimension count, read off
+   * that checkpoint's own row count.
    *
    * `trainSampleSize > 0` is the AT-SCALE DEFAULT: loadings are
    * trained on a bounded deterministic sample (hash-ordered top-n,
@@ -789,54 +787,49 @@ object Similarity {
       .groupBy(col("__gi"), col("__gj"))
       .agg((toD(sum(col("__gt"))) /
         count(lit(1)).cast("double")).as("__gcov"))
-    // covUpper is PERSISTED (d² rows — trivial): the union's two
-    // branches each demand it, and AQE does NOT reuse the aggregation
-    // exchange across the union here (profiled: the second branch
-    // re-ran the whole term stage, doubling the expensive part) — the
-    // tiny cache guarantees one execution
-    val covUpperC = covUpper
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cov = covUpperC.unionByName(
-      covUpperC.filter(col("__gi") < col("__gj"))
-        .select(col("__gj").as("__gi"), col("__gi").as("__gj"), col("__gcov")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // positions and the dimension count come off the PERSISTED cov
-    // frame, so the term-generation lineage replays exactly once
-    val posFrame = cov.select(col("__gi").as("pos")).distinct()
-    val d = posFrame.count()
-    // cov (the mirrored grid) is what iterations read; the half-grid
-    // cache is dead once cov materialized above
-    covUpperC.unpersist()
-    var v = posFrame.select(col("pos"),
-      (lit(1.0) / sqrt(lit(d.toDouble))).as("__gval"))
-    var lastNorm: DataFrame = null
-    // rolling checkpoints: generation i is {u_i, norm_i}; once u_{i+1}
-    // and norm_{i+1} are eagerly materialized the previous pair is dead
-    // and the roller releases it — only the final pair (which the
-    // returned plan scans) stays live (CacheHygieneSpec)
-    val roller = new graft.Caches.CheckpointRoller(df.sparkSession)
-    (1 to iters).foreach { _ =>
-      // localCheckpoint truncates the per-iteration lineage (the q59/q62
-      // iterative-algorithm rule): without it every u/norm/v consumer
-      // replays ALL previous iterations' sub-DAGs as separate jobs —
-      // exponential in the iteration count even over a cached cov
-      val u = roller.roll(cov.join(v, cov("__gj") === v("pos"))
-        .groupBy(col("__gi"))
-        .agg(toD(sum(absorb(col("__gcov") * col("__gval")))).as("__gu"))).df
-      val norm = roller.roll(u.agg(
-        sqrt(toD(sum(absorb(col("__gu") * col("__gu"))))).as("__gnorm"))).df
-      roller.advance()
-      v = u.crossJoin(broadcast(norm))
-        .select(col("__gi").as("pos"),
-          when(col("__gnorm") > 0, col("__gu") / col("__gnorm")).as("__gval"))
-      lastNorm = norm
+    graft.Caches.scoped { scope =>
+      // the half grid is CHECKPOINTED (d(d+1)/2 rows — trivial): the
+      // union's two branches below each read it, and AQE does NOT reuse
+      // the aggregation exchange across the union here (profiled: the
+      // second branch re-ran the whole term stage, doubling the expensive
+      // part). Its one job also counts the cells, n = d(d+1)/2, so the
+      // dimension count costs no job of its own; the scope releases it
+      // once the final u/norm are checkpointed — the returned plan never
+      // reads it
+      val half = scope.checkpoint(covUpper)
+      val d = ((math.sqrt(8.0 * half.rows + 1) - 1) / 2).round
+      require(d * (d + 1) / 2 == half.rows, s"pcaPower: ${half.rows} cells is not a triangle")
+      val cov = half.df.unionByName(
+        half.df.filter(col("__gi") < col("__gj"))
+          .select(col("__gj").as("__gi"), col("__gi").as("__gj"), col("__gcov")))
+      // v₀ = 1/√d at every position: one diagonal cell per position
+      var v = half.df.filter(col("__gi") === col("__gj")).select(col("__gi").as("pos"),
+        (lit(1.0) / sqrt(lit(d.toDouble))).as("__gval"))
+      var norm: DataFrame = null
+      // rolling checkpoints: generation i is {u_i, norm_i}; once u_{i+1}
+      // and norm_{i+1} are eagerly materialized the previous pair is dead
+      // and the roller releases it — only the final pair (which the
+      // returned plan scans) stays live (CacheHygieneSpec)
+      val roller = scope.roller()
+      (1 to iters).foreach { _ =>
+        // localCheckpoint truncates the per-iteration lineage (the q59/q62
+        // iterative-algorithm rule): without it every u/norm/v consumer
+        // replays ALL previous iterations' sub-DAGs as separate jobs —
+        // exponential in the iteration count even over a checkpointed cov
+        val u = roller.roll(cov.join(v, cov("__gj") === v("pos"))
+          .groupBy(col("__gi"))
+          .agg(toD(sum(absorb(col("__gcov") * col("__gval")))).as("__gu"))).df
+        norm = roller.roll(u.agg(
+          sqrt(toD(sum(absorb(col("__gu") * col("__gu"))))).as("__gnorm"))).df
+        roller.advance()
+        v = u.crossJoin(broadcast(norm))
+          .select(col("__gi").as("pos"),
+            when(col("__gnorm") > 0, col("__gu") / col("__gnorm")).as("__gval"))
+      }
+      v.crossJoin(broadcast(norm))
+        .select(col("pos"), col("__gval").as("loading"),
+          when(col("__gnorm") > 0, col("__gnorm")).as("eigenvalue"))
     }
-    // iterations are over and the final u/norm are checkpointed: the
-    // d²-row cov frame is dead — the returned plan never reads it
-    cov.unpersist()
-    v.crossJoin(broadcast(lastNorm))
-      .select(col("pos"), col("__gval").as("loading"),
-        when(col("__gnorm") > 0, col("__gnorm")).as("eigenvalue"))
   }
 
   /**
@@ -923,7 +916,7 @@ object Similarity {
       df.select(col(id).as("__gvid"), col(vecCol).as("__gvv")),
       col("__gvid"), 2000)
       .select(col("__gvid"), posexplode(col("__gvv")).as(Seq("pos", "__gvf")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.persist)
     // seeds: vectors of the k smallest ids, cluster ids by that order
     val seedIds = df.select(col(id).as("__gsid")).orderBy(col("__gsid")).limit(k)
       .withColumn("__gcid",
@@ -941,24 +934,22 @@ object Similarity {
         .filter(col("__grk") === 1)
         .select(col("__gvid"), col("__gcid"))
     }
-    var assigned: DataFrame = null
     // rolling checkpoints: centroid generation t supersedes t-1; the
     // roller releases the dead generation (CacheHygieneSpec) — the last
     // one stays live, scanned by the returned assignment plan
-    val roller = new graft.Caches.CheckpointRoller(df.sparkSession)
-    (1 to iters).foreach { t =>
-      assigned = assign(cents)
-      if (t < iters) {
+    graft.Caches.scoped { scope =>
+      val roller = scope.roller()
+      (2 to iters).foreach { _ =>
         // localCheckpoint truncates the iteration lineage (q59/q62
         // rule) — the k·d centroid frame is tiny, and an unpersisted
         // chain replays every earlier assignment per consumer
-        cents = roller.roll(assigned.join(x, "__gvid")
+        cents = roller.roll(assign(cents).join(x, "__gvid")
           .groupBy(col("__gcid"), col("pos"))
           .agg(decMean(col("__gvf")).as("__gc"))).df
         roller.advance()
       }
     }
-    assigned.select(col("__gvid").as(id), col("__gcid").as("cluster"))
+    assign(cents).select(col("__gvid").as(id), col("__gcid").as("cluster"))
   }
 
   /**

@@ -111,7 +111,8 @@ object Sources {
    * filters that reference ONLY the internal corrupt-record column on a
    * lazy CSV scan (it would have to re-parse, and the re-parse could
    * disagree), and the persist also means the file is parsed once for
-   * both outputs. Callers unpersist when done with both frames.
+   * both outputs. The cache is caller-owned ([[graft.Caches.persist]]):
+   * `release()` it when done with both frames.
    */
   def csvQuarantine(
       spark: SparkSession,
@@ -128,7 +129,7 @@ object Sources {
       .option("columnNameOfCorruptRecord", corrupt)
       .schema(withCorrupt)
       .csv(path)
-      .persist()
+      .transform(graft.Caches.persist)
     QuarantinedCsv(
       good = parsed.filter(col(corrupt).isNull).drop(corrupt),
       quarantined = parsed.filter(col(corrupt).isNotNull)
@@ -140,7 +141,7 @@ object Sources {
    *  parse both derive from — `release()` when done with both. */
   final case class QuarantinedCsv(
       good: DataFrame, quarantined: DataFrame, parsed: DataFrame) {
-    def release(): Unit = { parsed.unpersist(); () }
+    def release(): Unit = graft.Caches.release(parsed)
   }
 
   /** JSON-lines reader (schema-on-read for semi-structured columns). */

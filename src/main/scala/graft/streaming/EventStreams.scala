@@ -225,13 +225,14 @@ object EventStreams {
             graft.operators.Relational.idempotentAppend(
                 deduped.drop("__gbucket"), existing.select(keys.map(col): _*), keys)
               .write.mode("append").parquet(targetDir)
-          } else {
+          } else graft.Caches.scoped { scope =>
             val existingKeys = recorded match {
               case Some(_) =>
                 // two actions read the batch below (present-buckets
                 // collect + the final write) — persist so the dedup
-                // shuffle runs once, not twice
-                deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                // shuffle runs once, not twice; the scope releases it
+                // after the write, or when either action throws
+                scope.persist(deduped)
                 // buckets this batch can collide with: a bounded driver
                 // collect (≤ numBuckets ints), the partition-prune predicate
                 val present = deduped.select("__gbucket").distinct()
@@ -242,10 +243,8 @@ object EventStreams {
                 // bucketed layout but no trusted modulus: no pruning
                 existing.select(keys.map(col): _*)
             }
-            try {
-              graft.operators.Relational.idempotentAppend(deduped, existingKeys, keys)
-                .write.mode("append").partitionBy("__gbucket").parquet(targetDir)
-            } finally deduped.unpersist()
+            graft.operators.Relational.idempotentAppend(deduped, existingKeys, keys)
+              .write.mode("append").partitionBy("__gbucket").parquet(targetDir)
           }
         }
       }

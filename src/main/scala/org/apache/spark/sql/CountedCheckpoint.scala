@@ -22,15 +22,15 @@ import org.apache.spark.sql.types.LongType
 object CountedCheckpoint {
 
   /**
-   * Checkpoint `df` in ONE job. Returns the checkpoint frame, the id of
-   * its RDD, the exact row count and the exact sum of the long column
-   * `sumOf` (nulls skipped; 0 for no column, no rows or only nulls).
+   * Checkpoint `df` in ONE job. Returns the checkpoint frame with the
+   * exact row count, the exact sum of the long column `sumOf` (nulls
+   * skipped; 0 for no column, no rows or only nulls) and its RDD.
    * The frame's plan statistics are the true row count and rows × row
    * width; its partitioning, ordering and constraints are the origin
    * plan's. The job stores every block, so `LocalRDDCheckpointData`
    * finds nothing left to compute when it marks the RDD checkpointed.
    */
-  def localCheckpoint(df: DataFrame, sumOf: Option[String]): (DataFrame, Int, Long, BigInt) = {
+  def localCheckpoint(df: DataFrame, sumOf: Option[String]): graft.Caches.Counted = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val session = ds.sparkSession
     val qe = ds.queryExecution
@@ -58,7 +58,7 @@ object CountedCheckpoint {
         sizeInBytes = EstimationUtils.getSizePerRow(origin.output) * rows,
         rowCount = Some(BigInt(rows)))
       val counted = origin.copy()(session, Some(stats), Some(origin.constraints))
-      (classic.Dataset.ofRows(session, counted), rdd.id, rows, sum)
+      graft.Caches.Counted(classic.Dataset.ofRows(session, counted), rows, sum)(rdd)
     }
   }
 

@@ -1,20 +1,23 @@
 package graft
 
 /**
- * Audit of the caller-owned-cache contract documented at [[Caches]].
+ * Audit of the two cache lifetimes documented at [[Caches]].
  *
  * Two classes of persisted intermediate exist (Caches.scala Scaladoc):
  *
- *  - **caller-owned**: the RETURNED lazy frame still reads the persisted
- *    block (multi-branch signature/bucket frames, checkpointed model
- *    frames a result plan scans). The operator cannot eagerly unpersist;
- *    the lifetime belongs to the caller, who runs [[Caches.releaseAll]]
- *    after materializing. These queries are enumerated — with their
- *    exact live-block counts — in `callerOwned` below.
+ *  - **caller-owned** ([[Caches.persist]], [[Caches.checkpoint]], a
+ *    scope's roller's final generation): the RETURNED lazy frame still
+ *    reads the persisted block (multi-branch signature/bucket frames,
+ *    checkpointed model frames a result plan scans). The operator
+ *    cannot release it; the lifetime belongs to the caller, who runs
+ *    [[Caches.releaseAll]] after materializing. These queries are
+ *    enumerated — with their exact live-block counts — in
+ *    `callerOwned` below.
  *  - **dead-before-return**: a training/staging pass whose persisted
  *    frame is NOT referenced by the returned plan. The operator MUST
- *    eager-unpersist it; leaving it live is a leak that accumulates
- *    across a 244-query Verify/Bench run.
+ *    make it in a [[Caches.scoped]] scope, which releases it before
+ *    return; leaving it live is a leak that accumulates across a
+ *    244-query Verify/Bench run.
  *
  * The audit materializes every `SparkEntry.queries` entry at sf0.001 and
  * asserts the session's live persisted-RDD count afterwards is EXACTLY

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
  * [[Caches.CheckpointRoller.roll]]): one job per checkpoint, an exact
  * row count and long-column sum from that job, true row statistics on
  * the returned frame, the origin plan's partitioning kept, and blocks
- * released without Spark's lineage-truncated warning.
+ * released without Spark's lineage-truncated warning. And the two cache
+ * lifetimes: what a [[Caches.scoped]] scope releases on return and on
+ * throw, and what it leaves for the caller's [[Caches.releaseAll]].
  */
 class CachesSpec extends SparkSpec {
   import spark.implicits._
@@ -27,7 +29,9 @@ class CachesSpec extends SparkSpec {
   }
 
   private def rolled[T](body: Caches.CheckpointRoller => T): T =
-    try body(new Caches.CheckpointRoller(spark)) finally Caches.releaseAll(spark)
+    try Caches.scoped(scope => body(scope.roller())) finally Caches.releaseAll(spark)
+
+  private def live: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** Spark's own exact sum, the reference the roll must match. */
   private def decimalSum(df: DataFrame): BigInt = {
@@ -188,7 +192,7 @@ class CachesSpec extends SparkSpec {
           c
         } :+ roller.roll(labels(Some(7L)))
         val live = spark.sparkContext.getPersistentRDDs.keySet
-        assert(gens.map(c => live.contains(c.rddId)) == Seq(false, false, true, true))
+        assert(gens.map(c => live.contains(c.rdd.id)) == Seq(false, false, true, true))
       } // releaseAll: the last two generations
       assert(spark.sparkContext.getPersistentRDDs.isEmpty)
       val truncated = seen.toArray.map(_.toString).filter(_.contains("locally checkpointed"))
@@ -198,6 +202,40 @@ class CachesSpec extends SparkSpec {
       assert(rdd.count() == 3)
       rdd.unpersist(blocking = true)
       assert(seen.toArray.exists(_.toString.contains("locally checkpointed")))
+    }
+  }
+
+  // lifetime -> (make it inside a scope, kept after a return, kept after a throw)
+  private val lifetimes: Seq[(String, Caches.Scope => Unit, Boolean, Boolean)] = Seq(
+    ("scope.persist", scope => assert(scope.persist(labels(Some(1L), None)).count() == 2),
+      false, false),
+    ("scope.checkpoint", scope => assert(scope.checkpoint(labels(Some(2L))).rows == 1),
+      false, false),
+    ("Caches.persist", _ => assert(Caches.persist(labels(Some(3L), None)).count() == 2),
+      true, true),
+    ("scope.roller", { scope =>
+      val roller = scope.roller()
+      (1 to 3).foreach { i => roller.roll(labels(Some(i.toLong))); roller.advance() }
+    }, true, false))
+
+  test("each cache lifetime on return and on throw: a scope releases its frames, " +
+      "keeps its rollers' final generation only on return, and never touches Caches.persist") {
+    for ((what, make, onReturn, onThrow) <- lifetimes; thrown <- Seq(false, true)) {
+      val exit = if (thrown) "thrown" else "returned"
+      Caches.releaseAll(spark)
+      var made = Set.empty[Int]
+      def body(scope: Caches.Scope): Unit = {
+        make(scope)
+        made = live
+        if (thrown) throw new IllegalStateException(s"$what fails")
+      }
+      if (thrown) intercept[IllegalStateException](Caches.scoped(body)) else Caches.scoped(body)
+      // the roller's superseded generations are already gone: it made one
+      assert(made.size == 1, s"$what: made $made")
+      val kept = if (thrown) onThrow else onReturn
+      assert(live == (if (kept) made else Set.empty[Int]), s"$what, $exit: live $live, made $made")
+      Caches.releaseAll(spark)
+      assert(live.isEmpty, s"$what, $exit: releaseAll left $live")
     }
   }
 }

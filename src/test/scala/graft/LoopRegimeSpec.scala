@@ -11,7 +11,7 @@ import graft.operators.{Dedup, Relational}
  * bit-identical rows in the narrow and the AQE regime, every scoped
  * session conf is back at its pre-call value after a return and after
  * a thrown no-fixpoint error, and the only persisted RDDs left are the
- * checkpoints the returned plan reads.
+ * checkpoints the returned plan reads — none after a throw.
  */
 class LoopRegimeSpec extends SparkSpec {
   import spark.implicits._
@@ -105,9 +105,9 @@ class LoopRegimeSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("fixpoint"))
       assert(confs === before, s"$regime regime, $caller confs: a scoped conf was not restored")
-      // every edge generation is released; the first round's label
-      // checkpoint stays for the caller's releaseAll
-      assert(live.size === 1, s"$regime regime, $caller confs: live $live")
+      // every edge generation and every label checkpoint is released
+      // by the loop's scope, without help from the caller
+      assert(live.isEmpty, s"$regime regime, $caller confs: live $live")
       Caches.releaseAll(spark)
     }
   }

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * files (no session): the shortest-string decimal encoding and the
  * moment closed forms are spelled only in `graft.functions.Exact`, the
  * environment is read only through the gate table, every checkpoint is
- * a counted one, the tie-invariant rank decision lives only in
- * `RangeRank`, and the iterative loops' regime only in `Sessions.withLoop`.
+ * a counted one, every cache is made through `Caches`, the
+ * tie-invariant rank decision lives only in `RangeRank`, and the
+ * iterative loops' regime only in `Sessions.withLoop`.
  */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -95,17 +96,41 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(found.forall(_.startsWith("Gates.scala:")), s"sys.env read at ${found.mkString(", ")}")
   }
 
-  test("under src/main, only Caches.scala and its Spark bridge call localCheckpoint") {
-    val main = new File("src/main/scala")
+  /** Every `.scala` file under `src/main/scala`. */
+  private def mainFiles: Seq[File] = {
     def scalaFiles(d: File): Seq[File] =
       d.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
         if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
       }
-    val files = scalaFiles(main)
+    val files = scalaFiles(new File("src/main/scala"))
     assert(files.exists(_.getName == "CountedCheckpoint.scala"), "the bridge moved")
+    files
+  }
+
+  private def inCaches(hit: String): Boolean =
+    hit.startsWith("Caches.scala:") || hit.startsWith("CountedCheckpoint.scala:")
+
+  test("under src/main, only Caches.scala and its Spark bridge call localCheckpoint") {
+    val files = mainFiles
     val found = hits(files, """\.localCheckpoint\b""")
     assert(found.exists(_.startsWith("Caches.scala:")), "Caches must still call the bridge")
-    assert(found.forall(h => h.startsWith("Caches.scala:") || h.startsWith("CountedCheckpoint.scala:")),
-      s"localCheckpoint called at ${found.mkString(", ")}")
+    assert(found.forall(inCaches), s"localCheckpoint called at ${found.mkString(", ")}")
+  }
+
+  test("under src/main, only Caches.scala and its Spark bridge spell a storage level or the Spark cache API") {
+    // graft's own entries take the frame as their argument
+    // (Caches.persist(df), scope.persist(df), Caches.release(df)); the
+    // Spark API's take no argument or a storage level
+    val rules = Seq(
+      "storage level" -> """\bStorageLevel\b""",
+      "persist() or cache()" -> """\.(?:persist|cache)\(\s*\)""",
+      "unpersist" -> """\.unpersist\b""")
+    rules.foreach { case (what, pattern) =>
+      val found = hits(mainFiles, pattern)
+      assert(found.forall(inCaches),
+        s"$what outside Caches (cache through Caches.persist or Caches.scoped): ${found.mkString(", ")}")
+    }
+    assert(hits(mainFiles.filter(_.getName == "Caches.scala"), rules.head._2).nonEmpty,
+      "Caches must still name the storage level")
   }
 }

@@ -113,6 +113,7 @@ class StreamingSpec extends SparkSpec {
     val target = dir.resolve("t").toString
     val ckpt = dir.resolve("ckpt").toString
     val mem = MemoryStream[Event]
+    val liveBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val q = EventStreams.writeIdempotent(mem.toDF(), spark, target,
       keys = Seq("event_id"), checkpointDir = ckpt).start()
     try {
@@ -127,6 +128,8 @@ class StreamingSpec extends SparkSpec {
         Event(3L, ts("2024-01-01 10:02:00"), 2L, "view", 5.0))
       q.processAllAvailable()
     } finally q.stop()
+    // batch 2 cached its deduped rows for two actions and released them
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == liveBefore)
     val loaded = spark.read.parquet(target)
     assert(loaded.count() == 3)
     assert(loaded.select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
