@@ -21,7 +21,7 @@ import org.apache.spark.storage.StorageLevel
  *  - SCOPED ([[scoped]]): a frame DEAD before the operator returns — a
  *    training pass that ends in a checkpointed model (`pcaPower`,
  *    `logisticWeights`), a sample the driver loop collects from
- *    (`kmeansCentroids`), a micro-batch read by two actions. The scope
+ *    (`Similarity.ivfCentroids`), a micro-batch read by two actions. The scope
  *    releases it on return and on throw. Rollers made in a scope keep
  *    their final generation for the caller on return (the returned
  *    plan scans it) and hold nothing after a throw.

@@ -2305,8 +2305,9 @@ object SparkEntry {
 
   /** #228 exact k-means (Lloyd), k=4, 2 iterations, deterministic
    *  min-id seeding: decimal-routed distances, exact-decimal argmin
-   *  with cid tiebreak, exact-decimal centroid means — the oracle-
-   *  checkable twin of q43/q57's sample-trained IVF quantizer. */
+   *  with cid tiebreak, exact-decimal centroid means — the one Lloyd
+   *  loop q43/q57's IVF quantizer also trains through, checked here
+   *  by the oracle. */
   private def q228KmeansLloyd(s: SparkSession, dir: String): DataFrame =
     Similarity.kmeansLloyd(t(s, dir).embeddings, "vec_id", "embedding",
       k = 4, iters = 2)

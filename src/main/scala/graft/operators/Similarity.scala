@@ -511,87 +511,127 @@ object Similarity {
       .select(col("query_id"), col("rank"), col(id).as("neighbor_id"))
   }
 
+  /** K-means centroids: cluster id → centroid, ascending by id. */
+  type Centroids = Seq[(Int, Seq[Double])]
+
+  /** [[sqDist]]'s accumulator: DECIMAL(37,18) plus a DECIMAL(28,18)
+   *  term types as (38,18), so the fold keeps its scale — a (38,18)
+   *  accumulator would type the sum (39,18), which Spark's
+   *  precision-loss rule rounds to (38,17). */
+  private val distAcc = "decimal(37,18)"
+
   /**
-   * K-means centroids (Lloyd's) over an embedding column, entirely in
-   * DataFrame ops: initialization takes the `k` lowest-id vectors (no
-   * RNG), each iteration assigns rows to the nearest centroid (argmax
-   * cosine, shuffle-free) and recomputes per-cluster means via
-   * posexplode + per-dimension avg (map-side partials), so iterations
-   * scale to any corpus size. A cluster that captures no rows keeps its
-   * previous centroid rather than silently vanishing, so `k` cells
-   * always survive. Initialization and tie-breaks are deterministic;
-   * the mean itself merges double partials in shuffle order, so
-   * centroids can differ in the last ulp between runs — searches that
-   * need run-to-run bit-stability should persist the index (centroids +
-   * assignments) once and reuse it, as production IVF deployments do.
+   * Exact squared Euclidean distance of a vector to a double centroid,
+   * the one spelling k-means assigns and scores with: each term
+   * (v − c)² absorbs to its FLOAT image and the terms sum as decimals
+   * (the q197 contract), so a distance — and any comparison of two — is
+   * engine-identical. A position past either array's end is NULL and
+   * adds nothing (the q228/q229 oracles join on position).
    */
-  def kmeansCentroids(
-      spark: SparkSession, df: DataFrame, id: String, vec: String,
-      k: Int, iterations: Int = 3, trainSampleSize: Int = 0): Seq[(Int, Seq[Float])] = {
-    // A coarse quantizer doesn't need the full corpus: with
-    // trainSampleSize > 0, train on a bounded deterministic sample
-    // (hash-ordered top-n, the same md5-order trick as
-    // Relational.stratifiedSample) so each Lloyd iteration scans
-    // O(sample) rows instead of exploding 100 TB three times. The
-    // sample is cached for the iteration loop and released after.
-    graft.Caches.scoped { scope =>
-      val train =
-        if (trainSampleSize > 0)
-          scope.persist(df.select(col(id), col(vec))
-            .orderBy(xxhash64(col(id)).asc, col(id).asc)
-            .limit(trainSampleSize))
-        else df
-      // Seed from the first k of the HASH order, not the k lowest ids:
-      // low ids are often insertion-correlated (same-batch near-dups would
-      // seed k near-identical centroids); the hash order is an unbiased
-      // deterministic spread over the corpus.
-      var centroids: Seq[(Int, Seq[Float])] = train
-        .orderBy(xxhash64(col(id)).asc, col(id).asc).limit(k)
-        .select(col(vec)).collect()
-        .map(_.getSeq[Float](0).toSeq).zipWithIndex.map(_.swap).toSeq
-      for (_ <- 0 until iterations) {
-        val updated = assignToCentroids(spark, train, vec, centroids)
-          .select(col("cluster_id"), posexplode(col(vec)).as(Seq("__gpos", "__gval")))
-          .groupBy("cluster_id", "__gpos")
-          .agg(avg(col("__gval")).as("__gmean"))          // map-side partials; k·dim rows out
-          .groupBy("cluster_id")
-          .agg(array_sort(collect_list(struct(col("__gpos"), col("__gmean")))).as("__gpairs"))
-          .select(col("cluster_id"),
-            expr("transform(__gpairs, p -> CAST(p.__gmean AS FLOAT))").as("centroid"))
-          .collect()                                       // k tiny rows, like agg-to-literal medians
-          .map(r => r.getAs[Number]("cluster_id").intValue -> r.getSeq[Float](1).toSeq)
-          .toMap
-        centroids = centroids.map { case (cid, prev) =>
-          cid -> updated.getOrElse(cid, prev)              // empty cluster keeps its centroid
-        }
-      }
-      centroids
+  private def sqDist(v: Column, c: Column): Column =
+    aggregate(zip_with(v, c, (x, m) => { val d = x.cast("double") - m; absorb(d * d) }),
+      lit(0).cast(distAcc), (acc, t) => (acc + coalesce(t, decZero)).cast(distAcc))
+
+  /**
+   * The one k-means assignment kernel, with ZERO shuffle: the k
+   * centroids ride into the plan as one literal array and each row
+   * takes the argmin of ([[sqDist]], cluster id) — equal distances go
+   * to the lower id — in two row-local projections: no join, no row
+   * explosion, no window. Adds `cluster_id`; `vec` is an ARRAY<FLOAT>
+   * or ARRAY<DOUBLE>.
+   *
+   * Only candidates near the minimum are summed exactly. A centroid's
+   * double distance a — the same terms summed in double by the native
+   * [[graft.plans.SquaredL2]] — is within 1e-6·a + 1e-9 of its exact
+   * distance for fewer than 1e9 terms: the FLOAT image moves a term by
+   * 2^-24 of itself, the DECIMAL scale by 1e-18, and recursive double
+   * summation by n·2^-53 of the sum. A centroid whose a exceeds the
+   * smallest, amin, by more than amin·1e-5 + 1e-8 therefore has a
+   * strictly larger exact distance than the nearest's: it can neither
+   * win nor tie. The exact argmin runs over the centroids inside that
+   * margin, and a row whose nearest is alone there — nearly every row —
+   * is assigned without summing a single decimal.
+   */
+  def assignToCentroids(df: DataFrame, vec: String, centroids: Centroids): DataFrame = {
+    GraftFunctions.register(df.sparkSession)
+    val v = col(vec)
+    // (a, cid) ascending, in a projection of its own: the next one reads
+    // it several times, so the optimizer keeps the two apart and the
+    // sort runs once per row
+    val byA = df.withColumn("__gcand", sort_array(transform(typedLit(centroids), c =>
+      struct(call_function(GraftFunctions.sqL2Name, v, c.getField("_2")).as("a"),
+        c.getField("_1").as("cid")))))
+    val Seq(nearest, second) = Seq(1, 2).map(i => try_element_at(col("__gcand"), lit(i)))
+    val margin = nearest.getField("a") * 1.00001 + 1e-8
+    val byCid = typedLit(centroids.toMap)
+    val exactMin = array_min(transform(filter(col("__gcand"), s => s.getField("a") <= margin),
+      s => struct(sqDist(v, element_at(byCid, s.getField("cid"))).as("d"), s.getField("cid").as("cid"))))
+    // non-nullable (-1 only with no centroid at all): an isnotnull a
+    // join on cluster_id infers then folds away instead of being pushed
+    // below the projection, where it would run the kernel a second time
+    byA.withColumn("cluster_id", coalesce(
+      when(coalesce(second.getField("a") > margin, lit(true)), nearest.getField("cid"))
+        .otherwise(exactMin.getField("cid")),
+      lit(-1))).drop("__gcand")
+  }
+
+  /** Exact per-cluster means of the raw components ([[meanEmbedding]],
+   *  the q72 recipe), collected as the next literal centroids — k·d
+   *  values, the agg-to-literal class. A cluster with no member is
+   *  absent. */
+  private def clusterMeans(assigned: DataFrame, cluster: String, vec: String): Centroids =
+    meanEmbedding(assigned, cluster, vec).collect().toSeq
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (cid, rows) => cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)) }
+
+  /**
+   * The one Lloyd loop, shared by exact k-means ([[kmeansLloyd]]) and
+   * the IVF quantizer ([[ivfCentroids]]). Seeds are the vectors of the
+   * k smallest `key`s (cluster ids 0..k−1 in that order; no RNG); each
+   * of `updates` rounds assigns with [[assignToCentroids]] and collects
+   * the exact per-cluster means as the next literal set. A cluster that
+   * attracts no member vanishes (its centroid is undefined) — the
+   * standard Lloyd degeneracy, surfaced rather than papered over.
+   *
+   * Every iterate is an exact decimal mean of raw floats compared by
+   * exact decimal distances, so it is engine-identical by induction and
+   * run-to-run stable. Literal centroids also truncate the lineage: a
+   * round's plan reads the input and k·d constants, never an earlier
+   * round, so nothing is checkpointed or cached.
+   */
+  private def lloydCentroids(
+      df: DataFrame, key: Column, vec: String, k: Int, updates: Int): Centroids = {
+    // a seed with no component has no centroid: its cluster is absent
+    // from the start, as the q228 oracle's position join leaves it
+    val seeds = df.orderBy(key).limit(k).select(col(vec).cast("array<double>")).collect().toSeq
+      .map(_.getSeq[Double](0)).zipWithIndex
+      .collect { case (c, cid) if c != null && c.nonEmpty => cid -> c }
+    (1 to updates).foldLeft(seeds) { (cents, _) =>
+      clusterMeans(assignToCentroids(df, vec, cents), "cluster_id", vec)
     }
   }
 
   /**
-   * Nearest-centroid assignment with ZERO shuffle: the k centroids ride
-   * into the plan as a literal array and each row computes its argmax
-   * cosine inside one codegen'd `aggregate` — no join, no row explosion.
+   * The IVF coarse quantizer: [[lloydCentroids]] over a bounded
+   * deterministic sample — the `trainSampleSize` first vectors of the
+   * hash order (the md5-order trick of Relational.stratifiedSample), so
+   * each round scans O(sample) rows, never the corpus; `0` trains on
+   * the whole corpus. The loop key is (xxhash64(id), id), so the seeds
+   * are the first `nlist` vectors of that same order: low ids are often
+   * insertion-correlated (same-batch near-dups would seed near-identical
+   * centroids), the hash order is an unbiased deterministic spread. The
+   * sample is cached for the loop and released on return.
    */
-  def assignToCentroids(
-      spark: SparkSession, df: DataFrame, vec: String,
-      centroids: Seq[(Int, Seq[Float])]): DataFrame = {
-    GraftFunctions.register(spark)
-    val centLit = array(centroids.map { case (cid, v) =>
-      struct(lit(cid).as("cid"),
-        array(v.map(x => lit(x)): _*).as("centroid"))
-    }: _*)
-    val best = aggregate(
-      centLit,
-      struct(lit(-2.0d).as("sim"), lit(-1).as("cid")),
-      (acc, c) => {
-        val sim = call_function(GraftFunctions.cosineName, col(vec), c.getField("centroid"))
-        when(sim > acc.getField("sim"),
-          struct(sim.as("sim"), c.getField("cid").as("cid"))).otherwise(acc)
-      })
-    df.withColumn("cluster_id", best.getField("cid"))
-  }
+  def ivfCentroids(
+      corpus: DataFrame, id: String, vec: String, nlist: Int = 16,
+      iterations: Int = 3, trainSampleSize: Int = 4096): Centroids =
+    graft.Caches.scoped { scope =>
+      val keyed = corpus.select(struct(xxhash64(col(id)), col(id)).as("__gkey"), col(vec))
+      val train =
+        if (trainSampleSize > 0) scope.persist(keyed.orderBy(col("__gkey")).limit(trainSampleSize))
+        else keyed
+      lloydCentroids(train, col("__gkey"), vec, nlist, iterations)
+    }
 
   /**
    * IVF approximate top-k: the corpus is coarsely quantized once into
@@ -599,8 +639,9 @@ object Similarity {
    * a bucketed table); each query probes only its `nprobe` nearest cells,
    * so probe cost is ~|corpus|·nprobe/nlist instead of |corpus|. The
    * centroid table is tiny and broadcast everywhere — the corpus never
-   * shuffles for a search. The quantizer trains on a bounded
-   * deterministic sample (default 4096 vectors), never the full corpus.
+   * shuffles for a search. The quantizer ([[ivfCentroids]]) trains on a
+   * bounded deterministic sample (default 4096 vectors), never the full
+   * corpus.
    */
   def ivfTopK(
       spark: SparkSession,
@@ -608,8 +649,8 @@ object Similarity {
       id: String, vec: String, k: Int,
       nlist: Int = 16, nprobe: Int = 4, iterations: Int = 3,
       trainSampleSize: Int = 4096): DataFrame = {
-    val centroids = kmeansCentroids(spark, corpus, id, vec, nlist, iterations, trainSampleSize)
-    val cells = assignToCentroids(spark, corpus, vec, centroids)
+    val centroids = ivfCentroids(corpus, id, vec, nlist, iterations, trainSampleSize)
+    val cells = assignToCentroids(corpus, vec, centroids)
     probeCells(spark, cells, centroidsToDf(spark, centroids), queries, id, vec, k, nprobe)
   }
 
@@ -710,7 +751,7 @@ object Similarity {
    *
    * `trainSampleSize > 0` is the AT-SCALE DEFAULT: loadings are
    * trained on a bounded deterministic sample (hash-ordered top-n,
-   * the [[kmeansCentroids]]/[[trainIvf]] quantizer precedent), so the
+   * the [[ivfCentroids]] quantizer precedent), so the
    * n·d² covariance build reads O(sample·d²) term rows instead of
    * scanning 100 TB. A dominant direction is statistically stable far
    * below corpus size WHEN the spectrum has one: PcaSampleSpec pins
@@ -881,75 +922,27 @@ object Similarity {
    * deterministic seeding — the clustering primitive behind corpus
    * mixture analysis and IVF-style partitioning, expressed so every
    * assignment replays bit-identically in an external engine (the
-   * q209/q224 unrolled-SQL contract). Seeds are the vectors of the k
-   * smallest ids (cluster ids 0..k−1 in that order) — no RNG, stable
-   * under growth. [[trainIvf]]'s sample-trained quantizer remains the
-   * 100 TB hot path; this is the exact, oracle-checkable twin.
+   * q209/q224 unrolled-SQL contract). [[lloydCentroids]] seeded from
+   * the k smallest ids runs `iters − 1` centroid updates, and the
+   * returned `(id, cluster)` frame is the `iters`-th assignment against
+   * the final literal centroids. The IVF quantizer ([[ivfCentroids]])
+   * trains through the same loop on its hash-ordered sample.
    *
-   * Determinism: squared-distance terms (v−c)² absorb to FLOAT images
-   * and sum via DECIMAL(28,18) (q197 contract), and the argmin
-   * compares those EXACT DECIMALS with a cluster-id tiebreak (the
-   * q210 decimal-at-the-edge rule — comparing float-absorbed doubles
-   * would still be safe, but decimals make the tie semantics
-   * self-evident); new centroids are exact-decimal means of the RAW
-   * float components (q72 recipe), so every iterate is engine-
-   * identical by induction. A cluster that attracts no members
-   * vanishes (its centroid is undefined) — the standard Lloyd
-   * degeneracy, surfaced rather than papered over.
-   *
-   * Scale: the exploded vector frame is PERSISTED (it feeds every
-   * assignment and every centroid rebuild); each assignment is one
-   * (pos)-keyed join against a broadcast k·d centroid frame →
-   * (vec, cluster) aggregation → one rank window per vector over k
-   * candidate rows; centroid rebuilds aggregate the members frame.
-   * Nothing driver-side except the bounded k seed ids.
+   * Scale: the input is spread across the cores ([[Par.spread]]) under
+   * every round: a narrow scan (one partition at bench scale) would run
+   * all n·k·d distance terms and n·d decimal casts in one task. The IVF
+   * quantizer's sample is bounded and is not spread. Driver-side: k
+   * seed vectors and k·d means per round.
    */
   def kmeansLloyd(
       df: DataFrame, id: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
     require(k >= 2 && iters >= 1, "kmeansLloyd needs k >= 2 and iters >= 1")
-    // spread before the explode + persist: the cached frame freezes the
-    // scan's layout (1 partition at bench scale), and EVERY assignment
-    // join and centroid rebuild would inherit that single task
-    // ([[graft.operators.Par.spread]])
-    val x = graft.operators.Par.spread(
-      df.select(col(id).as("__gvid"), col(vecCol).as("__gvv")),
-      col("__gvid"), 2000)
-      .select(col("__gvid"), posexplode(col("__gvv")).as(Seq("pos", "__gvf")))
-      .transform(graft.Caches.persist)
-    // seeds: vectors of the k smallest ids, cluster ids by that order
-    val seedIds = df.select(col(id).as("__gsid")).orderBy(col("__gsid")).limit(k)
-      .withColumn("__gcid",
-        row_number().over(Window.orderBy(col("__gsid"))) - 1)
-    var cents = x.join(broadcast(seedIds), col("__gvid") === col("__gsid"))
-      .select(col("__gcid"), col("pos"), col("__gvf").cast("double").as("__gc"))
-    def assign(c: DataFrame): DataFrame = {
-      val dv = col("__gvf").cast("double") - col("__gc")
-      val dists = x.join(broadcast(c), "pos")
-        .groupBy(col("__gvid"), col("__gcid"))
-        .agg(sum(absorb(dv * dv)).as("__gdist"))
-      dists.withColumn("__grk", row_number().over(
-        Window.partitionBy(col("__gvid"))
-          .orderBy(col("__gdist").asc, col("__gcid").asc)))
-        .filter(col("__grk") === 1)
-        .select(col("__gvid"), col("__gcid"))
-    }
-    // rolling checkpoints: centroid generation t supersedes t-1; the
-    // roller releases the dead generation (CacheHygieneSpec) — the last
-    // one stays live, scanned by the returned assignment plan
-    graft.Caches.scoped { scope =>
-      val roller = scope.roller()
-      (2 to iters).foreach { _ =>
-        // localCheckpoint truncates the iteration lineage (q59/q62
-        // rule) — the k·d centroid frame is tiny, and an unpersisted
-        // chain replays every earlier assignment per consumer
-        cents = roller.roll(assign(cents).join(x, "__gvid")
-          .groupBy(col("__gcid"), col("pos"))
-          .agg(decMean(col("__gvf")).as("__gc"))).df
-        roller.advance()
-      }
-    }
-    assign(cents).select(col("__gvid").as(id), col("__gcid").as("cluster"))
+    val x = Par.spread(df.select(col(id), col(vecCol)), col(id), 2000)
+    // a vector with no component has no distance, so no cluster
+    assignToCentroids(x.filter(size(col(vecCol)) > 0), vecCol,
+      lloydCentroids(x, col(id), vecCol, k, iters - 1))
+      .select(col(id), col("cluster_id").as("cluster"))
   }
 
   /**
@@ -961,13 +954,12 @@ object Similarity {
    *
    * Determinism: assignments are [[kmeansLloyd]]'s (bit-identical by
    * induction); final centroids are q72-recipe exact-decimal means
-   * over those assignments; per-member distances absorb to FLOAT
-   * images and sum via DECIMAL(28,18) (q197), and the per-cluster SSE
-   * is a sum of those exact decimals — order-free at every level.
+   * over those assignments; each member's distance is the kernel's
+   * exact decimal [[sqDist]], and the per-cluster SSE is a sum of those
+   * exact decimals — order-free at every level.
    *
-   * Scale: one extra pass over the exploded vectors beyond the Lloyd
-   * iterations (members → final centroids → distances), all keyed
-   * joins with the k·d centroid frame broadcast.
+   * Scale: one extra pass beyond the Lloyd rounds collects the final
+   * k·d centroid literals; the rollup is one cluster-keyed aggregation.
    */
   def kmeansQuality(
       df: DataFrame, id: String, vecCol: String,
@@ -982,18 +974,11 @@ object Similarity {
   def kmeansQuality(
       df: DataFrame, id: String, vecCol: String,
       assigned: DataFrame): DataFrame = {
-    val x = df.select(col(id),
-      posexplode(col(vecCol)).as(Seq("pos", "__gvf")))
-    val members = assigned.join(x, id)
-    val cents = members.groupBy(col("cluster"), col("pos"))
-      .agg(decMean(col("__gvf")).as("__gc"))
-    val dv = col("__gvf").cast("double") - col("__gc")
-    val perVec = members.join(broadcast(cents), Seq("cluster", "pos"))
-      .groupBy(col(id), col("cluster"))
-      .agg(sum(absorb(dv * dv)).as("__gd"))
-    perVec.groupBy(col("cluster"))
+    val members = assigned.join(df.select(col(id), col(vecCol)), id)
+    val cents = typedLit(clusterMeans(members, "cluster", vecCol).toMap)
+    members.groupBy(col("cluster"))
       .agg(count(lit(1)).as("n"),
-        toD(sum(col("__gd"))).as("sse"))
+        toD(sum(sqDist(col(vecCol), element_at(cents, col("cluster"))))).as("sse"))
   }
 
   /**
@@ -1062,7 +1047,7 @@ object Similarity {
       .withColumn("correct", col("actual") === col("predicted"))
   }
 
-  private def centroidsToDf(spark: SparkSession, centroids: Seq[(Int, Seq[Float])]): DataFrame = {
+  private def centroidsToDf(spark: SparkSession, centroids: Centroids): DataFrame = {
     import spark.implicits._
     centroids.toDF("cluster_id", "centroid")
       .withColumn("centroid", col("centroid").cast("array<float>"))
@@ -1102,10 +1087,10 @@ object Similarity {
       spark: SparkSession, corpus: DataFrame, id: String, vec: String,
       indexDir: String, nlist: Int = 16, iterations: Int = 3,
       trainSampleSize: Int = 4096): Unit = {
-    val centroids = kmeansCentroids(spark, corpus, id, vec, nlist, iterations, trainSampleSize)
+    val centroids = ivfCentroids(corpus, id, vec, nlist, iterations, trainSampleSize)
     centroidsToDf(spark, centroids)
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    assignToCentroids(spark, corpus, vec, centroids)
+    assignToCentroids(corpus, vec, centroids)
       .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$indexDir/cells")
   }
 

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -89,9 +89,55 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/**
+ * Native Catalyst expression: squared Euclidean distance of a FLOAT (or
+ * DOUBLE) vector to a DOUBLE vector, Σ ((double) x_i − c_i)² summed left
+ * to right in double. A position past either array's end, or NULL on
+ * either side, adds nothing. The k-means kernel
+ * ([[graft.operators.Similarity.assignToCentroids]]) rules out far
+ * centroids with it; it runs inside that kernel's higher-order
+ * functions, which Spark evaluates without codegen, so it has none.
+ */
+case class SquaredL2(left: Expression, right: Expression)
+    extends BinaryExpression with CodegenFallback {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(FloatType | DoubleType, _), ArrayType(DoubleType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects ARRAY<FLOAT|DOUBLE> and ARRAY<DOUBLE>, got ${l.sql} and ${r.sql}")
+    }
+
+  override def dataType: DataType = DoubleType
+
+  override def prettyName: String = "graft_sq_l2"
+
+  private lazy val floats = left.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val c = b.asInstanceOf[ArrayData]
+    val n = math.min(x.numElements(), c.numElements())
+    var s = 0.0; var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i) && !c.isNullAt(i)) {
+        val d = (if (floats) x.getFloat(i).toDouble else x.getDouble(i)) - c.getDouble(i)
+        s += d * d
+      }
+      i += 1
+    }
+    s
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Session registration for graft's native expressions. */
 object GraftFunctions {
   val cosineName = "graft_cosine"
+  val sqL2Name = "graft_sq_l2"
   val hyperplanesName = "graft_hyperplanes"
   val minhashName = "graft_minhash"
   val charGramJaccardName = "graft_chargram_jaccard"
@@ -109,6 +155,11 @@ object GraftFunctions {
   private[plans] def cosineBuilder(children: Seq[Expression]): Expression = {
     require(children.size == 2, s"$cosineName expects 2 arguments")
     CosineSimilarity(children.head, children(1))
+  }
+
+  private[plans] def sqL2Builder(children: Seq[Expression]): Expression = {
+    require(children.size == 2, s"$sqL2Name expects (vec, centroid)")
+    SquaredL2(children.head, children(1))
   }
 
   private def intLit(e: Expression, what: String): Int = {
@@ -201,6 +252,9 @@ object GraftFunctions {
     (FunctionIdentifier(cosineName),
       new ExpressionInfo(classOf[CosineSimilarity].getName, cosineName),
       cosineBuilder _),
+    (FunctionIdentifier(sqL2Name),
+      new ExpressionInfo(classOf[SquaredL2].getName, sqL2Name),
+      sqL2Builder _),
     (FunctionIdentifier(hyperplanesName),
       new ExpressionInfo(classOf[HyperplaneSignatures].getName, hyperplanesName),
       hyperplanesBuilder _),

@@ -17,7 +17,7 @@ package graft
  *    frame is NOT referenced by the returned plan. The operator MUST
  *    make it in a [[Caches.scoped]] scope, which releases it before
  *    return; leaving it live is a leak that accumulates across a
- *    244-query Verify/Bench run.
+ *    246-query Verify/Bench run.
  *
  * The audit materializes every `SparkEntry.queries` entry at sf0.001 and
  * asserts the session's live persisted-RDD count afterwards is EXACTLY
@@ -90,12 +90,11 @@ class CacheHygieneSpec extends SparkSpec {
       "q209_pagerank" -> 2, // node checkpoint + final sums
       "q210_label_prop" -> 2, // persisted edges + seeds
       // trained-model frames: the final checkpointed generation the
-      // returned plan scans (power-iteration u+norm, last centroids +
-      // feature cache, final GD weights)
+      // returned plan scans (power-iteration u+norm, final GD
+      // weights); k-means (q228/q229) holds its centroids as literals
+      // and leaves nothing
       "q224_pca_power" -> 2,
       "q226_pca_project" -> 2,
-      "q228_kmeans_lloyd" -> 2,
-      "q229_kmeans_quality" -> 2,
       "q237_logistic_gd" -> 1,
       "q238_logistic_eval" -> 1,
     )

@@ -64,6 +64,38 @@ class SimilaritySpec extends SparkSpec {
     assert(err.getMessage.contains("ARRAY<FLOAT>"))
   }
 
+  test("graft_sq_l2 is the in-order double sum of (x − c)²; ragged and NULL positions add nothing") {
+    GraftFunctions.register(spark)
+    import org.apache.spark.sql.Column
+    def sqL2(x: Column, c: Column) = call_function(GraftFunctions.sqL2Name, x, c)
+    // the same sum spelled with higher-order functions: zip_with pads
+    // the shorter side with NULLs, which coalesce to 0.0
+    def declarative(x: Column, c: Column) = aggregate(
+      zip_with(x, c, (a, m) => { val d = a.cast("double") - m; d * d }),
+      lit(0.0), (acc, t) => acc + coalesce(t, lit(0.0)))
+    val rows = Seq(
+      (Seq[java.lang.Float](1f, 2f, 3f), Seq(0.5, 2.0, -1.25)),
+      (Seq[java.lang.Float](0.1f, 0.2f, 0.3f, 0.4f), Seq(0.3, 0.1)),
+      (Seq[java.lang.Float](7f), Seq(1e-12, 3.0, 4.0)),
+      (Seq[java.lang.Float](1f, null, 2f), Seq(0.0, 5.0, 0.0)),
+    ) ++ (1 to 20).map { i =>
+      (Seq.tabulate(64)(j => java.lang.Float.valueOf(math.sin(i * 31.0 + j).toFloat)),
+        Seq.tabulate(64)(j => math.cos(i * 17.0 + j) / 3))
+    }
+    val out = rows.toDF("x", "c")
+      .select(sqL2(col("x"), col("c")), declarative(col("x"), col("c")),
+        sqL2(col("x").cast("array<double>"), col("c")))
+      .collect()
+    out.foreach(r => assert(r.getDouble(0) == r.getDouble(1) && r.getDouble(2) == r.getDouble(1)))
+    assert(out(0).getDouble(0) == 0.25 + 0 + 4.25 * 4.25)
+    assert(out(2).getDouble(0) == (7.0 - 1e-12) * (7.0 - 1e-12))
+    assert(out(3).getDouble(0) == 5.0)
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq((Seq(1), Seq(1.0))).toDF("x", "c").select(sqL2(col("x"), col("c"))).collect()
+    }
+    assert(err.getMessage.contains("ARRAY<FLOAT|DOUBLE>"))
+  }
+
   test("cosine properties on scalacheck vectors: symmetry, bounds, self-similarity") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
@@ -157,9 +189,10 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF: assignment is shuffle-free, probes beat their cell, recall is sane") {
     val e = sources.Tables(spark, sf0001).embeddings
-    val centroids = Similarity.kmeansCentroids(spark, e, "vec_id", "embedding", k = 8)
+    val centroids = Similarity.ivfCentroids(e, "vec_id", "embedding", nlist = 8,
+      trainSampleSize = 0)
     assert(centroids.map(_._1).toSet.size == 8)
-    val assigned = Similarity.assignToCentroids(spark, e, "embedding", centroids)
+    val assigned = Similarity.assignToCentroids(e, "embedding", centroids)
     // zero-shuffle assignment: no exchange in the plan
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val shuffles = assigned.queryExecution.executedPlan.collect { case s: ShuffleExchangeLike => s }
@@ -178,6 +211,45 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = partial.intersect(bfSet).size.toDouble / bfSet.size
     assert(recall >= 0.1, f"recall@5 with nprobe=2/8 collapsed: $recall%.2f")
+  }
+
+  test("assignToCentroids equals the exact argmin over every centroid, near-ties included") {
+    // exact reference: every (vector, centroid) distance summed as
+    // decimals, then the least (distance, cid)
+    def exactArgmin(df: org.apache.spark.sql.DataFrame, cents: Similarity.Centroids) = {
+      val c = cents.flatMap { case (cid, m) => m.zipWithIndex.map { case (x, p) => (cid, p, x) } }
+        .toDF("cid", "pos", "m")
+      val d = col("x").cast("double") - col("m")
+      df.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
+        .join(c, "pos")
+        .groupBy("vec_id", "cid").agg(sum(functions.Exact.absorb(d * d)).as("d"))
+        .groupBy("vec_id").agg(min(struct(col("d"), col("cid"))).getField("cid").as("cid"))
+        .as[(Long, Int)].collect().toMap
+    }
+    def kernel(df: org.apache.spark.sql.DataFrame, cents: Similarity.Centroids) =
+      Similarity.assignToCentroids(df, "embedding", cents)
+        .select("vec_id", "cluster_id").as[(Long, Int)].collect().toMap
+    // (1,1) is exactly 2 from (0,0); in double it is 2 − 2e-12 from
+    // (2 − 1e-12, 2), but both FLOAT-absorbed terms are 1: an exact tie
+    // that the lower cid wins although the double distance favours cid 1
+    val tie = Seq((1L, Seq(1.0f, 1.0f)), (2L, Seq(3.0f, 1.0f))).toDF("vec_id", "embedding")
+    val tieCents = Seq(0 -> Seq(0.0, 0.0), 1 -> Seq(2.0 - 1e-12, 2.0), 2 -> Seq(4.0, 0.0))
+    assert(kernel(tie, tieCents) == Map(1L -> 0, 2L -> 1))
+    assert(exactArgmin(tie, tieCents) == Map(1L -> 0, 2L -> 1))
+    // corpus vectors against twin centroids — each seed vector, and the
+    // same vector nudged by 1e-12 under the lower cid
+    val e = sources.Tables(spark, sf0001).embeddings
+    val seeds = e.orderBy("vec_id").limit(6).select(col("embedding").cast("array<double>"))
+      .as[Seq[Double]].collect().toSeq
+    val twins = seeds.zipWithIndex.flatMap { case (m, j) =>
+      Seq(2 * j -> ((m.head + 1e-12) +: m.tail), (2 * j + 1) -> m)
+    }
+    val got = kernel(e, twins)
+    assert(got.nonEmpty && got == exactArgmin(e, twins))
+    // the seeds alone: a row's nearest is nearly always alone inside the
+    // margin, so the kernel assigns it on double distances
+    val plain = seeds.zipWithIndex.map(_.swap)
+    assert(kernel(e, plain) == exactArgmin(e, plain))
   }
 
   test("codegen HyperplaneSignatures is bit-identical to the declarative form") {
@@ -239,21 +311,13 @@ class SimilaritySpec extends SparkSpec {
   test("IVF: sample-trained quantizer is bounded yet still exact under full probing") {
     val e = sources.Tables(spark, sf0001).embeddings
     // sample >= corpus: identical to full training (same init, same data)
-    val full = Similarity.kmeansCentroids(spark, e, "vec_id", "embedding", k = 8)
-    val cover = Similarity.kmeansCentroids(spark, e, "vec_id", "embedding", k = 8,
+    val full = Similarity.ivfCentroids(e, "vec_id", "embedding", nlist = 8,
+      trainSampleSize = 0)
+    val cover = Similarity.ivfCentroids(e, "vec_id", "embedding", nlist = 8,
       trainSampleSize = 1000000)
-    // same init, same data -- but the mean's double partials merge in
-    // shuffle order (see kmeansCentroids doc), so allow the last ulp
-    val fullByCid = full.toMap
-    assert(cover.map(_._1).sorted == full.map(_._1).sorted)
-    cover.foreach { case (cid, c) =>
-      val f = fullByCid(cid)
-      assert(c.length == f.length)
-      c.zip(f).foreach { case (a, b) =>
-        assert(math.abs(a - b) <= 1e-5f,
-          s"centroid $cid: covering sample must reproduce full training (got $a vs $b)")
-      }
-    }
+    // same seeds, same data, exact-decimal means: the very same doubles
+    assert(full.nonEmpty)
+    assert(cover == full, "covering sample must reproduce full training exactly")
     // tiny sample: quantizer quality drops but full-probe search stays exact
     val queries = e.filter(col("vec_id") < 8)
     val ivf = Similarity.ivfTopK(spark, e, queries, "vec_id", "embedding",
@@ -464,6 +528,23 @@ class SimilaritySpec extends SparkSpec {
       Similarity.kmeansLloyd(df, "vec_id", "embedding", k = 1, iters = 2)
     }
     assert(ex.getMessage.contains("k >= 2"))
+    // duplicate seed vectors: ids 1 and 2 seed clusters 0 and 1 at the
+    // same point, so every distance to them ties — the lower id wins,
+    // and cluster 1, left without members, vanishes
+    val dup = Seq(
+      (1L, Seq(0.0f, 0.0f)), (2L, Seq(0.0f, 0.0f)), (3L, Seq(10.0f, 10.0f)),
+    ).toDF("vec_id", "embedding")
+    val dupOut = Similarity.kmeansLloyd(dup, "vec_id", "embedding", k = 3, iters = 2)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(dupOut == Map(1L -> 0, 2L -> 0, 3L -> 2), s"tie must go to the lower cid: $dupOut")
+    // NULL and empty vectors have no position: as seeds their clusters
+    // (0 and 1) are absent, and they are assigned to no cluster
+    val hollow = Seq[(Long, Seq[Float])](
+      (1L, null), (2L, Seq.empty), (3L, Seq(0.0f, 0.0f)), (4L, Seq(10.0f, 10.0f)), (5L, Seq(1.0f, 0.0f)),
+    ).toDF("vec_id", "embedding")
+    val hollowOut = Similarity.kmeansLloyd(hollow, "vec_id", "embedding", k = 4, iters = 2)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(hollowOut == Map(3L -> 2, 4L -> 3, 5L -> 2), s"hollow vectors: $hollowOut")
   }
 
   test("nearestCentroid attributes separable classes and reports correctness") {
